@@ -14,8 +14,9 @@ Two execution strategies, mirroring the reference's accuracy modes
   (reference: sequential loop, autoscan/autoscan.py:257-271; context
   consumption img_to_md_processor.py:56-71). Because turn k's kernel consumes
   turn k-1's OUTPUT, the chain is irreducible per conversation — parallelism
-  comes from conversations, so this is ``groupBy(conv_id).applyInPandas`` (one
-  shuffle) with the group sorted by ``turn_idx``.
+  comes from conversations, so this is a ``groupBy(conv_id)`` collecting each
+  conversation's turns (``array_sort(collect_list(...))``, one shuffle) and a
+  vectorized ``pandas_udf`` that walks them in ``turn_idx`` order.
 
 Error semantics (reference X3, autoscan/autoscan.py:250-255,283-289):
 - low mode: failures become ``status='error:...'`` rows; ``drop_failed``
@@ -84,27 +85,6 @@ _ARROW_SCHEMA = pa.schema(
         ("extractor_version", pa.string()),
     ]
 )
-
-
-def _extract_rows(conv_ids, turn_idxs, roles, texts, prev_outputs=None):
-    """Shared row loop. ``prev_outputs`` is only used by the serial path."""
-    out = {name: [] for name in _ARROW_SCHEMA.names}
-    for i in range(len(texts)):
-        text = texts[i]
-        prev = prev_outputs[i] if prev_outputs is not None else None
-        extracted, spans, status, kind = extract_turn(text, roles[i], prev)
-        out["conv_id"].append(conv_ids[i])
-        out["turn_idx"].append(turn_idxs[i])
-        out["extracted_text"].append(extracted)
-        out["spans"].append(
-            [{"start": s, "end": e, "kind": k} for s, e, k in spans]
-        )
-        out["status"].append(status)
-        out["kind"].append(kind)
-        out["in_chars"].append(len(text) if text is not None else 0)
-        out["out_chars"].append(len(extracted))
-        out["extractor_version"].append(EXTRACTOR_VERSION)
-    return out
 
 
 def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -20,7 +20,7 @@ partition spec ``bucket(n, conv_id)``):
 A bucket is COMMITTED iff a lineage row exists for it. Writes use dynamic
 partition overwrite, so re-processing a bucket that was half-written when the
 job died simply replaces it — idempotent resume, no duplicates (verified by
-tests/test_checkpoint.py kill/resume test).
+the kill/resume tests in tests/test_checkpoint_skew.py).
 
 ``waves`` controls how many buckets commit per Spark action: waves=1 is one
 big job (fastest), larger waves give finer resume granularity — the
@@ -48,9 +48,8 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.operators.extract import drop_failed, extract_turns
-from autoscan_spark.operators.fold import fold_documents, resolve_fold_strategy
-from autoscan_spark.operators.polish import polish_documents
+from autoscan_spark.operators.fold import resolve_fold_strategy
+from autoscan_spark.plans.pipeline import extract_pipeline
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
 # parquet, so appending a new schema next to old files would leave a
@@ -188,47 +187,39 @@ class CheckpointedExtraction:
         spark: SparkSession,
         transcripts: DataFrame,
         buckets: list[int],
-        two_phase: bool | None = None,
-        wave_id: int = 0,
+        two_phase: bool,
+        wave_id: int,
     ) -> None:
         t0 = time.perf_counter()
         src = with_bucket(transcripts, self.n_buckets).filter(
             F.col("bucket").isin([int(b) for b in buckets])
         )
-        # cache the wave's extraction output: it feeds three consumers
-        # (extracted sink, fold, lineage counts) — one kernel pass, not three
-        extracted = with_bucket(
-            extract_turns(src, mode=self.mode), self.n_buckets
-        ).cache()
+        extracted, docs = extract_pipeline(
+            src, mode=self.mode, two_phase_fold=two_phase, polish=self.polish
+        )
+        # cache the bucket-free extraction output: the docs plan contains
+        # this exact subtree, so the extracted sink, the fold and the lineage
+        # counts share one kernel pass. The bucket is a pure function of
+        # conv_id, so each output recomputes it on write.
+        extracted.cache()
         try:
-            (
-                extracted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.extracted_path)
-            )
-            if two_phase is None:
-                two_phase = resolve_fold_strategy(transcripts, self.two_phase_fold)
-            ok = drop_failed(extracted)
-            docs = fold_documents(ok, two_phase=two_phase).join(
-                ok.select("conv_id", "bucket").distinct(), on="conv_id"
-            )
-            if self.polish:
-                docs = polish_documents(docs)
-            (
-                docs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(self.docs_path)
-            )
-
-            rows_in = {
-                r["bucket"]: r["count"]
-                for r in src.groupBy("bucket").count().collect()
-            }
-            rows_out = {
-                r["bucket"]: r["count"]
-                for r in ok.groupBy("bucket").count().collect()
+            for df, path in ((extracted, self.extracted_path), (docs, self.docs_path)):
+                (
+                    with_bucket(df, self.n_buckets)
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("bucket")
+                    .parquet(path)
+                )
+            counts = {
+                r["bucket"]: (r["rows_in"], r["rows_out"])
+                for r in with_bucket(extracted, self.n_buckets)
+                .groupBy("bucket")
+                .agg(
+                    F.count("*").alias("rows_in"),
+                    F.count_if(F.col("status") == "ok").alias("rows_out"),
+                )
+                .collect()
             }
         finally:
             extracted.unpersist()
@@ -238,8 +229,7 @@ class CheckpointedExtraction:
         lineage_rows = [
             (
                 int(b),
-                int(rows_in.get(b, 0)),
-                int(rows_out.get(b, 0)),
+                *counts.get(b, (0, 0)),
                 EXTRACTOR_VERSION,
                 int(wave_id),
                 float(wall),

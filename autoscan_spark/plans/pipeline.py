@@ -2,15 +2,18 @@
 autoscan/autoscan.py:19-213, as a DataFrame DAG).
 
     transcripts scan (filter pushdown on turn range)
-      → extract kernel   (low: mapInArrow, shuffle-free | high: applyInPandas)
+      → extract kernel   (low: mapInArrow, shuffle-free | high: collect_list
+                          per conversation + a serial pandas_udf)
       → error handling   (low: drop failed | high: already failed fast)
       → ordered fold     (one shuffle; two-phase for skewed conversations)
       → optional polish  (second per-document kernel pass with fallback)
 
-Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy);
-high mode has exactly ONE shuffle (the groupBy feeding the serial kernel —
-the fold reuses the same hash partitioning on conv_id, so Catalyst does not
-re-shuffle between extract and fold).
+Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy).
+High mode has TWO (two ShuffleQueryStages in the executed plan): the groupBy
+feeding the serial kernel, then the fold's groupBy. The second is cheap in
+rows — the fold's partial collect_list completes inside the already
+conversation-grouped partitions, so it moves one row per conversation, not
+raw turns (pinned by tests/test_plans.py::test_high_pipeline_shuffle_budget).
 """
 
 from __future__ import annotations

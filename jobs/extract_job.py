@@ -11,8 +11,7 @@ Usage (cluster):
         --input cat.db.transcripts --output s3://bucket/extracted ...
 
 The job is resumable: re-running with the same --output continues from the
-last committed bucket (plans.checkpoint). ``--no-checkpoint`` runs the plain
-one-shot pipeline instead.
+last committed bucket (plans.checkpoint).
 """
 
 from __future__ import annotations
@@ -43,7 +42,6 @@ def parse_args(argv=None) -> argparse.Namespace:
                          "(bare flag = on)")
     ap.add_argument("--buckets", type=int, default=64, help="checkpoint commit granularity")
     ap.add_argument("--waves", type=int, default=1, help="commits per run (resume granularity)")
-    ap.add_argument("--no-checkpoint", action="store_true")
     ap.add_argument("--master", default=None, help="override master (default: spark-submit's)")
     return ap.parse_args(argv)
 
@@ -52,7 +50,6 @@ def main(argv=None) -> None:
     args = parse_args(argv)
 
     from autoscan_spark.plans.checkpoint import CheckpointedExtraction
-    from autoscan_spark.plans.pipeline import extract_pipeline
     from autoscan_spark.session import get_spark
 
     spark = get_spark(app_name="autoscan-spark-extract", master=args.master)
@@ -64,31 +61,13 @@ def main(argv=None) -> None:
 
     fold_strategy = {"on": True, "off": False, "auto": "auto"}[args.two_phase_fold]
     t0 = time.perf_counter()
-    if args.no_checkpoint:
-        extracted, docs = extract_pipeline(
-            transcripts,
-            mode=args.mode,
-            two_phase_fold=fold_strategy,
-            polish=args.polish,
-        )
-        # cache: the docs fold re-reads the extraction output — one kernel
-        # pass for both sinks, not two (the checkpointed path does the same)
-        extracted.cache()
-        try:
-            extracted.write.mode("overwrite").parquet(os.path.join(args.output, "extracted"))
-            docs.write.mode("overwrite").parquet(os.path.join(args.output, "doc_markdown"))
-        finally:
-            extracted.unpersist()
-        committed = args.buckets
-    else:
-        ck = CheckpointedExtraction(
-            root=args.output,
-            n_buckets=args.buckets,
-            mode=args.mode,
-            two_phase_fold=fold_strategy,
-            polish=args.polish,
-        )
-        committed = ck.run(transcripts, waves=args.waves)
+    committed = CheckpointedExtraction(
+        root=args.output,
+        n_buckets=args.buckets,
+        mode=args.mode,
+        two_phase_fold=fold_strategy,
+        polish=args.polish,
+    ).run(transcripts, waves=args.waves)
 
     wall = time.perf_counter() - t0
     n_turns = transcripts.count()

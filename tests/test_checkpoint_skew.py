@@ -110,6 +110,87 @@ def test_lineage_wave_ids_distinguish_commit_groups(spark, transcripts, tmp_path
     assert all(r["wave_wall_s"] > 0 for r in rows)
 
 
+def test_lineage_counts_per_bucket_with_empty_buckets(spark, transcripts, tmp_path_factory):
+    """More buckets than conversations: every bucket still commits one
+    lineage row, and rows_in/rows_out equal the per-bucket input turns and
+    ok turns — 0/0 for a bucket no conversation hashes to."""
+    n = 64
+    base = str(tmp_path_factory.mktemp("ckpt_empty"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=n)
+    assert ck.run(transcripts) == n
+    rows = ck.lineage(spark).collect()
+    assert sorted(r["partition_id"] for r in rows) == list(range(n))
+
+    def per_bucket(df):
+        return {r["bucket"]: r["count"] for r in with_bucket(df, n).groupBy("bucket").count().collect()}
+
+    want_in = per_bucket(transcripts)
+    want_out = per_bucket(drop_failed(extract_turns(transcripts, mode="low")))
+    assert len(want_in) < n  # some buckets really are empty
+    assert {r["partition_id"]: r["rows_in"] for r in rows} == {b: want_in.get(b, 0) for b in range(n)}
+    assert {r["partition_id"]: r["rows_out"] for r in rows} == {b: want_out.get(b, 0) for b in range(n)}
+
+
+@pytest.mark.parametrize("mode,two_phase", [("high", False), ("low", True)])
+def test_checkpointed_matches_pipeline(spark, tmp_path_factory, mode, two_phase):
+    """The checkpointed wave writes exactly what extract_pipeline computes
+    with the same mode and fold strategy."""
+    from autoscan_spark.plans.pipeline import extract_pipeline
+
+    # high mode fails fast on kernel errors, like the reference
+    tr = synthesize_transcripts(spark, 24, seed=11).filter(~F.col("conv_id").endswith("-error"))
+    base = str(tmp_path_factory.mktemp("ckpt_modes"))
+    ck = CheckpointedExtraction(
+        root=os.path.join(base, "c"), n_buckets=4, mode=mode, two_phase_fold=two_phase
+    )
+    ck.run(tr, waves=2)
+
+    extracted, docs = extract_pipeline(tr, mode=mode, two_phase_fold=two_phase)
+    cols = list(extracted.columns)
+    assert _read_sorted(spark, ck.extracted_path, cols) == sorted(
+        tuple(r) for r in extracted.select(*cols).collect()
+    )
+    dcols = list(docs.columns)
+    assert _read_sorted(spark, ck.docs_path, dcols) == sorted(
+        tuple(r) for r in docs.select(*dcols).collect()
+    )
+
+
+@pytest.mark.parametrize("waves", [1, 2])
+def test_wave_reads_source_once(spark, transcripts, tmp_path_factory, waves):
+    """Each wave scans the source once: the lineage counts come from the
+    cached extraction output, not a second pass over the transcripts. An
+    identity ``mapInArrow`` counts every source row an action reads."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            acc.add(batch.num_rows)
+            yield batch
+
+    src = transcripts.mapInArrow(count_rows, schema=transcripts.schema)
+    base = str(tmp_path_factory.mktemp("ckpt_reads"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    assert ck.run(src, waves=waves) == 4
+    assert acc.value == waves * transcripts.count()
+
+
+def test_one_wave_job_budget(spark, transcripts, tmp_path_factory):
+    """A fresh one-wave run takes at most 6 Spark jobs: the extracted and
+    doc_markdown writes, one lineage-count aggregation and the lineage
+    append (the shuffled steps add their AQE map-stage jobs)."""
+    base = str(tmp_path_factory.mktemp("ckpt_jobs"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("one_wave_job_budget", "one checkpoint wave")
+    try:
+        ck.run(transcripts, waves=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one_wave_job_budget")
+    assert len(jobs) <= 6, f"{len(jobs)} jobs"
+
+
 def test_bucket_is_conv_stable(spark, transcripts):
     """Every conversation maps to exactly one bucket."""
     b = with_bucket(transcripts, 16)

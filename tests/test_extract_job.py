@@ -90,15 +90,16 @@ def test_extract_job_polish_checkpointed(spark, tmp_path_factory):
 
 
 def test_no_checkpoint_cache_gives_single_kernel_pass(spark, tmp_path_factory):
-    """The no-checkpoint job caches the extraction output, so the docs fold
-    reads InMemoryTableScan instead of re-running the kernel stage."""
+    """The checkpoint wave caches extract_pipeline's extraction output, so
+    the docs fold reads InMemoryTableScan instead of re-running the kernel
+    stage."""
     from autoscan_spark.plans.pipeline import extract_pipeline
 
     transcripts = synthesize_transcripts(spark, 5, seed=7)
     extracted, docs = extract_pipeline(transcripts, mode="low")
     extracted.cache()
     try:
-        extracted.count()  # populate, as the job's first write does
+        extracted.count()  # populate, as the wave's first write does
         plan = docs._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryRelation" in plan
         # the extraction kernel (MapInArrow) must appear only INSIDE the

@@ -14,22 +14,21 @@ Semantics mirror ``_join_markdown_pages`` (reference: autoscan/autoscan.py:353-3
 
 Because the separator depends on post-filter adjacency, filtering and joining
 are NOT separable distributed operations: both happen inside one per-document
-fold. ``join_pages`` is that fold; ``fold_chunk`` / ``combine_chunks`` are an
-algebraically equivalent two-level decomposition used to parallelize the fold
-over very long conversations (the chunk fold only needs each chunk's joined
-text plus its boundary pages' ``|`` edges).
+fold. ``join_pages`` is that fold in Python: the reference that tests and the
+benchmark compare the distributed fold against (``operators.fold``, JVM column
+expressions), and the one the streaming stateful fold calls.
 """
 
 from __future__ import annotations
 
-from typing import List, NamedTuple, Optional
+from typing import List
 
-_PAGE_BREAK = "---PAGE BREAK---"
+PAGE_BREAK = "---PAGE BREAK---"
 
 
 def clean_page(page: str) -> str:
     """Marker scrub + right-strip, applied to every page before the fold."""
-    return page.replace(_PAGE_BREAK, "").rstrip()
+    return page.replace(PAGE_BREAK, "").rstrip()
 
 
 def _separator(prev_page: str, current_page: str) -> str:
@@ -48,49 +47,4 @@ def join_pages(pages: List[str]) -> str:
     parts = [valid[0]]
     for i in range(1, len(valid)):
         parts.append(_separator(valid[i - 1], valid[i]) + valid[i])
-    return "".join(parts)
-
-
-class ChunkFold(NamedTuple):
-    """Result of folding one contiguous chunk of pages.
-
-    ``first_page``/``last_page`` carry the cleaned boundary pages of the
-    chunk's surviving sequence so that cross-chunk separators can be computed
-    exactly; ``text`` is the chunk-internal join.
-    """
-
-    text: str
-    first_page: str
-    last_page: str
-
-    @property
-    def has_content(self) -> bool:
-        return bool(self.last_page)
-
-
-def fold_chunk(pages: List[str]) -> Optional[ChunkFold]:
-    """Fold one chunk; returns None when no page in the chunk survives."""
-    valid = [p for p in (clean_page(page) for page in pages) if p]
-    if not valid:
-        return None
-    parts = [valid[0]]
-    for i in range(1, len(valid)):
-        parts.append(_separator(valid[i - 1], valid[i]) + valid[i])
-    return ChunkFold("".join(parts), valid[0], valid[-1])
-
-
-def combine_chunks(chunks: List[Optional[ChunkFold]]) -> str:
-    """Combine ordered chunk folds into the document string.
-
-    Equivalent to ``join_pages`` on the concatenation of the chunks' pages:
-    empty chunks vanish, and the separator between two surviving chunks is
-    computed from the previous chunk's last surviving page and the next
-    chunk's first surviving page — exactly the adjacency the flat fold sees.
-    """
-    alive = [c for c in chunks if c is not None]
-    if not alive:
-        return ""
-    parts = [alive[0].text]
-    for i in range(1, len(alive)):
-        parts.append(_separator(alive[i - 1].last_page, alive[i].first_page) + alive[i].text)
     return "".join(parts)

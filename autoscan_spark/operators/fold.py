@@ -1,24 +1,30 @@
 """Per-conversation ordered document fold.
 
-Reference contract: ``_join_markdown_pages`` (autoscan/autoscan.py:353-383) —
-empty-page filtering and the adjacency-dependent separator must happen inside
-ONE ordered fold (the separator depends on post-filter neighbors).
+Reference contract: ``_join_markdown_pages`` (autoscan/autoscan.py:353-383),
+mirrored in Python by ``kernels.pagejoin.join_pages`` — empty-page filtering
+and the adjacency-dependent separator must happen inside ONE ordered fold
+(the separator depends on post-filter neighbors).
 
-Physical design (chosen by measurement — see BENCH/BASELINE.md): the fold is
-a JVM-side ``groupBy(conv_id).agg(array_sort(collect_list(struct(turn_idx,
-extracted_text))))`` followed by ONE Arrow-vectorized ``pandas_udf`` that
-applies the pure fold kernel per conversation. This beats a grouped
-``applyInPandas`` by ~10× on many-small-conversation workloads: grouping and
-sorting stay in Tungsten, and Python sees one Arrow batch of conversations
-instead of one pandas DataFrame per group.
+Physical design: the whole fold is JVM column expressions, so the low
+pipeline crosses into Python once (the extraction ``mapInArrow``), not twice.
+
+1. Map-side, before the aggregation, each page is cleaned (``_clean``: marker
+   scrub + a ``str.rstrip()``-exact right-strip).
+2. ``_fold``: ``groupBy(conv_id)`` + ``array_sort(collect_list(struct(turn_idx,
+   text)))``, with an empty page's struct null — ``collect_list`` skips the
+   nulls, so empty pages never enter the buffer.
+3. ``_join``: a ``transform`` over the sorted array picks each separator from
+   the previous surviving page's last and the current page's first character,
+   then ``array_join`` concatenates.
 
 Scale note (100 TB): a conversation's turns must fit in one aggregation
 buffer for the flat fold. For pathologically long conversations
-``two_phase=True`` runs the algebraically-equivalent two-level fold
-(kernels.pagejoin.fold_chunk / combine_chunks): chunks of ``chunk_size``
-turns fold in parallel keyed by (conv_id, chunk_id) — spreading a skewed
-conversation over many tasks — then a second, tiny shuffle combines boundary
--exact chunk summaries per conversation. Equivalence is property-tested in
+``two_phase=True`` folds chunks of ``chunk_size`` turns in parallel keyed by
+(conv_id, chunk_id) — spreading a skewed conversation over many tasks — then
+a second, tiny shuffle joins the chunk texts per conversation with the same
+``_join``. That is exact because a surviving chunk's text starts with its
+first surviving page and ends with its last, the only characters a
+cross-chunk separator reads. Equivalence with ``join_pages`` is tested in
 tests/test_pagejoin.py and distribution-tested in tests/test_checkpoint_skew.py.
 
 ``n_turns`` counts the successfully extracted turns entering the fold
@@ -28,10 +34,8 @@ autoscan/autoscan.py:165,174), i.e. BEFORE empty-page filtering.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -40,7 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from autoscan_spark.kernels.pagejoin import ChunkFold, combine_chunks, fold_chunk, join_pages
+from autoscan_spark.kernels.pagejoin import PAGE_BREAK
 
 DOC_SCHEMA = StructType(
     [
@@ -52,52 +56,64 @@ DOC_SCHEMA = StructType(
     ]
 )
 
+# The code points for which Python's str.isspace() is true, i.e. exactly what
+# str.rstrip() strips (Java's \s is ASCII-only).
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+_WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
+# \z, not $: Java's $ also matches before a final line terminator. The
+# lookbehind makes only the start of each whitespace run a match candidate,
+# so a long internal run is scanned once instead of once per position.
+_RSTRIP = f"(?<!{_WS_CLASS}){_WS_CLASS}+\\z"
 
-# pandas_udf objects are created lazily (inside fold_documents): decorating at
-# module import time requires an active SparkSession to parse the return type.
+
+def _clean(text: Column) -> Column:
+    """``kernels.pagejoin.clean_page`` as a column expression.
+
+    The regex runs only when there is something to strip: the text holds the
+    marker (whose removal can expose trailing whitespace) or ends in
+    whitespace. Extracted text is already right-stripped by the kernel, so
+    almost every page passes through untouched.
+    """
+    return F.when(
+        text.contains(PAGE_BREAK) | F.substring(text, -1, 1).isin(*PY_WHITESPACE),
+        F.regexp_replace(F.replace(text, F.lit(PAGE_BREAK), F.lit("")), _RSTRIP, ""),
+    ).otherwise(text)
 
 
-def _fold_turns_udf():
-    @pandas_udf("string")
-    def fold_turns(turns: pd.Series) -> pd.Series:
-        # each element: list of {"turn_idx": int, "extracted_text": str}
-        # dicts, already sorted by turn_idx via array_sort on the struct
-        return turns.map(lambda ts: join_pages([t["extracted_text"] for t in ts]))
+def _join(items: Column) -> Column:
+    """Join the ``text`` fields of an ordered array of structs with the
+    reference separator: ``"\\n"`` when the previous text ends with ``|`` and
+    the current one starts with ``|``, otherwise ``"\\n\\n"``. Every text must
+    be non-empty; ``items`` must be a column reference (the lambda indexes it
+    once per element)."""
 
-    return fold_turns
-
-
-def _fold_chunk_udf():
-    @pandas_udf("struct<text:string,first_page:string,last_page:string>")
-    def fold_one_chunk(turns: pd.Series) -> pd.DataFrame:
-        texts, firsts, lasts = [], [], []
-        for ts in turns:
-            chunk = fold_chunk([t["extracted_text"] for t in ts])
-            texts.append(chunk.text if chunk else None)
-            firsts.append(chunk.first_page if chunk else None)
-            lasts.append(chunk.last_page if chunk else None)
-        return pd.DataFrame(
-            {"text": texts, "first_page": firsts, "last_page": lasts}
+    def piece(x: Column, i: Column) -> Column:
+        sep = (
+            F.when(i == 0, F.lit(""))
+            .when(items[i - 1]["text"].endswith("|") & x["text"].startswith("|"), F.lit("\n"))
+            .otherwise(F.lit("\n\n"))
         )
+        return F.concat(sep, x["text"])
 
-    return fold_one_chunk
+    return F.array_join(F.transform(items, piece), "")
 
 
-def _combine_chunks_udf():
-    @pandas_udf("string")
-    def combine_chunk_folds(chunks: pd.Series) -> pd.Series:
-        def combine(cs) -> str:
-            folds = [
-                ChunkFold(c["text"], c["first_page"], c["last_page"])
-                if c["text"] is not None
-                else None
-                for c in cs
-            ]
-            return combine_chunks(folds)
-
-        return chunks.map(combine)
-
-    return combine_chunk_folds
+def _fold(df: DataFrame, keys: list, order: str) -> DataFrame:
+    """One fold level: per ``keys``, gather each non-empty ``text`` as an
+    ``(order, text)`` struct (an empty text becomes null, which
+    ``collect_list`` skips), sort them, ``_join`` them into ``text``, and sum
+    the per-turn counters."""
+    item = F.when(F.col("text") != "", F.struct(order, "text"))
+    return df.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(item)).alias("__items"),
+        F.sum("n_turns").cast("int").alias("n_turns"),
+        F.sum("in_chars").cast("long").alias("in_chars"),
+        F.sum("out_chars").cast("long").alias("out_chars"),
+    ).select(*keys, _join(F.col("__items")).alias("text"), "n_turns", "in_chars", "out_chars")
 
 
 def resolve_fold_strategy(
@@ -151,67 +167,21 @@ def fold_documents(
     Input must contain conv_id, turn_idx, extracted_text, in_chars, out_chars
     (failed rows should already be dropped / have failed the job).
     """
-    cols = extracted.select(
-        "conv_id", "turn_idx", "extracted_text", "in_chars", "out_chars"
-    )
-    if not two_phase:
-        agg = cols.groupBy("conv_id").agg(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "extracted_text"))
-            ).alias("__turns"),
-            F.count("*").cast("int").alias("n_turns"),
-            F.sum("in_chars").cast("long").alias("in_chars"),
-            F.sum("out_chars").cast("long").alias("out_chars"),
-        )
-        return agg.select(
-            "conv_id",
-            _fold_turns_udf()(F.col("__turns")).alias("markdown"),
-            "n_turns",
-            "in_chars",
-            "out_chars",
-        )
-
-    chunked = cols.withColumn(
-        "chunk_id", ((F.col("turn_idx") - F.lit(1)) / F.lit(chunk_size)).cast("long")
-    )
-    chunk_folds = (
-        chunked.groupBy("conv_id", "chunk_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "extracted_text"))
-            ).alias("__turns"),
-            F.count("*").cast("int").alias("n_turns"),
-            F.sum("in_chars").cast("long").alias("in_chars"),
-            F.sum("out_chars").cast("long").alias("out_chars"),
-        )
-        .select(
-            "conv_id",
-            "chunk_id",
-            _fold_chunk_udf()(F.col("__turns")).alias("__chunk"),
-            "n_turns",
-            "in_chars",
-            "out_chars",
-        )
-    )
-    combined = chunk_folds.groupBy("conv_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "chunk_id",
-                    F.col("__chunk.text").alias("text"),
-                    F.col("__chunk.first_page").alias("first_page"),
-                    F.col("__chunk.last_page").alias("last_page"),
-                )
-            )
-        ).alias("__chunks"),
-        F.sum("n_turns").cast("int").alias("n_turns"),
-        F.sum("in_chars").cast("long").alias("in_chars"),
-        F.sum("out_chars").cast("long").alias("out_chars"),
-    )
-    return combined.select(
+    pages = extracted.select(
         "conv_id",
-        _combine_chunks_udf()(F.col("__chunks")).alias("markdown"),
-        "n_turns",
+        "turn_idx",
+        _clean(F.col("extracted_text")).alias("text"),
+        F.lit(1).alias("n_turns"),
         "in_chars",
         "out_chars",
+    )
+    if two_phase:
+        chunk_id = ((F.col("turn_idx") - F.lit(1)) / F.lit(chunk_size)).cast("long")
+        # a chunk with no surviving page has text "" and vanishes like an empty page
+        chunks = _fold(pages.withColumn("chunk_id", chunk_id), ["conv_id", "chunk_id"], "turn_idx")
+        docs = _fold(chunks, ["conv_id"], "chunk_id")
+    else:
+        docs = _fold(pages, ["conv_id"], "turn_idx")
+    return docs.select(
+        "conv_id", F.col("text").alias("markdown"), "n_turns", "in_chars", "out_chars"
     )

@@ -156,7 +156,7 @@ FROM tr"""
 
 
 def q_doc_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: the real distributed ordered fold (applyInPandas), cross-checked
+    """A1: the real distributed ordered fold (JVM expressions), cross-checked
     against an independent pure-SQL implementation of the same adjacency
     -dependent separator rule."""
     tr = transcripts_from_documents(spark, sf_dir)

@@ -5,7 +5,8 @@ autoscan/autoscan.py:19-213, as a DataFrame DAG).
       → extract kernel   (low: mapInArrow, shuffle-free | high: collect_list
                           per conversation + a serial pandas_udf)
       → error handling   (low: drop failed | high: already failed fast)
-      → ordered fold     (one shuffle; two-phase for skewed conversations)
+      → ordered fold     (JVM expressions, one shuffle; two-phase for skewed
+                          conversations)
       → optional polish  (second per-document kernel pass with fallback)
 
 Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy).

@@ -1,14 +1,21 @@
 """Byte-exact contract tests for the ordered document fold.
 
 Expected values derived by hand from the reference semantics
-(_join_markdown_pages, autoscan/autoscan.py:353-383).
+(_join_markdown_pages, autoscan/autoscan.py:353-383); the distributed fold
+(operators.fold, JVM column expressions) is checked against ``join_pages``.
 """
 
-import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
+import random
+import sys
+import time
 
-from autoscan_spark.kernels.pagejoin import clean_page, combine_chunks, fold_chunk, join_pages
+import pytest
+from pyspark.sql import functions as F
+
+from autoscan_spark.kernels.pagejoin import clean_page, join_pages
+from autoscan_spark.operators.fold import PY_WHITESPACE, _clean, fold_documents
+
+PY_SPACE = sorted(c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace())
 
 
 CASES = [
@@ -44,16 +51,90 @@ def test_clean_page():
     assert clean_page("---PAGE BREAK---") == ""
 
 
-page_strategy = st.text(
-    alphabet=st.sampled_from(list("ab|#- \n\t")), max_size=24
-) | st.just("---PAGE BREAK---") | st.just("| a |\n|---|\n| 1 |")
+def test_whitespace_list_is_pythons():
+    assert len(PY_WHITESPACE) == len(set(PY_WHITESPACE)) == 29
+    assert set(PY_WHITESPACE) == set(PY_SPACE)
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.lists(page_strategy, max_size=30), st.integers(min_value=1, max_value=7))
-def test_two_phase_fold_equivalent(pages, chunk_size):
-    """The distributed two-level fold must equal the flat fold for any input."""
-    chunks = [
-        fold_chunk(pages[i : i + chunk_size]) for i in range(0, len(pages), chunk_size)
+# Page endings where a JVM fold can disagree with Python: every str.isspace()
+# code point, look-alikes Python does not strip, Java's $-before-final-\n,
+# an astral last character, marker removal that exposes whitespace or must
+# not rescan, whitespace-only and empty pages, and table-pipe edges.
+EDGE_PAGES = (
+    [f"t{c}" for c in PY_SPACE]
+    + ["t\u200b", "t\u180e", "t\ufeff", "x\n", "t\U0001F600", "\U0001F600"]
+    + ["a \u3000---PAGE BREAK---", "---PAGE ---PAGE BREAK---BREAK---", "---PAGE BREAK---"]
+    + [" \t\u3000\n\x85", "", "|", "| a |", "| row", "row |", "|\n"]
+)
+
+
+def _fold_fixture():
+    """A few hundred seeded page lists, with every edge page between two
+    table pages at least once and one conversation of only empty pages."""
+    rng = random.Random(20240)
+    convs = {f"e{i:03d}": ["| a |", page, "| b"] for i, page in enumerate(EDGE_PAGES)}
+    convs["empty"] = ["", " \u2028", "---PAGE BREAK---", "\t"]
+    for i in range(300):
+        convs[f"r{i:03d}"] = [
+            "".join(rng.choice(EDGE_PAGES) for _ in range(rng.randint(0, 3)))
+            for _ in range(rng.randint(1, 9))
+        ]
+    rows = [
+        (cid, turn, page, len(page), len(page))
+        for cid, pages in convs.items()
+        for turn, page in enumerate(pages, start=1)
     ]
-    assert combine_chunks(chunks) == join_pages(pages)
+    rng.shuffle(rows)  # the fold must sort, not rely on arrival order
+    return rows, {cid: (join_pages(pages), len(pages)) for cid, pages in convs.items()}
+
+
+@pytest.fixture(scope="module")
+def fold_input(spark):
+    rows, want = _fold_fixture()
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, extracted_text string, in_chars long, out_chars long"
+    ).cache()
+    df.count()
+    yield df, want
+    df.unpersist()
+
+
+def _folded(df, **kw):
+    return {r["conv_id"]: (r["markdown"], r["n_turns"]) for r in fold_documents(df, **kw).collect()}
+
+
+def test_fold_matches_join_pages(fold_input):
+    df, want = fold_input
+    assert want["empty"] == ("", 4)
+    assert _folded(df) == want
+
+
+def test_two_phase_fold_equivalent(fold_input):
+    """The distributed two-level fold must equal the flat Python fold for
+    any chunking, including chunks whose pages are all empty."""
+    df, want = fold_input
+    for chunk_size in (1, 2, 3, 7):
+        assert _folded(df, two_phase=True, chunk_size=chunk_size) == want, chunk_size
+
+
+def test_page_clean_is_linear_in_whitespace_runs(spark):
+    """The right-strip regex must not rescan a whitespace run once per
+    position: doubling the run may at most ~double the time (measured with
+    the run inside the page and at its end)."""
+
+    def best_time(page):
+        df = spark.createDataFrame([(page,)], "t string").cache()
+        df.count()
+        out = df.select(F.length(_clean(F.col("t"))).alias("n"))
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            n = out.first()["n"]
+            times.append(time.perf_counter() - t0)
+        df.unpersist()
+        assert n == len(clean_page(page))
+        return min(times)
+
+    for make in (lambda n: " \u3000" * (n // 2) + "x ", lambda n: "x" + "\t " * (n // 2)):
+        t_n, t_2n = best_time(make(200_000)), best_time(make(400_000))
+        assert t_2n <= 2.5 * t_n, (t_n, t_2n)

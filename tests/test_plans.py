@@ -52,6 +52,9 @@ def test_low_pipeline_has_exactly_one_shuffle(spark, tmp_path_factory):
     plan = _executed_plan(docs)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 shuffle, got {n_exchanges}:\n{plan}"
+    # one Python crossing: the extraction kernel; the fold runs in the JVM
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):

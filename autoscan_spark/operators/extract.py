@@ -1,22 +1,24 @@
 """Per-turn extraction operators.
 
-Two execution strategies, mirroring the reference's accuracy modes
-(autoscan/autoscan.py:93-99):
+Both of the reference's accuracy modes (autoscan/autoscan.py:93-99) run the
+same Arrow batch kernel, ``_extract_batches``, through ``mapInArrow``:
 
-- ``mode='low'``  — embarrassingly parallel, shuffle-free: ``mapInArrow`` over
-  the scan partitions (reference analog: concurrent asyncio.gather path,
+- ``mode='low'``  — embarrassingly parallel, shuffle-free: the kernel runs
+  over the scan partitions (reference analog: concurrent asyncio.gather path,
   autoscan/autoscan.py:272-289). At 100 TB this is the throughput path — the
   extraction stage adds ZERO shuffles; Catalyst pushes the turn-range filter
   into the parquet/Iceberg scan, and each Arrow batch is processed by a
   vectorized Python kernel.
 
-- ``mode='high'`` — per-conversation serial fold with lag-1 *output* context
+- ``mode='high'`` — per-conversation serial scan with lag-1 *output* context
   (reference: sequential loop, autoscan/autoscan.py:257-271; context
   consumption img_to_md_processor.py:56-71). Because turn k's kernel consumes
   turn k-1's OUTPUT, the chain is irreducible per conversation — parallelism
-  comes from conversations, so this is a ``groupBy(conv_id)`` collecting each
-  conversation's turns (``array_sort(collect_list(...))``, one shuffle) and a
-  vectorized ``pandas_udf`` that walks them in ``turn_idx`` order.
+  comes from conversations, so the turns are hash-partitioned by
+  ``conv_id`` (one shuffle) and sorted by ``(conv_id, turn_idx)`` within each
+  partition; the kernel then carries the previous output across the rows
+  and Arrow batches of a partition, resetting it at each new conversation.
+  A long conversation streams through a spillable sort, never one row.
 
 Error semantics (reference X3, autoscan/autoscan.py:250-255,283-289):
 - low mode: failures become ``status='error:...'`` rows; ``drop_failed``
@@ -27,9 +29,9 @@ Error semantics (reference X3, autoscan/autoscan.py:250-255,283-289):
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +45,7 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.kernels.dispatch import extract_turn
+from autoscan_spark.kernels.dispatch import STATUS_OK, extract_turn
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -87,18 +89,27 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch], serial: bool = False
+) -> Iterator[pa.RecordBatch]:
     """Vectorized batch kernel. Hot path discipline (this function dominates
     the 100 TB run): input key columns pass through as Arrow arrays untouched
     (zero copy); only role/text cross into Python; output arrays are built
     natively (ListArray.from_arrays for spans) — no from_pydict, no pandas;
-    char counters come from Arrow compute, not Python len()."""
+    char counters come from Arrow compute, not Python len().
+
+    ``serial`` (high mode) expects rows sorted by ``(conv_id, turn_idx)``:
+    each turn gets the previous turn's output as context when both belong to
+    the same conversation, and the first failed turn raises (fail-fast, like
+    the reference's sequential mode, autoscan/autoscan.py:250-255)."""
     import pyarrow.compute as pc
 
     span_fields = list(_ARROW_SPAN_TYPE.value_type)
+    prev_conv = prev_out = context = None
     for batch in batches:
         texts = batch.column("text").to_pylist()
         roles = batch.column("role").to_pylist()
+        conv_ids = batch.column("conv_id").to_pylist() if serial else None
         n = len(texts)
         out_texts = [None] * n
         statuses = [None] * n
@@ -108,7 +119,17 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         ends: list[int] = []
         span_kinds: list[str] = []
         for i in range(n):
-            extracted, spans, status, kind = extract_turn(texts[i], roles[i])
+            if serial:
+                context = prev_out if conv_ids[i] == prev_conv else None
+            extracted, spans, status, kind = extract_turn(texts[i], roles[i], context)
+            if serial:
+                if status != STATUS_OK:
+                    raise RuntimeError(
+                        f"extraction failed in high (sequential) mode for "
+                        f"conv_id={conv_ids[i]} "
+                        f"turn_idx={batch.column('turn_idx')[i].as_py()}: {status}"
+                    )
+                prev_conv, prev_out = conv_ids[i], extracted
             out_texts[i] = extracted
             statuses[i] = status
             kinds[i] = kind
@@ -148,61 +169,6 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
         )
 
 
-_SERIAL_RESULT_TYPE = (
-    "array<struct<turn_idx:int,extracted_text:string,"
-    "spans:array<struct<start:int,end:int,kind:string>>,"
-    "status:string,kind:string,in_chars:bigint,out_chars:bigint>>"
-)
-
-
-def _serial_extract_udf():
-    """High-mode kernel as ONE vectorized pandas_udf over per-conversation
-    turn arrays (same agg+udf physical shape as the fold — a grouped
-    applyInPandas pays per-tiny-group pandas overhead; this pays it per
-    Arrow batch of conversations).
-
-    Fail-fast on the first kernel error, like the reference's sequential
-    mode (autoscan/autoscan.py:250-255); the conv_id travels alongside so
-    the error names the failing conversation/turn.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_SERIAL_RESULT_TYPE)
-    def run_serial(conv_ids: pd.Series, turns: pd.Series) -> pd.Series:
-        out = []
-        for conv_id, ts in zip(conv_ids, turns):
-            prev_output = None
-            rows = []
-            for t in ts:  # already sorted by turn_idx via array_sort
-                text = t["text"]
-                extracted, spans, status, kind = extract_turn(
-                    text, t["role"], prev_output
-                )
-                if status != "ok":
-                    raise RuntimeError(
-                        f"extraction failed in high (sequential) mode for "
-                        f"conv_id={conv_id} turn_idx={t['turn_idx']}: {status}"
-                    )
-                rows.append(
-                    {
-                        "turn_idx": t["turn_idx"],
-                        "extracted_text": extracted,
-                        "spans": [
-                            {"start": s, "end": e, "kind": k} for s, e, k in spans
-                        ],
-                        "status": status,
-                        "kind": kind,
-                        "in_chars": len(text) if text is not None else 0,
-                        "out_chars": len(extracted),
-                    }
-                )
-                prev_output = extracted
-            out.append(rows)
-        return pd.Series(out)
-
-    return run_serial
-
-
 def extract_turns(
     df: DataFrame,
     mode: str = "low",
@@ -226,28 +192,10 @@ def extract_turns(
     cols = df.select("conv_id", "turn_idx", "role", "text")
     if mode == "low":
         return cols.mapInArrow(_extract_batches, schema=EXTRACTED_SCHEMA)
-
-    grouped = cols.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "role", "text"))).alias(
-            "__turns"
-        )
-    )
-    results = grouped.select(
-        "conv_id",
-        F.explode(_serial_extract_udf()(F.col("conv_id"), F.col("__turns"))).alias(
-            "__r"
-        ),
-    )
-    return results.select(
-        "conv_id",
-        F.col("__r.turn_idx").alias("turn_idx"),
-        F.col("__r.extracted_text").alias("extracted_text"),
-        F.col("__r.spans").alias("spans"),
-        F.col("__r.status").alias("status"),
-        F.col("__r.kind").alias("kind"),
-        F.col("__r.in_chars").alias("in_chars"),
-        F.col("__r.out_chars").alias("out_chars"),
-        F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
+    return (
+        cols.repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInArrow(partial(_extract_batches, serial=True), schema=EXTRACTED_SCHEMA)
     )
 
 

@@ -2,19 +2,20 @@
 autoscan/autoscan.py:19-213, as a DataFrame DAG).
 
     transcripts scan (filter pushdown on turn range)
-      → extract kernel   (low: mapInArrow, shuffle-free | high: collect_list
-                          per conversation + a serial pandas_udf)
+      → extract kernel   (one mapInArrow kernel — low: over the scan,
+                          shuffle-free | high: over turns partitioned by
+                          conversation and sorted by turn_idx)
       → error handling   (low: drop failed | high: already failed fast)
       → ordered fold     (JVM expressions, one shuffle; two-phase for skewed
                           conversations)
       → optional polish  (second per-document kernel pass with fallback)
 
 Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy).
-High mode has TWO (two ShuffleQueryStages in the executed plan): the groupBy
-feeding the serial kernel, then the fold's groupBy. The second is cheap in
-rows — the fold's partial collect_list completes inside the already
-conversation-grouped partitions, so it moves one row per conversation, not
-raw turns (pinned by tests/test_plans.py::test_high_pipeline_shuffle_budget).
+High mode has TWO: the repartition by conv_id feeding the serial kernel,
+then the fold's groupBy. The second is cheap in rows — the fold's partial
+collect_list completes inside the already conversation-grouped partitions,
+so it moves one row per conversation, not raw turns (pinned by
+tests/test_plans.py::test_high_pipeline_shuffle_budget).
 """
 
 from __future__ import annotations

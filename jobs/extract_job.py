@@ -60,17 +60,25 @@ def main(argv=None) -> None:
         transcripts = transcripts.filter(transcripts.turn_idx <= args.last_turn)
 
     fold_strategy = {"on": True, "off": False, "auto": "auto"}[args.two_phase_fold]
-    t0 = time.perf_counter()
-    committed = CheckpointedExtraction(
+    job = CheckpointedExtraction(
         root=args.output,
         n_buckets=args.buckets,
         mode=args.mode,
         two_phase_fold=fold_strategy,
         polish=args.polish,
-    ).run(transcripts, waves=args.waves)
+    )
+    done_before = job.committed_buckets(spark)
+    t0 = time.perf_counter()
+    committed = job.run(transcripts, waves=args.waves)
 
     wall = time.perf_counter() - t0
-    n_turns = transcripts.count()
+    # turns of the buckets THIS call committed, from their lineage rows: a
+    # resumed run reports only the work it did, without rescanning the input
+    n_turns = sum(
+        r["rows_in"]
+        for r in job.lineage(spark).select("partition_id", "rows_in").collect()
+        if r["partition_id"] not in done_before
+    )
     print(
         json.dumps(
             {

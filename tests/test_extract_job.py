@@ -51,6 +51,8 @@ def test_extract_job_cli(spark, tmp_path_factory):
     )
     stats2 = json.loads(res2.stdout.strip().splitlines()[-1])
     assert stats2["committed_buckets"] == 0
+    # the summary counts only turns committed by this call
+    assert stats2["n_turns"] == 0
 
 
 def test_extract_job_polish_checkpointed(spark, tmp_path_factory):

@@ -101,6 +101,99 @@ def test_high_mode_serial_context(spark):
     assert md == "| a | b |\n|---|---|\n| 1 | 2 |\n| 3 | 4 |\n| 5 | 6 |"
 
 
+# Hand-built conversations where the lag-1 context rule fires (the synthetic
+# corpus never triggers it). With two rows per Arrow batch in one sorted
+# partition, batch boundaries sit before every even position, so each case
+# is built to straddle one whatever the alignment the corpus leaves.
+_CONTEXT_CONVS = {
+    # table continuation: the rule fires on every adjacent pair
+    "zz-table": [
+        "| a | b |\n|---|---|\n| 1 | 2 |",
+        "| a | b |\n|---|---|\n| 3 | 4 |",
+        "| a | b |\n|---|---|\n| 5 | 6 |",
+    ],
+    # repeated heading: fires on turns 2 and 5, positions of opposite parity
+    "zz-heading": ["# H\na", "# H\nb", "c", "# G\nd", "# G\ne"],
+    # adjacent conversations: a's last output must not reach b's first turn,
+    # nor c's reach d's (again positions of opposite parity)
+    "zz-leak-a": ["# H\nx"],
+    "zz-leak-b": ["# H\ny"],
+    "zz-leak-c": ["pad", "# G\nz"],
+    "zz-leak-d": ["# G\nv"],
+}
+
+
+def _serial_golden(rows):
+    """Driver-side high-mode oracle over arbitrary transcript rows: each
+    conversation's turns in turn_idx order, threading the previous output."""
+    by_conv = {}
+    for conv_id, turn_idx, role, text, _tool, _ts in rows:
+        by_conv.setdefault(conv_id, []).append((turn_idx, role, text))
+    per_turn = {}
+    per_doc = {}
+    for conv_id, turns in by_conv.items():
+        prev = None
+        outs = []
+        for turn_idx, role, text in sorted(turns):
+            prev, _spans, status, _kind = extract_turn(text, role, prev)
+            assert status == "ok", (conv_id, turn_idx, status)
+            per_turn[(conv_id, turn_idx)] = prev
+            outs.append(prev)
+        per_doc[conv_id] = join_pages(outs)
+    return per_turn, per_doc
+
+
+def test_high_mode_context_across_batches_and_conversations(spark):
+    """High mode threads context across Arrow batch boundaries within a
+    conversation and never across conversations, on a shuffled corpus run
+    at two rows per Arrow batch in a single partition."""
+    from pyspark.sql import functions as F
+
+    corpus = synthesize_transcripts(spark, N_CONVS, seed=42).filter(
+        ~F.col("conv_id").endswith("-error")
+    )
+    hand = [
+        (conv_id, i + 1, "user", text, "", None)
+        for conv_id, texts in _CONTEXT_CONVS.items()
+        for i, text in enumerate(texts)
+    ]
+    rows = [
+        r
+        for n in range(N_CONVS)
+        for r in gen_conversation(n, seed=42)
+        if not r[0].endswith("-error")
+    ] + hand
+    per_turn, per_doc = _serial_golden(rows)
+    # the cases exercise the rule: firing where built to, nowhere else
+    assert per_turn[("zz-table", 3)] == "| 5 | 6 |"
+    assert per_turn[("zz-heading", 2)] == "b"
+    assert per_turn[("zz-heading", 5)] == "e"
+    assert per_turn[("zz-leak-b", 1)] == "# H\ny"
+    assert per_turn[("zz-leak-d", 1)] == "# G\nv"
+
+    df = corpus.unionByName(spark.createDataFrame(hand, schema=corpus.schema))
+    df = df.orderBy(F.rand(7))
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        extracted, docs = extract_pipeline(df, mode="high")
+        got_turns = {
+            (r["conv_id"], r["turn_idx"]): r["extracted_text"]
+            for r in extracted.collect()
+        }
+        got_docs = {r["conv_id"]: r["markdown"] for r in docs.collect()}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got_turns == per_turn
+    assert got_docs == per_doc
+
+
 def test_high_mode_fails_fast_on_error(spark):
     rows = [
         ("c1", 1, "user", "fine text", "", None),
@@ -110,7 +203,9 @@ def test_high_mode_fails_fast_on_error(spark):
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     )
     extracted = extract_turns(df, mode="high")
-    with pytest.raises(Exception, match="extraction failed in high"):
+    with pytest.raises(
+        Exception, match="extraction failed in high.*conv_id=c1 turn_idx=2"
+    ):
         extracted.collect()
 
 

@@ -58,12 +58,13 @@ def test_low_pipeline_has_exactly_one_shuffle(spark, tmp_path_factory):
 
 
 def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
-    """High mode: exactly TWO exchanges — one grouping raw turns for the
-    serial kernel, one for the fold agg. The second is cheap in rows: the
+    """High mode: exactly TWO exchanges — the repartition by conv_id feeding
+    the serial kernel, and the fold agg's. The second is cheap in rows: the
     fold's partial aggregation (collect_list) completes within the already
     conversation-grouped partitions, so it moves ONE row per conversation,
-    not raw turns. (applyInPandas output does not advertise partitioning, so
-    Catalyst cannot elide it outright.)"""
+    not raw turns. (MapInArrow output does not advertise the conv_id
+    partitioning, so Catalyst cannot elide it outright.) Both modes run the
+    one extraction kernel: a single MapInArrow and no scalar Python UDF."""
     path = str(tmp_path_factory.mktemp("plan4")) + "/t"
     synthesize_transcripts(spark, 20, seed=4).filter(
         ~F.col("conv_id").endswith("-error")
@@ -74,6 +75,8 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 2, f"expected 2 shuffles, got {n_exchanges}:\n{plan}"
     assert "partial_" in plan  # map-side partial aggregation present
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_broadcast_join_for_small_dimension(spark, sf_dir):

@@ -10,22 +10,16 @@ pipeline crosses into Python once (the extraction ``mapInArrow``), not twice.
 
 1. Map-side, before the aggregation, each page is cleaned (``_clean``: marker
    scrub + a ``str.rstrip()``-exact right-strip).
-2. ``_fold``: ``groupBy(conv_id)`` + ``array_sort(collect_list(struct(turn_idx,
+2. ``groupBy(conv_id)`` + ``array_sort(collect_list(struct(turn_idx,
    text)))``, with an empty page's struct null — ``collect_list`` skips the
    nulls, so empty pages never enter the buffer.
 3. ``_join``: a ``transform`` over the sorted array picks each separator from
    the previous surviving page's last and the current page's first character,
    then ``array_join`` concatenates.
 
-Scale note (100 TB): a conversation's turns must fit in one aggregation
-buffer for the flat fold. For pathologically long conversations
-``two_phase=True`` folds chunks of ``chunk_size`` turns in parallel keyed by
-(conv_id, chunk_id) — spreading a skewed conversation over many tasks — then
-a second, tiny shuffle joins the chunk texts per conversation with the same
-``_join``. That is exact because a surviving chunk's text starts with its
-first surviving page and ends with its last, the only characters a
-cross-chunk separator reads. Equivalence with ``join_pages`` is tested in
-tests/test_pagejoin.py and distribution-tested in tests/test_checkpoint_skew.py.
+Scale note: a conversation's pages meet in one aggregation buffer and its
+document is one output row, so the longest conversation's document must fit
+in one task's heap.
 
 ``n_turns`` counts the successfully extracted turns entering the fold
 (reference: pages processed = len(aggregated_markdown),
@@ -102,86 +96,20 @@ def _join(items: Column) -> Column:
     return F.array_join(F.transform(items, piece), "")
 
 
-def _fold(df: DataFrame, keys: list, order: str) -> DataFrame:
-    """One fold level: per ``keys``, gather each non-empty ``text`` as an
-    ``(order, text)`` struct (an empty text becomes null, which
-    ``collect_list`` skips), sort them, ``_join`` them into ``text``, and sum
-    the per-turn counters."""
-    item = F.when(F.col("text") != "", F.struct(order, "text"))
-    return df.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(item)).alias("__items"),
-        F.sum("n_turns").cast("int").alias("n_turns"),
-        F.sum("in_chars").cast("long").alias("in_chars"),
-        F.sum("out_chars").cast("long").alias("out_chars"),
-    ).select(*keys, _join(F.col("__items")).alias("text"), "n_turns", "in_chars", "out_chars")
-
-
-def resolve_fold_strategy(
-    transcripts: DataFrame,
-    two_phase,
-    chunk_size: int = 1024,
-    sample_fraction: float = 0.001,
-    threshold_turns: int | None = None,
-    conv_col: str = "conv_id",
-    seed: int = 42,
-) -> bool:
-    """Resolve ``two_phase`` = False | True | "auto" to a concrete bool.
-
-    ``"auto"`` estimates the hottest conversation's turn count from a sampled
-    aggregate and picks the two-phase fold when the estimate exceeds
-    ``threshold_turns`` (default ``16 * chunk_size`` — the point where one
-    conversation would span enough chunks that spreading it over tasks beats
-    the flat fold's single aggregation buffer).
-
-    Cost model: ONE extra action, but on a column-pruned ``conv_col``-only
-    scan of the PRE-KERNEL transcripts — call this with the raw input, never
-    with the extraction output (sampling post-kernel rows would run the
-    extraction kernel over everything just to count turns). Row-level
-    sampling of a conversation with T turns yields ~T·f rows, so
-    ``count/f`` is an unbiased estimate of T; the threshold is orders of
-    magnitude above the noise floor for any T that matters.
-    """
-    if two_phase != "auto":
-        return bool(two_phase)
-    threshold = threshold_turns if threshold_turns is not None else 16 * chunk_size
-    top = (
-        transcripts.select(conv_col)
-        .sample(fraction=sample_fraction, seed=seed)
-        .groupBy(conv_col)
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    if top is None:
-        return False
-    return (top / sample_fraction) > threshold
-
-
-def fold_documents(
-    extracted: DataFrame,
-    two_phase: bool = False,
-    chunk_size: int = 1024,
-) -> DataFrame:
+def fold_documents(extracted: DataFrame) -> DataFrame:
     """Fold extracted turns into one markdown row per conversation.
 
     Input must contain conv_id, turn_idx, extracted_text, in_chars, out_chars
     (failed rows should already be dropped / have failed the job).
     """
     pages = extracted.select(
-        "conv_id",
-        "turn_idx",
-        _clean(F.col("extracted_text")).alias("text"),
-        F.lit(1).alias("n_turns"),
-        "in_chars",
-        "out_chars",
+        "conv_id", "turn_idx", _clean(F.col("extracted_text")).alias("text"), "in_chars", "out_chars"
     )
-    if two_phase:
-        chunk_id = ((F.col("turn_idx") - F.lit(1)) / F.lit(chunk_size)).cast("long")
-        # a chunk with no surviving page has text "" and vanishes like an empty page
-        chunks = _fold(pages.withColumn("chunk_id", chunk_id), ["conv_id", "chunk_id"], "turn_idx")
-        docs = _fold(chunks, ["conv_id"], "chunk_id")
-    else:
-        docs = _fold(pages, ["conv_id"], "turn_idx")
-    return docs.select(
-        "conv_id", F.col("text").alias("markdown"), "n_turns", "in_chars", "out_chars"
-    )
+    # an empty page becomes null, which collect_list skips
+    item = F.when(F.col("text") != "", F.struct("turn_idx", "text"))
+    return pages.groupBy("conv_id").agg(
+        F.array_sort(F.collect_list(item)).alias("__items"),
+        F.count("*").cast("int").alias("n_turns"),
+        F.sum("in_chars").cast("long").alias("in_chars"),
+        F.sum("out_chars").cast("long").alias("out_chars"),
+    ).select("conv_id", _join(F.col("__items")).alias("markdown"), "n_turns", "in_chars", "out_chars")

@@ -48,7 +48,6 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.operators.fold import resolve_fold_strategy
 from autoscan_spark.plans.pipeline import extract_pipeline
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
@@ -85,8 +84,9 @@ class CheckpointedExtraction:
     root: str
     n_buckets: int = 64
     mode: str = "low"
-    two_phase_fold: bool | str = False  # False | True | "auto"
     polish: bool = False
+    first_turn: int | None = None
+    last_turn: int | None = None
 
     @property
     def extracted_path(self) -> str:
@@ -105,22 +105,27 @@ class CheckpointedExtraction:
         return os.path.join(self.root, "_checkpoint_meta.json")
 
     def _check_meta(self) -> None:
-        """Bucket count, mode and polish are part of the checkpoint's
-        identity: changing them across runs would silently mix bucket layouts
-        or polished/unpolished documents and corrupt resume semantics — fail
-        loudly instead."""
+        """Bucket count, mode, polish and the turn range are part of the
+        checkpoint's identity: changing them across runs would silently mix
+        bucket layouts, polished/unpolished documents or turn ranges and
+        corrupt resume semantics — fail loudly instead."""
         import json
 
         meta = {
             "n_buckets": self.n_buckets,
             "mode": self.mode,
             "polish": self.polish,
+            "first_turn": self.first_turn,
+            "last_turn": self.last_turn,
             "lineage_version": LINEAGE_VERSION,
         }
         if os.path.exists(self._meta_path):
             with open(self._meta_path) as f:
                 existing = json.load(f)
             existing.setdefault("polish", False)  # pre-polish checkpoints
+            # pre-range checkpoints were written by runs without a range
+            existing.setdefault("first_turn", None)
+            existing.setdefault("last_turn", None)
             # pre-versioning checkpoints carry the v1 lineage schema; a v2
             # append would mix schemas in the append-only lineage dir
             existing.setdefault("lineage_version", 1)
@@ -165,20 +170,13 @@ class CheckpointedExtraction:
         if not remaining:
             return 0
 
-        # fold-strategy auto-selection happens ONCE per run, on the raw
-        # (pre-kernel, column-pruned) transcripts — not per wave. The choice
-        # doesn't affect output (flat/two-phase are equivalence-tested), so
-        # it is deliberately NOT part of the checkpoint identity.
-        two_phase = resolve_fold_strategy(transcripts, self.two_phase_fold)
-
         per_wave = math.ceil(len(remaining) / max(waves, 1))
         committed = 0
         for w in range(0, len(remaining), per_wave):
             if max_waves is not None and w // per_wave >= max_waves:
                 break
             wave_buckets = remaining[w : w + per_wave]
-            self._run_wave(spark, transcripts, wave_buckets, two_phase,
-                           wave_id=w // per_wave)
+            self._run_wave(spark, transcripts, wave_buckets, wave_id=w // per_wave)
             committed += len(wave_buckets)
         return committed
 
@@ -187,7 +185,6 @@ class CheckpointedExtraction:
         spark: SparkSession,
         transcripts: DataFrame,
         buckets: list[int],
-        two_phase: bool,
         wave_id: int,
     ) -> None:
         t0 = time.perf_counter()
@@ -195,7 +192,11 @@ class CheckpointedExtraction:
             F.col("bucket").isin([int(b) for b in buckets])
         )
         extracted, docs = extract_pipeline(
-            src, mode=self.mode, two_phase_fold=two_phase, polish=self.polish
+            src,
+            mode=self.mode,
+            first_turn=self.first_turn,
+            last_turn=self.last_turn,
+            polish=self.polish,
         )
         # cache the bucket-free extraction output: the docs plan contains
         # this exact subtree, so the extracted sink, the fold and the lineage

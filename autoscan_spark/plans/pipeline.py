@@ -6,8 +6,7 @@ autoscan/autoscan.py:19-213, as a DataFrame DAG).
                           shuffle-free | high: over turns partitioned by
                           conversation and sorted by turn_idx)
       → error handling   (low: drop failed | high: already failed fast)
-      → ordered fold     (JVM expressions, one shuffle; two-phase for skewed
-                          conversations)
+      → ordered fold     (JVM expressions, one shuffle)
       → optional polish  (second per-document kernel pass with fallback)
 
 Plan shape at scale: low mode has exactly ONE shuffle (the fold's groupBy).
@@ -25,7 +24,7 @@ from typing import Tuple
 from pyspark.sql import DataFrame
 
 from autoscan_spark.operators.extract import drop_failed, extract_turns
-from autoscan_spark.operators.fold import fold_documents, resolve_fold_strategy
+from autoscan_spark.operators.fold import fold_documents
 from autoscan_spark.operators.polish import polish_documents
 
 
@@ -34,8 +33,6 @@ def extract_pipeline(
     mode: str = "low",
     first_turn: int | None = None,
     last_turn: int | None = None,
-    two_phase_fold=False,
-    fold_chunk_size: int = 1024,
     polish: bool = False,
 ) -> Tuple[DataFrame, DataFrame]:
     """Run extraction + fold; returns ``(extracted, doc_markdown)``.
@@ -43,20 +40,12 @@ def extract_pipeline(
     Both returned DataFrames are lazy — callers pick the actions (write,
     count, collect), so extracted and doc outputs can share one scan when the
     caller caches or writes ``extracted`` first.
-
-    ``two_phase_fold``: False | True | ``"auto"`` — auto samples the raw
-    transcripts' per-conversation turn counts (column-pruned pre-kernel scan)
-    and picks the skew-spreading two-phase fold only when a conversation is
-    hot enough to need it (operators.fold.resolve_fold_strategy).
     """
-    two_phase = resolve_fold_strategy(
-        transcripts, two_phase_fold, chunk_size=fold_chunk_size
-    )
     extracted = extract_turns(
         transcripts, mode=mode, first_turn=first_turn, last_turn=last_turn
     )
     ok = drop_failed(extracted) if mode == "low" else extracted
-    docs = fold_documents(ok, two_phase=two_phase, chunk_size=fold_chunk_size)
+    docs = fold_documents(ok)
     if polish:
         docs = polish_documents(docs)
     return extracted, docs

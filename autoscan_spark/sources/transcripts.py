@@ -12,7 +12,7 @@ Two generators, both seeded and partition-order independent:
    tool_markup / table_continuation / nested_list / fenced /
    page_break_marker / empty / error / range), generated distributively with
    a per-conversation seed so output is identical at any parallelism. This is
-   the corpus for pytest goldens, the skew test and bench.py.
+   the corpus for pytest goldens, the hot-conversation fold test and bench.py.
 """
 
 from __future__ import annotations
@@ -283,7 +283,7 @@ def synthesize_transcripts(
 ) -> DataFrame:
     """Distributed fixture corpus: `n_convs` conversations, mixed payload
     classes; optionally one pathological `skew_conv_turns`-turn conversation
-    (conv_num = n_convs) to exercise the salting path.
+    (conv_num = n_convs) to exercise the fold of one hot conversation.
 
     Generation is per-conversation seeded → identical output at any
     parallelism or partitioning.

@@ -46,6 +46,7 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -184,7 +185,8 @@ def stream_fold_documents(
     idle_timeout_ms: int = 60 * 60 * 1000,
 ) -> DataFrame:
     """Stateful incremental fold over a streaming extracted-turns DataFrame
-    (output of streaming.stream.stream_extract).
+    (output of streaming.stream.stream_extract). Only ``status == 'ok'``
+    turns are folded.
 
     ``expire_mode``: ``"none"`` | ``"processing"`` | ``"event"`` — see module
     docstring. ``"event"`` requires a watermark upstream
@@ -212,7 +214,10 @@ def stream_fold_documents(
         or "UTC"
     )
     return (
-        extracted_stream.select(*cols)
+        # failed turns never enter the fold, as in the batch pipeline's
+        # drop_failed, so n_turns counts ok turns only
+        extracted_stream.filter(F.col("status") == "ok")
+        .select(*cols)
         .groupBy("conv_id")
         .applyInPandasWithState(
             _make_fold_with_state(expire_mode, idle_timeout_ms, session_tz),

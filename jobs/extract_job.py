@@ -35,11 +35,6 @@ def parse_args(argv=None) -> argparse.Namespace:
     ap.add_argument("--first-turn", type=int, default=None)
     ap.add_argument("--last-turn", type=int, default=None)
     ap.add_argument("--polish", action="store_true", help="whole-document consolidation pass")
-    ap.add_argument("--two-phase-fold", nargs="?", const="on", default="off",
-                    choices=["on", "off", "auto"],
-                    help="chunked fold for heavily skewed conversation lengths; "
-                         "'auto' samples per-conversation turn counts and decides "
-                         "(bare flag = on)")
     ap.add_argument("--buckets", type=int, default=64, help="checkpoint commit granularity")
     ap.add_argument("--waves", type=int, default=1, help="commits per run (resume granularity)")
     ap.add_argument("--master", default=None, help="override master (default: spark-submit's)")
@@ -54,18 +49,13 @@ def main(argv=None) -> None:
 
     spark = get_spark(app_name="autoscan-spark-extract", master=args.master)
     transcripts = spark.read.parquet(args.input)
-    if args.first_turn is not None:
-        transcripts = transcripts.filter(transcripts.turn_idx >= args.first_turn)
-    if args.last_turn is not None:
-        transcripts = transcripts.filter(transcripts.turn_idx <= args.last_turn)
-
-    fold_strategy = {"on": True, "off": False, "auto": "auto"}[args.two_phase_fold]
     job = CheckpointedExtraction(
         root=args.output,
         n_buckets=args.buckets,
         mode=args.mode,
-        two_phase_fold=fold_strategy,
         polish=args.polish,
+        first_turn=args.first_turn,
+        last_turn=args.last_turn,
     )
     done_before = job.committed_buckets(spark)
     t0 = time.perf_counter()

@@ -5,10 +5,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from autoscan_spark.kernels.pagejoin import join_pages
 from autoscan_spark.operators.extract import drop_failed, extract_turns
 from autoscan_spark.operators.fold import fold_documents
 from autoscan_spark.plans.checkpoint import CheckpointedExtraction, with_bucket
-from autoscan_spark.plans.salting import partition_sizes, salted_repartition
 from autoscan_spark.sources.transcripts import synthesize_transcripts
 
 N_CONVS = 40
@@ -131,21 +131,22 @@ def test_lineage_counts_per_bucket_with_empty_buckets(spark, transcripts, tmp_pa
     assert {r["partition_id"]: r["rows_out"] for r in rows} == {b: want_out.get(b, 0) for b in range(n)}
 
 
-@pytest.mark.parametrize("mode,two_phase", [("high", False), ("low", True)])
-def test_checkpointed_matches_pipeline(spark, tmp_path_factory, mode, two_phase):
+@pytest.mark.parametrize("mode", ["high", "low"])
+def test_checkpointed_matches_pipeline(spark, tmp_path_factory, mode):
     """The checkpointed wave writes exactly what extract_pipeline computes
-    with the same mode and fold strategy."""
+    with the same mode."""
     from autoscan_spark.plans.pipeline import extract_pipeline
 
-    # high mode fails fast on kernel errors, like the reference
-    tr = synthesize_transcripts(spark, 24, seed=11).filter(~F.col("conv_id").endswith("-error"))
+    tr = synthesize_transcripts(spark, 24, seed=11)
+    if mode == "high":
+        # high mode fails fast on kernel errors, like the reference; low
+        # mode keeps the -error conversations so the drop path is compared
+        tr = tr.filter(~F.col("conv_id").endswith("-error"))
     base = str(tmp_path_factory.mktemp("ckpt_modes"))
-    ck = CheckpointedExtraction(
-        root=os.path.join(base, "c"), n_buckets=4, mode=mode, two_phase_fold=two_phase
-    )
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4, mode=mode)
     ck.run(tr, waves=2)
 
-    extracted, docs = extract_pipeline(tr, mode=mode, two_phase_fold=two_phase)
+    extracted, docs = extract_pipeline(tr, mode=mode)
     cols = list(extracted.columns)
     assert _read_sorted(spark, ck.extracted_path, cols) == sorted(
         tuple(r) for r in extracted.select(*cols).collect()
@@ -154,6 +155,22 @@ def test_checkpointed_matches_pipeline(spark, tmp_path_factory, mode, two_phase)
     assert _read_sorted(spark, ck.docs_path, dcols) == sorted(
         tuple(r) for r in docs.select(*dcols).collect()
     )
+
+
+def test_resume_refuses_other_turn_range(spark, transcripts, tmp_path_factory):
+    """The turn range is part of the checkpoint's identity: resuming a
+    range-limited run without the range must fail, not mix ranges across
+    buckets."""
+    base = str(tmp_path_factory.mktemp("ckpt_range"))
+    root = os.path.join(base, "c")
+    ranged = CheckpointedExtraction(root=root, n_buckets=4, last_turn=3)
+    assert ranged.run(transcripts, waves=4, max_waves=1) == 1
+    ex = spark.read.parquet(ranged.extracted_path)
+    assert ex.agg(F.max("turn_idx")).first()[0] <= 3
+    with pytest.raises(ValueError, match="last_turn"):
+        CheckpointedExtraction(root=root, n_buckets=4).run(transcripts)
+    # the same range resumes
+    assert ranged.run(transcripts) == 3
 
 
 @pytest.mark.parametrize("waves", [1, 2])
@@ -201,96 +218,25 @@ def test_bucket_is_conv_stable(spark, transcripts):
 # ---------------- skew ----------------
 
 
-def test_salted_repartition_bounds_skew(spark):
-    """One 5000-turn conversation among 1-turn conversations: salting must
-    spread the monster across partitions."""
-    skewed = synthesize_transcripts(
-        spark, 40, seed=3, skew_conv_turns=5000
-    )
-    from pyspark.sql import functions as F
-
-    salted = salted_repartition(skewed, 32, salts=16)
-    sizes = partition_sizes(salted)
-    total = sum(sizes)
-    assert total == skewed.count()
-
-    # unsalted baseline: repartition by conv_id puts all 5000 monster turns
-    # in ONE partition
-    unsalted_sizes = partition_sizes(skewed.repartition(32, F.col("conv_id")))
-    assert max(unsalted_sizes) >= 5000
-
-    # salted: the monster is spread over up to 16 salt groups; even with
-    # group→partition hash collisions no partition should hold more than a
-    # quarter of it
-    assert max(sizes) <= 5000 / 4, f"sizes={sorted(sizes, reverse=True)[:5]}"
-
-
-def test_two_phase_fold_on_skewed_conversation(spark):
+def test_fold_on_skewed_conversation(spark):
+    """One 3,000-turn conversation folds in one aggregation buffer to
+    exactly the reference join of its ok pages, in turn order."""
     skewed = synthesize_transcripts(spark, 10, seed=3, skew_conv_turns=3000)
     extracted = drop_failed(extract_turns(skewed, mode="low")).cache()
-    flat = {r["conv_id"]: r["markdown"] for r in fold_documents(extracted).collect()}
-    two = {
-        r["conv_id"]: r["markdown"]
-        for r in fold_documents(extracted, two_phase=True, chunk_size=256).collect()
-    }
+    hot = extracted.groupBy("conv_id").count().orderBy(F.desc("count")).first()
+    assert hot["count"] >= 1000
+    pages = [
+        r["extracted_text"]
+        for r in extracted.filter(F.col("conv_id") == hot["conv_id"])
+        .orderBy("turn_idx")
+        .collect()
+    ]
+    doc = fold_documents(extracted).filter(F.col("conv_id") == hot["conv_id"]).first()
     extracted.unpersist()
-    assert flat == two
+    assert doc["markdown"] == join_pages(pages)
+    assert doc["n_turns"] == len(pages) == hot["count"]
     # the monster conversation really is there
-    assert any(len(v) > 100_000 for v in two.values())
-
-
-def test_resolve_fold_strategy_auto(spark):
-    """'auto' picks flat for uniform corpora, two-phase when a sampled
-    estimate finds a hot conversation; bools pass through untouched."""
-    from pyspark.sql import functions as F
-
-    from autoscan_spark.operators.fold import resolve_fold_strategy
-
-    flat = spark.range(0, 20_000).select(
-        F.concat(F.lit("c"), (F.col("id") % 2000).cast("string")).alias("conv_id")
-    )
-    assert resolve_fold_strategy(flat, "auto", sample_fraction=0.05,
-                                 threshold_turns=1000) is False
-    skew = spark.range(0, 50_000).select(F.lit("hot").alias("conv_id")).union(flat)
-    assert resolve_fold_strategy(skew, "auto", sample_fraction=0.05,
-                                 threshold_turns=1000) is True
-    # non-auto values resolve without any action
-    assert resolve_fold_strategy(flat, True) is True
-    assert resolve_fold_strategy(flat, False) is False
-    # empty input → flat (no evidence of skew)
-    assert resolve_fold_strategy(flat.limit(0), "auto") is False
-
-
-def test_pipeline_auto_fold_output_invariant(spark):
-    """two_phase_fold='auto' must not change results — only the physical
-    fold strategy."""
-    from autoscan_spark.plans.pipeline import extract_pipeline
-
-    tr = synthesize_transcripts(spark, 10, seed=3, skew_conv_turns=3000)
-    _, auto_docs = extract_pipeline(tr, two_phase_fold="auto", fold_chunk_size=256)
-    _, flat_docs = extract_pipeline(tr, two_phase_fold=False)
-    a = {r["conv_id"]: r["markdown"] for r in auto_docs.collect()}
-    f = {r["conv_id"]: r["markdown"] for r in flat_docs.collect()}
-    assert a == f
-
-
-def test_salted_extraction_identical_results(spark):
-    """Salting changes physical partitioning only — extraction output must be
-    identical with and without it."""
-    from autoscan_spark.operators.extract import extract_turns
-
-    tr = synthesize_transcripts(spark, 30, seed=9)
-    plain = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["status"])
-        for r in extract_turns(tr, mode="low").collect()
-    }
-    salted = {
-        (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["status"])
-        for r in extract_turns(
-            salted_repartition(tr, 16, salts=8), mode="low"
-        ).collect()
-    }
-    assert plain == salted
+    assert len(doc["markdown"]) > 100_000
 
 
 def test_resume_refuses_old_lineage_schema(spark, tmp_path_factory):

@@ -99,22 +99,14 @@ def fold_input(spark):
     df.unpersist()
 
 
-def _folded(df, **kw):
-    return {r["conv_id"]: (r["markdown"], r["n_turns"]) for r in fold_documents(df, **kw).collect()}
+def _folded(df):
+    return {r["conv_id"]: (r["markdown"], r["n_turns"]) for r in fold_documents(df).collect()}
 
 
 def test_fold_matches_join_pages(fold_input):
     df, want = fold_input
     assert want["empty"] == ("", 4)
     assert _folded(df) == want
-
-
-def test_two_phase_fold_equivalent(fold_input):
-    """The distributed two-level fold must equal the flat Python fold for
-    any chunking, including chunks whose pages are all empty."""
-    df, want = fold_input
-    for chunk_size in (1, 2, 3, 7):
-        assert _folded(df, two_phase=True, chunk_size=chunk_size) == want, chunk_size
 
 
 def test_page_clean_is_linear_in_whitespace_runs(spark):

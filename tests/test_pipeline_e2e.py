@@ -218,17 +218,6 @@ def test_turn_range_pushdown(spark, transcripts):
     assert "turn_idx" in plan
 
 
-def test_two_phase_fold_matches_flat(spark, transcripts):
-    extracted = drop_failed(extract_turns(transcripts, mode="low")).cache()
-    flat = {r["conv_id"]: r["markdown"] for r in fold_documents(extracted).collect()}
-    two = {
-        r["conv_id"]: r["markdown"]
-        for r in fold_documents(extracted, two_phase=True, chunk_size=3).collect()
-    }
-    assert flat == two
-    extracted.unpersist()
-
-
 def test_conversation_metrics(spark, transcripts):
     extracted = extract_turns(transcripts, mode="low")
     m = conversation_metrics(extracted)

@@ -219,8 +219,6 @@ def test_stateful_stream_fold_converges_to_batch(spark, tmp_path_factory):
     equal the batch fold of all turns."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
     from autoscan_spark.operators.extract import drop_failed, extract_turns
     from autoscan_spark.operators.fold import fold_documents
     from autoscan_spark.streaming.stateful import (
@@ -237,9 +235,9 @@ def test_stateful_stream_fold_converges_to_batch(spark, tmp_path_factory):
     ckpt = versioned_checkpoint_dir(_os.path.join(base, "ckpt"))
     assert ckpt.endswith(f"state-v{STATE_VERSION}")
 
-    full = synthesize_transcripts(spark, 8, seed=17).filter(
-        ~F.col("conv_id").endswith("-error")
-    ).cache()
+    # 24 conversations include -error ones, whose failed turns the stream
+    # fold must drop like the batch fold does
+    full = synthesize_transcripts(spark, 24, seed=17).cache()
     # split each conversation's turns across the two batches
     full.filter("turn_idx % 2 = 1").write.mode("append").parquet(src)
 

@@ -12,7 +12,9 @@ pipeline crosses into Python once (the extraction ``mapInArrow``), not twice.
    scrub + a ``str.rstrip()``-exact right-strip).
 2. ``groupBy(conv_id)`` + ``array_sort(collect_list(struct(turn_idx,
    text)))``, with an empty page's struct null — ``collect_list`` skips the
-   nulls, so empty pages never enter the buffer.
+   nulls, so empty pages never enter the buffer. A checkpoint wave's input is
+   already clustered by bucket; there the key is ``(bucket, conv_id)`` and
+   the aggregation needs no shuffle.
 3. ``_join``: a ``transform`` over the sorted array picks each separator from
    the previous surviving page's last and the current page's first character,
    then ``array_join`` concatenates.
@@ -96,20 +98,28 @@ def _join(items: Column) -> Column:
     return F.array_join(F.transform(items, piece), "")
 
 
-def fold_documents(extracted: DataFrame) -> DataFrame:
+def fold_documents(extracted: DataFrame, clustered_by: str | None = None) -> DataFrame:
     """Fold extracted turns into one markdown row per conversation.
 
     Input must contain conv_id, turn_idx, extracted_text, in_chars, out_chars
     (failed rows should already be dropped / have failed the job).
+
+    ``clustered_by`` names a column that is a function of conv_id (the
+    checkpoint bucket). It leads the grouping key and is carried as the last
+    output column, so an input already hash-partitioned by it folds with no
+    shuffle.
     """
+    keys = ["conv_id"] if clustered_by is None else [clustered_by, "conv_id"]
     pages = extracted.select(
-        "conv_id", "turn_idx", _clean(F.col("extracted_text")).alias("text"), "in_chars", "out_chars"
+        *keys, "turn_idx", _clean(F.col("extracted_text")).alias("text"), "in_chars", "out_chars"
     )
     # an empty page becomes null, which collect_list skips
     item = F.when(F.col("text") != "", F.struct("turn_idx", "text"))
-    return pages.groupBy("conv_id").agg(
+    return pages.groupBy(*keys).agg(
         F.array_sort(F.collect_list(item)).alias("__items"),
         F.count("*").cast("int").alias("n_turns"),
         F.sum("in_chars").cast("long").alias("in_chars"),
         F.sum("out_chars").cast("long").alias("out_chars"),
-    ).select("conv_id", _join(F.col("__items")).alias("markdown"), "n_turns", "in_chars", "out_chars")
+    ).select(
+        "conv_id", _join(F.col("__items")).alias("markdown"), "n_turns", "in_chars", "out_chars", *keys[:-1]
+    )

@@ -22,6 +22,21 @@ partition overwrite, so re-processing a bucket that was half-written when the
 job died simply replaces it — idempotent resume, no duplicates (verified by
 the kill/resume tests in tests/test_checkpoint_skew.py).
 
+Wave plan: a wave is ``extract_pipeline(n_buckets=...)`` over the source
+filtered to its buckets. The kernel runs over the scan splits, then its
+output is repartitioned by bucket — the wave's one shuffle — and cached.
+Everything after reads that cache with no further exchange: the extracted
+write, the fold (grouped by ``(bucket, conv_id)``, which the cached hash
+partitioning already satisfies) and its write, and the per-bucket lineage
+counts. The lineage rows are then appended from an Arrow table, so the
+commit starts no Python worker.
+
+Scale rule: a bucket is written by exactly one task per wave, and each table
+gets one file per bucket per wave. A wave's write and fold parallelism is
+therefore at most its number of buckets (and at most
+``spark.sql.shuffle.partitions``): choose ``n_buckets`` for the write
+parallelism you want, and a bucket's share of a wave for the file size.
+
 ``waves`` controls how many buckets commit per Spark action: waves=1 is one
 big job (fastest), larger waves give finer resume granularity — the
 throughput/recoverability knob a 10^12-turn run tunes.
@@ -35,8 +50,10 @@ import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -48,7 +65,7 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.plans.pipeline import extract_pipeline
+from autoscan_spark.plans.pipeline import extract_pipeline, with_bucket
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
 # parquet, so appending a new schema next to old files would leave a
@@ -71,12 +88,7 @@ LINEAGE_SCHEMA = StructType(
         StructField("committed_at", TimestampType()),
     ]
 )
-
-
-def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-    )
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 @dataclass
@@ -142,10 +154,21 @@ class CheckpointedExtraction:
             json.dump(meta, f)
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
-        try:
-            rows = spark.read.parquet(self.lineage_path).select("partition_id").collect()
-        except Exception:
+        """Buckets with a lineage row. No lineage dir means none; any other
+        read failure raises, because resuming from a misread commit log
+        would redo committed buckets and append duplicate lineage rows.
+        The read takes ``LINEAGE_SCHEMA`` instead of inferring one, so a dir
+        with no data file yet (a first commit that died inside its write)
+        reads as none."""
+        path = spark._jvm.org.apache.hadoop.fs.Path(self.lineage_path)
+        if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
             return set()
+        rows = (
+            spark.read.schema(LINEAGE_SCHEMA)
+            .parquet(self.lineage_path)
+            .select("partition_id")
+            .collect()
+        )
         return {r["partition_id"] for r in rows}
 
     def lineage(self, spark: SparkSession) -> DataFrame:
@@ -197,25 +220,24 @@ class CheckpointedExtraction:
             first_turn=self.first_turn,
             last_turn=self.last_turn,
             polish=self.polish,
+            n_buckets=self.n_buckets,
         )
-        # cache the bucket-free extraction output: the docs plan contains
-        # this exact subtree, so the extracted sink, the fold and the lineage
-        # counts share one kernel pass. The bucket is a pure function of
-        # conv_id, so each output recomputes it on write.
+        # cache the bucket-clustered extraction output: the docs plan
+        # contains this exact subtree, so the extracted sink, the fold and
+        # the lineage counts share one kernel pass and one shuffle, and each
+        # bucket is written by one task
         extracted.cache()
         try:
             for df, path in ((extracted, self.extracted_path), (docs, self.docs_path)):
                 (
-                    with_bucket(df, self.n_buckets)
-                    .write.mode("overwrite")
+                    df.write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("bucket")
                     .parquet(path)
                 )
             counts = {
                 r["bucket"]: (r["rows_in"], r["rows_out"])
-                for r in with_bucket(extracted, self.n_buckets)
-                .groupBy("bucket")
+                for r in extracted.groupBy("bucket")
                 .agg(
                     F.count("*").alias("rows_in"),
                     F.count_if(F.col("status") == "ok").alias("rows_out"),
@@ -238,8 +260,14 @@ class CheckpointedExtraction:
             )
             for b in buckets
         ]
+        # from Arrow, not a Python list: the JVM reads the batches directly,
+        # so the commit starts no Python worker
+        lineage = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*lineage_rows), _LINEAGE_ARROW)],
+            schema=_LINEAGE_ARROW,
+        )
         # the lineage append is the COMMIT POINT: buckets become durable only
         # once their lineage rows land
-        spark.createDataFrame(lineage_rows, schema=LINEAGE_SCHEMA).coalesce(1).write.mode(
+        spark.createDataFrame(lineage, schema=LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.lineage_path)

@@ -193,9 +193,11 @@ def test_wave_reads_source_once(spark, transcripts, tmp_path_factory, waves):
 
 
 def test_one_wave_job_budget(spark, transcripts, tmp_path_factory):
-    """A fresh one-wave run takes at most 6 Spark jobs: the extracted and
-    doc_markdown writes, one lineage-count aggregation and the lineage
-    append (the shuffled steps add their AQE map-stage jobs)."""
+    """A fresh one-wave run takes at most 6 Spark jobs: the first write
+    builds the bucket-clustered cache (the repartition's map stage, the
+    cache itself, then the extracted write); the doc_markdown write, the
+    lineage-count aggregation and the lineage append then take one job each,
+    with no shuffle. A fresh run reads no lineage."""
     base = str(tmp_path_factory.mktemp("ckpt_jobs"))
     ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
     sc = spark.sparkContext
@@ -206,6 +208,42 @@ def test_one_wave_job_budget(spark, transcripts, tmp_path_factory):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("one_wave_job_budget")
     assert len(jobs) <= 6, f"{len(jobs)} jobs"
+
+
+def test_one_file_per_bucket_per_table(spark, transcripts, tmp_path_factory):
+    """One wave over a multi-partition input writes each bucket from one
+    task: every non-empty bucket dir of both tables holds one parquet
+    file."""
+    base = str(tmp_path_factory.mktemp("ckpt_files"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=8)
+    assert ck.run(transcripts.repartition(4), waves=1) == 8
+    for path in (ck.extracted_path, ck.docs_path):
+        dirs = [d for d in os.listdir(path) if d.startswith("bucket=")]
+        assert dirs
+        files = {d: [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")] for d in dirs}
+        assert all(len(f) == 1 for f in files.values()), files
+
+
+def test_unreadable_lineage_fails_the_run(spark, transcripts, tmp_path_factory):
+    """A lineage file that cannot be read must fail the run, not read as
+    "nothing committed": that would redo every committed bucket and append
+    a second lineage row for each."""
+    base = str(tmp_path_factory.mktemp("ckpt_badlin"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    assert ck.run(transcripts, waves=4, max_waves=1) == 1
+    with open(os.path.join(ck.lineage_path, "part-99999-planted.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="part-99999-planted"):
+        ck.run(transcripts)
+
+
+def test_lineage_dir_without_data_files_commits_nothing(spark, tmp_path_factory):
+    """A lineage dir holding no data file yet (the first commit died inside
+    its write, leaving only ``_temporary``) reads as no committed bucket."""
+    base = str(tmp_path_factory.mktemp("ckpt_tmplin"))
+    ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    os.makedirs(os.path.join(ck.lineage_path, "_temporary", "0"))
+    assert ck.committed_buckets(spark) == set()
 
 
 def test_bucket_is_conv_stable(spark, transcripts):

@@ -79,6 +79,30 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     assert "ArrowEvalPython" not in plan, plan
 
 
+def test_clustered_wave_fold_and_counts_do_not_shuffle(spark, tmp_path_factory):
+    """A checkpoint wave caches the kernel output repartitioned by bucket.
+    Above that cache, neither the fold (grouped by bucket and conv_id) nor
+    the per-bucket lineage count adds an exchange."""
+    from autoscan_spark.plans.pipeline import extract_pipeline
+
+    path = str(tmp_path_factory.mktemp("plan_wave")) + "/t"
+    synthesize_transcripts(spark, 20, seed=4).write.parquet(path)
+    extracted, docs = extract_pipeline(spark.read.parquet(path), mode="low", n_buckets=8)
+    extracted.cache()
+    try:
+        extracted.count()  # populate, as the wave's first write does
+        counts = extracted.groupBy("bucket").count()
+        for df in (docs, counts):
+            plan = _executed_plan(df)
+            above_cache = plan.split("InMemoryRelation")[0]
+            assert "InMemoryTableScan" in above_cache, plan
+            assert "Exchange" not in above_cache, plan
+            # the one shuffle is the repartition by bucket inside the cache
+            assert "Exchange hashpartitioning(bucket" in plan, plan
+    finally:
+        extracted.unpersist()
+
+
 def test_broadcast_join_for_small_dimension(spark, sf_dir):
     from autoscan_spark.plans.driver_queries import q_orders_by_nation
 

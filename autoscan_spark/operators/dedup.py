@@ -10,13 +10,10 @@ Scale design:
 - Candidate generation is an equi-join on (band_id, band_hash) — a standard
   shuffle join that AQE can handle; no O(n²) comparisons.
 - Duplicate-pair verification runs only on candidates.
-- Transitive duplicate chains resolve via connected components: min-label
-  propagation (``connected_components``, O(diameter) rounds, raises on
-  non-convergence) or large-star/small-star contraction
-  (``connected_components_star``, O(log n) rounds on any topology — what
-  ``dedup_connected`` uses; measured exact + faster on deep chains,
-  scripts/bench_cc.py). One-step ``survivors_from_pairs`` remains for the
-  no-chain case.
+- Transitive duplicate chains resolve via ``connected_components``: a
+  single-task union-find for pairs-sized edge sets, large-star/small-star
+  contraction (O(log n) rounds on any topology) above that. One-step
+  ``survivors_from_pairs`` remains for the no-chain case.
 """
 
 from __future__ import annotations
@@ -347,75 +344,12 @@ def survivors_from_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
     return df.join(losers, on=id_col, how="left_anti")
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 20, on_exhausted: str = "raise"
-) -> DataFrame:
-    """Duplicate clusters from a pair list: iterative min-label propagation.
-
-    Returns (id, component) where component = min id reachable from id.
-    Each iteration is two shuffle joins; round count is O(diameter), so this
-    fits typical near-dup graphs (short chains). For deep chains or unknown
-    topology use ``connected_components_star`` (O(log n) rounds, measured
-    exact + 5× faster on a 2000-diameter component — scripts/bench_cc.py).
-
-    ``on_exhausted``: if the loop hits ``max_iterations`` before the labels
-    stop changing, the result is WRONG (some nodes still carry non-minimal
-    labels) — ``"raise"`` (default) fails loudly; ``"warn"`` returns the
-    partial labels for callers that explicitly tolerate approximation.
-    """
-    if on_exhausted not in ("raise", "warn"):
-        raise ValueError(f"on_exhausted must be 'raise' or 'warn', got {on_exhausted!r}")
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    changed = None
-    for _ in range(max_iterations):
-        # candidate label for each node: min over neighbors' labels and own
-        neighbor_labels = (
-            edges.join(labels, edges.dst == labels.id)
-            .select(F.col("src").alias("id"), "component")
-        )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels.localCheckpoint(eager=True)  # truncate lineage growth
-        if changed == 0:
-            break
-    if changed:
-        msg = (
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations ({changed} labels still changing) — the graph's "
-            "diameter exceeds the round budget; labels are NOT component "
-            "minima. Use connected_components_star (O(log n) rounds) or "
-            "raise max_iterations."
-        )
-        if on_exhausted == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
-    return labels
-
-
 # Edge-count bound for the single-task union-find fast path of
-# connected_components_star. Near-dup pair sets are pairs-sized, not
+# connected_components. Near-dup pair sets are pairs-sized, not
 # corpus-sized (LSH bands emit only colliding docs), so even 100 TB corpora
 # routinely produce edge sets far under this; pure-Python union-find with
 # path halving runs ~1M edges/s, so the cap bounds the one task at ~1 s.
-# Overridable for testing/ops via SPARK_GRAFT_LOCAL_CC_MAX_EDGES.
+# 0 sends every edge set through the star rounds.
 _LOCAL_CC_MAX_EDGES = 1_000_000
 
 
@@ -469,50 +403,29 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    max_iterations: int = 50,
-    on_exhausted: str = "raise",
-    local_max_edges: int | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond" — a
-    public algorithm). Same output contract as ``connected_components``:
-    (id, component) with component = min id in the cluster.
+def connected_components(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
+    """Duplicate clusters from a pair list: (id, component) with
+    component = min id in the cluster.
 
-    Why a second implementation: min-label propagation converges in
-    O(diameter) rounds — fine for near-dup chains (short), but a pathological
-    duplicate graph (10⁶-long chain from pathological shingle collisions)
-    needs O(log n) rounds, which is what star-contraction guarantees. Each
-    round is two window-min passes (one shuffle each) — no join fan-out on
-    high-degree hubs, so it also behaves better when one document matches
-    millions (the celebrity-node case).
+    Size-adaptive: the distinct edge set is counted off the eager
+    checkpoint (a cheap cached scan) and, when it fits
+    ``_LOCAL_CC_MAX_EDGES``, components resolve in ONE single-task
+    union-find job (``_union_find_components``). Near-dup edge sets are
+    pairs-sized, so this is the common case at every scale. Edge sets past
+    the bound, which one task's dict could not hold, run alternating
+    large-star / small-star rounds (Kiveris et al., "Connected Components
+    in MapReduce and Beyond" — a public algorithm): O(log n) rounds on any
+    topology, each two window-min passes (one shuffle each) with no join
+    fan-out on high-degree hubs (the celebrity-node case). The same runtime
+    size-based routing AQE applies to join strategies.
 
     Convergence detection: edge-set fixpoint via (count, bit_xor of
     xxhash64(src,dst)) — one cheap aggregate per round, no ANSI overflow.
-
-    ``on_exhausted``: same contract as ``connected_components`` — if the
-    edge set is still changing when ``max_iterations`` runs out, the star
-    graph is not fully contracted and the labels are NOT component minima;
-    ``"raise"`` (default) fails loudly, ``"warn"`` returns partial labels.
-    (O(log n) rounds means 50 iterations covers ~2⁵⁰ nodes, so exhaustion in
-    practice signals a bug or an absurd budget, not a big graph.)
-
-    r07 size-adaptive fast path: the distinct edge set is counted off the
-    eager checkpoint (a cheap cached scan) and, when it fits
-    ``local_max_edges`` (default ``_LOCAL_CC_MAX_EDGES``, env override
-    ``SPARK_GRAFT_LOCAL_CC_MAX_EDGES``), components resolve in ONE
-    single-task union-find job (``_union_find_components`` — exact, same
-    min-id contract, differential-tested against the star rounds) instead
-    of O(log n) multi-job contraction rounds. Near-dup edge sets are
-    pairs-sized, so this is the common case at every scale; pathological
-    edge sets past the bound fall back to the star rounds unchanged —
-    the same runtime size-based routing AQE applies to join strategies.
+    If the edge set is still changing when ``max_iterations`` runs out the
+    labels are NOT component minima, so this raises. (O(log n) rounds means
+    50 iterations covers ~2⁵⁰ nodes, so exhaustion signals a bug, not a big
+    graph.)
     """
-    if on_exhausted not in ("raise", "warn"):
-        raise ValueError(f"on_exhausted must be 'raise' or 'warn', got {on_exhausted!r}")
-    import os
-
     from pyspark.sql.window import Window
 
     edges = (
@@ -521,13 +434,7 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if local_max_edges is None:
-        local_max_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_CC_MAX_EDGES", str(_LOCAL_CC_MAX_EDGES)
-            )
-        )
-    if local_max_edges > 0 and edges.count() <= local_max_edges:
+    if _LOCAL_CC_MAX_EDGES > 0 and edges.count() <= _LOCAL_CC_MAX_EDGES:
         return _union_find_components(edges)
 
     def _signature(e: DataFrame):
@@ -561,26 +468,19 @@ def connected_components_star(
         )
 
     sig = _signature(edges)
-    converged = False
     for _ in range(max_iterations):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         new_sig = _signature(edges)
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
-    if not converged:
-        msg = (
-            f"connected_components_star did not converge in {max_iterations} "
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
             "iterations (edge set still changing) — labels are NOT component "
             "minima. Raise max_iterations (O(log n) rounds suffice, so this "
             "signals a pathological budget)."
         )
-        if on_exhausted == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
 
     roots = edges.select(F.col("dst").alias("id")).distinct().withColumn(
         "component", F.col("id")
@@ -594,9 +494,8 @@ def dedup_connected(
 ) -> DataFrame:
     """Cluster-aware dedup: keep the min id of every connected duplicate
     cluster (handles transitive chains a→b→c even when (a,c) was never a
-    candidate pair). Uses star contraction — exact in O(log n) rounds
-    regardless of chain depth (scripts/bench_cc.py)."""
-    comps = connected_components_star(pairs)
+    candidate pair), exact regardless of chain depth."""
+    comps = connected_components(pairs)
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
@@ -1629,20 +1528,20 @@ def cluster_size_stats(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Duplicate-cluster size histogram: resolve near-dup pairs to
-    connected components (star contraction), attach every un-paired
+    connected components (``connected_components``), attach every un-paired
     document as its own singleton cluster, and count clusters by size —
     the "how duplicated is this corpus" diagnostic every dedup run
     reports (cluster-size tail ≙ boilerplate storms; singleton share ≙
     unique mass).
 
-    Shape: star-contraction rounds on the (tiny) pair set, then ONE
+    Shape: ``connected_components`` on the (tiny) pair set, then ONE
     broadcast left-join of the corpus ids against the component map
     (pairs-sized, never corpus-sized) and two small groupBys. The corpus
     itself shuffles once on the component key.
 
     Output: (``cluster_size`` bigint, ``n_clusters`` bigint).
     """
-    comps = connected_components_star(pairs)
+    comps = connected_components(pairs)
     return (
         df.select(qcol(id_col).alias("__id"))
         .join(
@@ -1675,7 +1574,7 @@ def cluster_representatives(
     total for any exact-integer quality column (float qualities should
     be fixed to integers first, per the repo's ppm convention).
 
-    Shape: star-contraction components (O(log n) rounds), a left join
+    Shape: ``connected_components`` over the pairs, a left join
     to attach the component label (unpaired docs coalesce to their own
     id), then ONE component-keyed row_number window. No collect, no
     per-cluster loop.
@@ -1686,7 +1585,7 @@ def cluster_representatives(
     from pyspark.sql.window import Window
 
     reject_reserved(df, ("__comp", "__rn"), "cluster_representatives")
-    comps = connected_components_star(pairs).withColumnRenamed("id", "__cid")
+    comps = connected_components(pairs).withColumnRenamed("id", "__cid")
     labeled = (
         df.select(qcol(id_col), qcol(quality_col))
         .join(comps, qcol(id_col) == F.col("__cid"), how="left")

@@ -507,7 +507,7 @@ def cluster_split(
     salt: str = "cluster-split-v1",
 ) -> DataFrame:
     """Leakage-safe train/val/test split at DUPLICATE-CLUSTER granularity:
-    near-dup pairs resolve to connected components (star contraction), and
+    near-dup pairs resolve to ``dedup.connected_components``, and
     the deterministic md5 split key is the CLUSTER id, so two near-
     duplicate documents can never straddle a split boundary — the
     contamination mode a plain per-document ``hash_split`` cannot prevent
@@ -521,9 +521,9 @@ def cluster_split(
 
     Output: (id_col, ``cluster_id``, ``split``).
     """
-    from autoscan_spark.operators.dedup import connected_components_star
+    from autoscan_spark.operators.dedup import connected_components
 
-    comps = connected_components_star(pairs)
+    comps = connected_components(pairs)
     keyed = (
         df.select(qcol(id_col))
         .join(F.broadcast(comps), qcol(id_col) == F.col("id"), "left")

@@ -44,6 +44,7 @@ throughput/recoverability knob a 10^12-turn run tunes.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import time
@@ -91,6 +92,15 @@ LINEAGE_SCHEMA = StructType(
 _LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the JVM's Hadoop client:
+    the same resolution Spark's own reads and writes use, so a URI root
+    (``file://``, ``s3a://``, ``hdfs://``) and a relative one land where the
+    data does. Metadata calls only; starts no Spark job."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 @dataclass
 class CheckpointedExtraction:
     root: str
@@ -116,13 +126,30 @@ class CheckpointedExtraction:
     def _meta_path(self) -> str:
         return os.path.join(self.root, "_checkpoint_meta.json")
 
-    def _check_meta(self) -> None:
+    def _read_meta(self, spark: SparkSession) -> dict | None:
+        fs, path = _hadoop_path(spark, self._meta_path)
+        if not fs.exists(path):
+            return None
+        stream = fs.open(path)
+        try:
+            return json.loads(bytes(stream.readAllBytes()))
+        finally:
+            stream.close()
+
+    def _write_meta(self, spark: SparkSession, meta: dict) -> None:
+        fs, path = _hadoop_path(spark, self._meta_path)
+        out = fs.create(path, True)
+        try:
+            out.write(json.dumps(meta).encode())
+        finally:
+            out.close()
+
+    def _check_meta(self, spark: SparkSession) -> None:
         """Bucket count, mode, polish and the turn range are part of the
         checkpoint's identity: changing them across runs would silently mix
         bucket layouts, polished/unpolished documents or turn ranges and
-        corrupt resume semantics — fail loudly instead."""
-        import json
-
+        corrupt resume semantics — fail loudly instead. The meta file is
+        read and written on the data's filesystem (``_hadoop_path``)."""
         meta = {
             "n_buckets": self.n_buckets,
             "mode": self.mode,
@@ -131,9 +158,8 @@ class CheckpointedExtraction:
             "last_turn": self.last_turn,
             "lineage_version": LINEAGE_VERSION,
         }
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                existing = json.load(f)
+        existing = self._read_meta(spark)
+        if existing is not None:
             existing.setdefault("polish", False)  # pre-polish checkpoints
             # pre-range checkpoints were written by runs without a range
             existing.setdefault("first_turn", None)
@@ -149,30 +175,23 @@ class CheckpointedExtraction:
                     f"fresh output root."
                 )
             return
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(meta, f)
+        self._write_meta(spark, meta)
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
         """Buckets with a lineage row. No lineage dir means none; any other
         read failure raises, because resuming from a misread commit log
-        would redo committed buckets and append duplicate lineage rows.
-        The read takes ``LINEAGE_SCHEMA`` instead of inferring one, so a dir
-        with no data file yet (a first commit that died inside its write)
-        reads as none."""
-        path = spark._jvm.org.apache.hadoop.fs.Path(self.lineage_path)
-        if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        would redo committed buckets and append duplicate lineage rows."""
+        fs, path = _hadoop_path(spark, self.lineage_path)
+        if not fs.exists(path):
             return set()
-        rows = (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(self.lineage_path)
-            .select("partition_id")
-            .collect()
-        )
-        return {r["partition_id"] for r in rows}
+        return {r["partition_id"] for r in self.lineage(spark).select("partition_id").collect()}
 
     def lineage(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.lineage_path)
+        """The commit log, read with ``LINEAGE_SCHEMA`` instead of an
+        inferred schema: no schema-inference job, and a dir with no data
+        file yet (a first commit that died inside its write) reads as
+        empty."""
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
 
     def run(
         self,
@@ -187,7 +206,7 @@ class CheckpointedExtraction:
         of buckets committed by THIS call.
         """
         spark = transcripts.sparkSession
-        self._check_meta()
+        self._check_meta(spark)
         done = self.committed_buckets(spark)
         remaining = [b for b in range(self.n_buckets) if b not in done]
         if not remaining:

@@ -4627,15 +4627,14 @@ def q_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_label_noise(emb, emb.filter(F.col("vec_id") < 200), k=5)
 
 
-# Oracles STAGED for the r7 window rotation. The current 50-slot window
-# is fully claimed by r6-fresh queries, and the frozen closure test
-# (tests/test_driver_contract.py::test_oracle_closure_over_rounds)
-# rightly refuses an oracle-backed query with neither a driver-green row
-# nor a window slot — so the queries below ship rows-only THIS round and
-# their verified DuckDB oracles move into ORACLES when r7 rotates them
-# into the window (each already passes scripts/oracle_gate.py locally
-# when temporarily registered).
-_Q_LENGTH_DECILES_SQL_R7 = """
+# Verified DuckDB oracles for the rows-only queries at the end of
+# QUERIES. They stay out of ORACLES (and so out of oracle_sql()): the
+# 50-slot window is full, and test_oracle_closure_over_rounds refuses an
+# oracle-backed query with neither a recorded green run nor a window slot.
+# tests/test_driver_contract.py::test_query_matches_oracle checks these
+# queries against them all the same.
+STAGED_ORACLES: Dict[str, str] = {
+    "length_deciles": """
 WITH t AS (
   SELECT lang, n_chars,
          ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
@@ -4646,17 +4645,15 @@ SELECT lang, CAST(tile AS INTEGER) AS tile,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(min(n_chars) AS BIGINT) AS min_len,
        CAST(max(n_chars) AS BIGINT) AS max_len
-FROM t GROUP BY lang, tile"""
-
-_Q_PARTS_PER_SUPPLIER_SQL_R7 = """
+FROM t GROUP BY lang, tile""",
+    "parts_per_supplier": """
 SELECT p_type, p_size,
        CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 WHERE p_brand <> 'Brand#1' AND p_size <= 15
-GROUP BY p_type, p_size"""
-
-_Q_WEEKLY_CHURN_SQL_R7 = """
+GROUP BY p_type, p_size""",
+    "weekly_churn": """
 WITH uw AS (
   SELECT DISTINCT user_id,
          CAST(date_trunc('week', ts) AS DATE) AS wk
@@ -4674,9 +4671,8 @@ SELECT strftime(wk, '%Y-%m-%d') AS week,
              * sum(CASE WHEN nw IS NULL OR nw > wk + INTERVAL 7 DAY
                         THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
          AS churn_ppm
-FROM nxt, mx WHERE wk < m GROUP BY wk"""
-
-_Q_BEST_OF_CLUSTER_SQL_R7 = r"""
+FROM nxt, mx WHERE wk < m GROUP BY wk""",
+    "best_of_cluster": r"""
 WITH RECURSIVE sh AS (
   SELECT doc_id,
     list_distinct(CASE WHEN len(ws) >= 3 THEN
@@ -4714,15 +4710,13 @@ WITH RECURSIVE sh AS (
 )
 SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
        CAST(csize AS BIGINT) AS cluster_size
-FROM ranked WHERE rn = 1 ORDER BY doc_id"""
-
-_Q_SAMPLE_EXACT_N_SQL_R7 = """
+FROM ranked WHERE rn = 1 ORDER BY doc_id""",
+    "sample_exact_n": """
 SELECT doc_id, lang, n_chars
 FROM documents
 ORDER BY md5('sample-v1' || CAST(doc_id AS VARCHAR)), doc_id
-LIMIT 500"""
-
-_Q_KNN_LABEL_NOISE_SQL_R7 = """
+LIMIT 500""",
+    "knn_label_noise": """
 WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS own_label,
          c.vec_id AS neighbor_id, c.label AS nl,
@@ -4746,8 +4740,8 @@ SELECT query_id AS vec_id, own_label, nl AS knn_label,
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY n_votes DESC, nl) rv
       FROM votes)
-WHERE rv = 1"""
-_Q_INTEREVENT_STATS_SQL_R7 = """
+WHERE rv = 1""",
+    "interevent_stats": """
 WITH e AS (
   -- floor, not round: Spark's timestamp->long cast floors the
   -- sub-second part, DuckDB's ::BIGINT would round it
@@ -4761,8 +4755,8 @@ SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
        CAST(min(gap) AS BIGINT) AS min_gap_s,
        CAST(max(gap) AS BIGINT) AS max_gap_s,
        CAST(sum(gap) // count(*) AS BIGINT) AS avg_gap_s
-FROM g WHERE gap IS NOT NULL GROUP BY user_id"""
-
+FROM g WHERE gap IS NOT NULL GROUP BY user_id""",
+}
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ORDER IS LOAD-BEARING: the round driver records correctness for the
@@ -4935,8 +4929,7 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_topk_ivf": q_embedding_topk_ivf,
     "pack_sequences": q_pack_sequences,
     "semantic_dedup": q_semantic_dedup,
-    # rows-only this round; oracles staged for the r7 rotation (see the
-    # _Q_*_SQL_R7 constants above)
+    # rows-only in oracle_sql(); checked against STAGED_ORACLES in tests
     "tool_call_stats": q_tool_call_stats,
     "interevent_stats": q_interevent_stats,
     "length_deciles": q_length_deciles,

@@ -273,27 +273,6 @@ Reading these numbers (headline {eff} vs machine-probe ratio
 
 Reproduce: `python scripts/scaling.py --n-convs {args.n_convs} --n {args.n}`
 (generated {result['generated_at']})
-
-## Connected-components variants (scripts/bench_cc.py)
-
-158,385-edge duplicate graph (random 2-50-node clusters + one 2,000-node
-chain + one celebrity hub with ~8k neighbors), local[32], verified against a
-driver-side union-find ground truth (92,124 components):
-
-| variant | wall (s) | exact vs ground truth | notes |
-|---|---|---|---|
-| star contraction (`connected_components_star`) | 27.0 | **yes** | O(log n) rounds; ~10 rounds of 2 window passes |
-| min-label propagation (`connected_components`, 60-round cap) | 109.6 | no (94,064 comps) | O(diameter): the 2,000-chain needs > 60 rounds |
-
-Scale point: at **786,822 edges** (5,000-node chain, 460,847 true components)
-star contraction stays exact at 44.9s — 5× the edges for 1.7× the wall
-(rounds grow with log of the longest chain, not edge count); min-label at the
-same cap is 314s and still wrong.
-
-Consequence wired into the library: `dedup_connected` uses star contraction,
-and `connected_components` now RAISES when it exhausts `max_iterations`
-without converging (partial labels are wrong labels) unless the caller opts
-into `on_exhausted="warn"`. (Measured round 2; re-run bench_cc.py to refresh.)
 """
         )
         sfscale = _sfscale_section()

@@ -244,6 +244,7 @@ def test_lineage_dir_without_data_files_commits_nothing(spark, tmp_path_factory)
     ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
     os.makedirs(os.path.join(ck.lineage_path, "_temporary", "0"))
     assert ck.committed_buckets(spark) == set()
+    assert ck.lineage(spark).count() == 0
 
 
 def test_bucket_is_conv_stable(spark, transcripts):
@@ -281,19 +282,28 @@ def test_resume_refuses_old_lineage_schema(spark, tmp_path_factory):
     """A checkpoint written before the lineage-schema change (v1, no
     lineage_version in meta) must be refused, not silently appended to
     with a second parquet schema."""
-    import json
-
-    import pytest
-
     base = str(tmp_path_factory.mktemp("ck_ver"))
     ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
-    ck._check_meta()  # writes current meta
-    with open(ck._meta_path) as f:
-        meta = json.load(f)
+    ck._check_meta(spark)  # writes current meta
+    meta = ck._read_meta(spark)
     assert meta["lineage_version"] >= 2
     del meta["lineage_version"]  # simulate a pre-versioning checkpoint
-    with open(ck._meta_path, "w") as f:
-        json.dump(meta, f)
+    ck._write_meta(spark, meta)
     fresh = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
     with pytest.raises(ValueError, match="lineage"):
-        fresh._check_meta()
+        fresh._check_meta(spark)
+
+
+def test_meta_of_uri_root_is_found_from_any_cwd(spark, tmp_path_factory, monkeypatch):
+    """The identity check reads the meta from the data's filesystem: a
+    ``file://`` root checked from one working directory must refuse a
+    different bucket count checked from another, rather than write a
+    second meta under ``<cwd>/file:/...``."""
+    base = str(tmp_path_factory.mktemp("ck_uri"))
+    root = "file://" + os.path.join(base, "c")
+    monkeypatch.chdir(tmp_path_factory.mktemp("cwd_a"))
+    CheckpointedExtraction(root=root, n_buckets=4)._check_meta(spark)
+    monkeypatch.chdir(tmp_path_factory.mktemp("cwd_b"))
+    with pytest.raises(ValueError, match="n_buckets"):
+        CheckpointedExtraction(root=root, n_buckets=8)._check_meta(spark)
+    assert os.path.exists(os.path.join(base, "c", "_checkpoint_meta.json"))

@@ -654,103 +654,84 @@ def test_connected_components_transitive_chain(spark):
     assert kept == {1, 5, 7, 8}
 
 
-def test_connected_components_star_matches_min_label(spark):
-    """Star-contraction CC must agree with min-label propagation on random
-    graphs (differential fuzz) — both produce (id, min id of component)."""
+def _reference_components(edges):
+    """Pure-Python union-find: {id: min id of its component}."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_matches_reference(spark, monkeypatch):
+    """Both paths of connected_components, the default routing (the
+    single-task union-find for pairs-sized edge sets) and the distributed
+    star rounds (the edge-count bound forced to 0), must give (id, min id
+    of component) on random graphs (differential fuzz) and on the empty
+    pair set."""
     import random
 
-    from autoscan_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from autoscan_spark.operators import dedup
 
-    rng = random.Random(7)
-    for trial in range(3):
-        n_nodes, n_edges = 60, 45
-        raw = [
-            tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)
-        ]
-        pairs = spark.createDataFrame(
-            pd.DataFrame(raw, columns=["id_a", "id_b"])
-        )
-        a = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
-        b = {r["id"]: r["component"] for r in connected_components_star(pairs).collect()}
-        assert a == b, f"trial {trial}"
+    graphs = []
+    for seed, n_nodes, n_edges in ((7, 60, 45), (11, 80, 60)):
+        rng = random.Random(seed)
+        for _ in range(3):
+            graphs.append(
+                [tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)]
+            )
+    graphs.append([])
+
+    def run(pairs):
+        return {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+
+    frames = [spark.createDataFrame(raw, "id_a long, id_b long") for raw in graphs]
+    for bound in (dedup._LOCAL_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", bound)
+        for i, (raw, pairs) in enumerate(zip(graphs, frames)):
+            assert run(pairs) == _reference_components(raw), f"bound {bound}, graph {i}"
 
 
-def test_connected_components_star_deep_chain(spark):
-    """A 300-node chain through the DISTRIBUTED star rounds
-    (local_max_edges=0 disables the union-find fast path): contraction
-    converges in O(log n) rounds (~9 here), where min-label propagation
-    needs O(diameter)."""
-    from autoscan_spark.operators.dedup import connected_components_star
+def test_connected_components_deep_chain(spark, monkeypatch):
+    """A 300-node chain through the DISTRIBUTED star rounds (the union-find
+    fast path disabled): contraction converges in O(log n) rounds (~9
+    here), not O(diameter)."""
+    from autoscan_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
     chain = spark.createDataFrame(
         pd.DataFrame([(i, i + 1) for i in range(300)], columns=["id_a", "id_b"])
     )
     comps = {
         r["id"]: r["component"]
-        for r in connected_components_star(
-            chain, max_iterations=15, local_max_edges=0
-        ).collect()
+        for r in dedup.connected_components(chain, max_iterations=15).collect()
     }
     assert set(comps) == set(range(301))
     assert all(c == 0 for c in comps.values())
 
 
-def test_connected_components_local_unionfind_matches_star(spark):
-    """r07 fast path: the single-task union-find must agree with the
-    distributed star rounds on random graphs (differential fuzz), and the
-    default routing must take it for pairs-sized edge sets."""
-    import random
+def test_connected_components_raises_on_exhaustion(spark, monkeypatch):
+    """Partial labels are WRONG labels: exhausting max_iterations before the
+    edge-set fixpoint must raise. Applies to the distributed star rounds
+    (the union-find fast path is exact in one job and cannot exhaust), so
+    the fast path is disabled here."""
+    from autoscan_spark.operators import dedup
 
-    from autoscan_spark.operators.dedup import connected_components_star
-
-    rng = random.Random(11)
-    for trial in range(3):
-        n_nodes, n_edges = 80, 60
-        raw = [
-            tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)
-        ]
-        pairs = spark.createDataFrame(
-            pd.DataFrame(raw, columns=["id_a", "id_b"])
-        )
-        local = {
-            r["id"]: r["component"]
-            for r in connected_components_star(pairs).collect()  # fast path
-        }
-        star = {
-            r["id"]: r["component"]
-            for r in connected_components_star(
-                pairs, local_max_edges=0
-            ).collect()
-        }
-        assert local == star, f"trial {trial}"
-    # empty pair set: both paths return an empty frame
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(empty).count() == 0
-
-
-def test_connected_components_star_raises_on_exhaustion(spark):
-    """Same contract as connected_components: partial labels are WRONG
-    labels — exhausting max_iterations before the edge-set fixpoint must
-    raise by default (warn-and-return only on explicit opt-in). Applies
-    to the distributed star rounds (the union-find fast path is exact in
-    one job and cannot exhaust), so the fast path is disabled here."""
-    from autoscan_spark.operators.dedup import connected_components_star
-
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
     chain = spark.createDataFrame(
         pd.DataFrame([(i, i + 1) for i in range(300)], columns=["id_a", "id_b"])
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(chain, max_iterations=1, local_max_edges=0)
-    with pytest.warns(UserWarning, match="did not converge"):
-        partial = connected_components_star(
-            chain, max_iterations=1, on_exhausted="warn", local_max_edges=0
-        )
-        assert partial.count() > 0
-    with pytest.raises(ValueError, match="on_exhausted"):
-        connected_components_star(chain, on_exhausted="silently_wrong")
+        dedup.connected_components(chain, max_iterations=1)
 
 
 def test_embedding_near_dups_lsh_vs_exact(spark, vectors):
@@ -1134,10 +1115,10 @@ def test_near_dup_survivors_pinned(spark, sf_dir):
         .distinct()
         .count()
     )
-    from autoscan_spark.operators.dedup import connected_components_star
+    from autoscan_spark.operators.dedup import connected_components
 
     n_clusters = (
-        connected_components_star(pairs).select("component").distinct().count()
+        connected_components(pairs).select("component").distinct().count()
     )
     assert kept.count() == n_docs - (members - n_clusters)
     assert kept.count() == 476  # pinned at sf0.001 (500 docs, 24 dropped)

@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from autoscan_spark.plans.driver_queries import STAGED_ORACLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
@@ -95,7 +96,7 @@ def test_entry_smoke(spark):
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql().get(name)
+    sql = entry_mod.oracle_sql().get(name) or STAGED_ORACLES.get(name)
     df = q(spark, SF_DIR)
     spark_rows = [tuple(row) for row in df.collect()]
     assert len(spark_rows) > 0, f"{name}: empty result"

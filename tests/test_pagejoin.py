@@ -109,6 +109,35 @@ def test_fold_matches_join_pages(fold_input):
     assert _folded(df) == want
 
 
+def test_stream_fold_matches_batch_fold(spark, fold_input, tmp_path):
+    """The streaming fold (applyInPandasWithState over the Python
+    ``join_pages``) must give every conversation the markdown and turn count
+    the batch fold is checked against above, so the two folds cannot
+    drift."""
+    from autoscan_spark.streaming.stateful import stream_fold_documents
+
+    df, want = fold_input
+    src = str(tmp_path / "src")
+    ok = df.withColumn("status", F.lit("ok"))
+    ok.write.parquet(src)
+    latest = {}
+
+    def collect_batch(batch_df, batch_id):
+        for r in batch_df.collect():  # update mode: later emissions win
+            latest[r["conv_id"]] = (r["markdown"], r["n_turns"])
+
+    q = (
+        stream_fold_documents(spark.readStream.schema(ok.schema).parquet(src))
+        .writeStream.foreachBatch(collect_batch)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert latest == want
+
+
 def test_page_clean_is_linear_in_whitespace_runs(spark):
     """The right-strip regex must not rescan a whitespace run once per
     position: doubling the run may at most ~double the time (measured with

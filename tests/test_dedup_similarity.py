@@ -672,33 +672,50 @@ def _reference_components(edges):
     return {x: find(x) for x in parent}
 
 
-def test_connected_components_matches_reference(spark, monkeypatch):
-    """Both paths of connected_components, the default routing (the
-    single-task union-find for pairs-sized edge sets) and the distributed
-    star rounds (the edge-count bound forced to 0), must give (id, min id
-    of component) on random graphs (differential fuzz) and on the empty
-    pair set."""
+def _random_graphs(seed, n_nodes, n_edges, n_graphs=3):
     import random
 
+    rng = random.Random(seed)
+    return [
+        [tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)]
+        for _ in range(n_graphs)
+    ]
+
+
+def _components(dedup, pairs):
+    return {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+
+
+def test_connected_components_star_matches_min_label(spark, monkeypatch):
+    """The distributed star rounds (the edge-count bound forced to 0) must
+    give the min-label answer, (id, min id of component), on random graphs
+    (differential fuzz against a pure-Python union-find)."""
     from autoscan_spark.operators import dedup
 
-    graphs = []
-    for seed, n_nodes, n_edges in ((7, 60, 45), (11, 80, 60)):
-        rng = random.Random(seed)
-        for _ in range(3):
-            graphs.append(
-                [tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)]
-            )
-    graphs.append([])
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
+    for trial, raw in enumerate(_random_graphs(7, 60, 45)):
+        pairs = spark.createDataFrame(raw, "id_a long, id_b long")
+        assert _components(dedup, pairs) == _reference_components(raw), f"trial {trial}"
 
-    def run(pairs):
-        return {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
 
-    frames = [spark.createDataFrame(raw, "id_a long, id_b long") for raw in graphs]
+def test_connected_components_local_unionfind_matches_star(spark, monkeypatch):
+    """The single-task union-find, which the default routing takes for
+    pairs-sized edge sets, must agree with the distributed star rounds and
+    the pure-Python reference on random graphs (differential fuzz), and both
+    paths must return an empty frame for the empty pair set."""
+    from autoscan_spark.operators import dedup
+
+    for trial, raw in enumerate(_random_graphs(11, 80, 60)):
+        pairs = spark.createDataFrame(raw, "id_a long, id_b long")
+        local = _components(dedup, pairs)  # fast path
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
+            star = _components(dedup, pairs)
+        assert local == star == _reference_components(raw), f"trial {trial}"
+    empty = spark.createDataFrame([], "id_a long, id_b long")
     for bound in (dedup._LOCAL_CC_MAX_EDGES, 0):
         monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", bound)
-        for i, (raw, pairs) in enumerate(zip(graphs, frames)):
-            assert run(pairs) == _reference_components(raw), f"bound {bound}, graph {i}"
+        assert dedup.connected_components(empty).count() == 0, f"bound {bound}"
 
 
 def test_connected_components_deep_chain(spark, monkeypatch):

@@ -97,17 +97,6 @@ def _samples_to_rows(sub: np.ndarray, depth: int) -> np.ndarray:
     return np.packbits(bits, axis=1)
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (PNG spec §6.6): nearest of left/up/upper-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _iter_chunks(payload: bytes):
     pos = len(_SIGNATURE)
     while pos + 8 <= len(payload):

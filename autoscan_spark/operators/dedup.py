@@ -744,29 +744,19 @@ def line_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     line_sep: str = "\n",
-    strategy: str = "window",
 ) -> DataFrame:
     """Corpus-GLOBAL line deduplication (the C4/RefinedWeb pass): split
     every document into lines, keep only the FIRST occurrence corpus-wide
     of each distinct line (first = smallest ``(id, position)``), and
     reassemble each document from its surviving lines in original order.
 
-    Shape at scale, by ``strategy``:
-
-    - ``"window"`` (default): explode → ``row_number() over (partition by
-      unhex(md5(line)) order by id, pos)`` — ONE wide shuffle on a 128-bit
-      binary key (the single-pass window form exact_dedup uses; the
-      groupBy-then-join-back alternative re-evaluates the explode on both
-      join branches). Right default when no single line dominates.
-    - ``"preagg"`` (hot-line fallback): ``groupBy(unhex(md5(line)))`` with
-      ``min(struct(id, pos, line))``. The winner struct carries the line
-      text, so the aggregate's output rows ARE the kept lines — no join
-      back. Map-side partial aggregation reduces a line repeated 10⁹
-      times across the corpus to ONE candidate row per map partition
-      before the shuffle, so the hot key that would bend a window
-      partition (site-wide boilerplate) never concentrates. Costs a
-      pre-shuffle hash map per task; identical output
-      (differential-tested).
+    Shape at scale: explode → ``groupBy(unhex(md5(line)))`` with
+    ``min(struct(id, pos, line))`` — ONE wide shuffle on a 128-bit binary
+    key. The winner struct carries the line text, so the aggregate's
+    output rows ARE the kept lines — no join back. Map-side partial
+    aggregation reduces a line repeated 10⁹ times across the corpus to
+    ONE candidate row per map partition before the shuffle, so a hot line
+    (site-wide boilerplate) never concentrates on one reducer.
 
     Reassembly is one ``groupBy(id)`` with
     ``array_sort(collect_list(struct(pos, line)))``.
@@ -775,46 +765,32 @@ def line_dedup(
     structure (paragraph separators), not content — deduplicating them
     globally would strip every blank line after the corpus's first and
     merge paragraphs. The exemption also removes what would otherwise be
-    the hottest window partition (the empty-line hash).
+    the hottest key (the empty-line hash).
 
     Output: one row per input document — (id_col, ``n_lines_total``,
     ``n_lines_kept``, ``dedup_text``). Documents whose every line occurred
     earlier elsewhere keep 0 lines and an empty ``dedup_text``; NULL-text
     docs yield (0, 0, NULL).
     """
-    from pyspark.sql.window import Window
-
-    if strategy not in ("window", "preagg"):
-        raise ValueError(f"strategy must be 'window' or 'preagg', got {strategy!r}")
     lines, split_col = _lines_frame(df, text_col, id_col, line_sep, spread=False)
-    nonblank = lines.filter(F.expr("trim(__line) != ''"))
-    if strategy == "window":
-        w = Window.partitionBy(F.expr("unhex(md5(__line))")).orderBy(
-            qcol(id_col).asc(), F.col("__pos").asc()
+    nonblank_first = (
+        lines.filter(F.expr("trim(__line) != ''"))
+        .groupBy(F.expr("unhex(md5(__line))").alias("__h"))
+        .agg(
+            F.min(
+                F.struct(
+                    qcol(id_col).alias("__wid"),
+                    F.col("__pos").alias("__wpos"),
+                    F.col("__line").alias("__wline"),
+                )
+            ).alias("__w")
         )
-        nonblank_first = (
-            nonblank.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        .select(
+            F.col("__w.__wid").alias(id_col),
+            F.col("__w.__wpos").alias("__pos"),
+            F.col("__w.__wline").alias("__line"),
         )
-    else:
-        nonblank_first = (
-            nonblank.groupBy(F.expr("unhex(md5(__line))").alias("__h"))
-            .agg(
-                F.min(
-                    F.struct(
-                        qcol(id_col).alias("__wid"),
-                        F.col("__pos").alias("__wpos"),
-                        F.col("__line").alias("__wline"),
-                    )
-                ).alias("__w")
-            )
-            .select(
-                F.col("__w.__wid").alias(id_col),
-                F.col("__w.__wpos").alias("__pos"),
-                F.col("__w.__wline").alias("__line"),
-            )
-        )
+    )
     blanks = lines.filter(F.expr("trim(__line) = ''"))
     kept = _reassemble_lines(
         nonblank_first.unionByName(blanks), id_col, line_sep, "dedup_text"

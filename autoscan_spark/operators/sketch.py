@@ -9,8 +9,8 @@ shouldn't pay a full-vocabulary shuffle to get it. The CMS table is
 ``depth × width`` counters REGARDLESS of corpus size — it broadcasts.
 
 Distributed formulation (no per-executor mutable state, pure DataFrame):
-every token emits ``depth`` (row, bucket) coordinates via seeded
-xxhash64; ONE groupBy((row, bucket)) with map-side partial aggregation
+every token emits ``depth`` (row, bucket) coordinates via seeded md5;
+ONE groupBy((row, bucket)) with map-side partial aggregation
 IS the sketch build — Spark's partial-agg tree plays the role of the
 streaming sketch merge (CMS is a linear sketch: coordinate-wise counter
 sums of shards equal the sketch of the union).
@@ -31,43 +31,29 @@ from pyspark.sql.functions import pandas_udf
 
 from autoscan_spark.operators.sqlutil import qcol, qident, reject_reserved
 
-HASH_FNS = ("xxhash64", "md5")
 
-
-def _coords(word: Column, width: int, depth: int, hash_fn: str) -> Column:
+def _coords(word: Column, width: int, depth: int) -> Column:
     """The word's ``depth`` bucket coordinates as an array column.
 
-    ``xxhash64`` (default) is the fast path — one JVM hash per row, no
-    string materialization. ``md5`` derives the bucket from the first 8
-    hex digits of ``md5(d || ':' || word)`` — slower (hex round-trip) but
-    replayable by any engine with md5 (the repo's standard cross-engine
-    hash idiom, cf. sampling._hash_bucket), which is what lets the driver
-    oracle rebuild the identical sketch in DuckDB.
+    Row ``d``'s bucket derives from the first 8 hex digits of
+    ``md5(d || ':' || word)`` — replayable by any engine with md5 (the
+    repo's standard cross-engine hash idiom, cf. sampling._hash_bucket),
+    which is what lets the driver oracle rebuild the identical sketch in
+    DuckDB.
     """
-    if hash_fn == "xxhash64":
-        # pmod, not %: xxhash64 is signed and ANSI % keeps sign
-        buckets = [
-            F.pmod(F.xxhash64(F.lit(d), word), F.lit(width))
-            for d in range(depth)
-        ]
-    elif hash_fn == "md5":
-        # first 8 md5 hex digits -> BIGINT in [0, 2^32): always positive,
-        # so % and pmod agree and DuckDB can replay it verbatim
-        buckets = [
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{d}:"), word)), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(width),
-            )
-            for d in range(depth)
-        ]
-    else:
-        raise ValueError(f"hash_fn must be one of {HASH_FNS}, got {hash_fn!r}")
+    # first 8 md5 hex digits -> BIGINT in [0, 2^32): always positive,
+    # so % and pmod agree and DuckDB can replay it verbatim
+    buckets = [
+        F.pmod(
+            F.conv(
+                F.substring(F.md5(F.concat(F.lit(f"{d}:"), word)), 1, 8),
+                16,
+                10,
+            ).cast("bigint"),
+            F.lit(width),
+        )
+        for d in range(depth)
+    ]
     return F.array(*buckets)
 
 
@@ -76,12 +62,11 @@ def cms_sketch(
     text_col: str = "text",
     width: int = 2048,
     depth: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Build the count-min sketch of the corpus word stream.
 
     Shape: one hoisted split, one explode, ``depth`` coordinate columns
-    from seeded xxhash64 (JVM, no Python), ONE groupBy((row, bucket)).
+    from seeded md5 (JVM, no Python), ONE groupBy((row, bucket)).
     The result is at most ``depth * width`` rows — broadcast-sized by
     construction and mergeable across corpora by coordinate-wise sum.
 
@@ -102,7 +87,7 @@ def cms_sketch(
     )
     coords = words.select(
         F.posexplode(
-            _coords(F.col("__word"), width, depth, hash_fn)
+            _coords(F.col("__word"), width, depth)
         ).alias("d", "bucket")
     )
     return (
@@ -120,7 +105,6 @@ def cms_estimate(
     word_col: str = "word",
     width: int = 2048,
     depth: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Estimate the corpus frequency of each candidate word from a built
     sketch: min over the word's ``depth`` counters (absent coordinate =
@@ -137,7 +121,7 @@ def cms_estimate(
     coords = candidates.select(
         qcol(word_col),
         F.posexplode(
-            _coords(qcol(word_col), width, depth, hash_fn)
+            _coords(qcol(word_col), width, depth)
         ).alias("__d", "__b"),
     )
     return (
@@ -161,7 +145,6 @@ def cms_heavy_hitters(
     text_col: str = "text",
     width: int = 2048,
     depth: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Heavy hitters via the sketch: every DISTINCT word whose CMS
     estimate reaches ``min_count``. No false negatives (estimates never
@@ -177,24 +160,19 @@ def cms_heavy_hitters(
     reject_reserved(df, ("__cms_w",), "cms_heavy_hitters")
     from autoscan_spark.operators.dedup import _spread
 
-    sketch = cms_sketch(
-        df, text_col=text_col, width=width, depth=depth, hash_fn=hash_fn
-    )
+    sketch = cms_sketch(df, text_col=text_col, width=width, depth=depth)
     cands = _spread(df.select(qcol(text_col))).select(
         F.explode(
             F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
         ).alias("word")
     ).distinct()
-    est = cms_estimate(
-        sketch, cands, word_col="word", width=width, depth=depth,
-        hash_fn=hash_fn,
-    )
+    est = cms_estimate(sketch, cands, word_col="word", width=width, depth=depth)
     return est.filter(F.col("est_count") >= int(min_count))
 
 
 # ---------------------------------------------------------------------------
 # HyperLogLog distinct-count sketch (Flajolet, Fusy, Gandouet, Meunier 2007
-# — public algorithm). Same md5-replayable discipline as the CMS md5 path:
+# — public algorithm). Same md5-replayable discipline as the CMS:
 # bucket and rank both derive from md5 hex slices, so any engine with md5
 # rebuilds the IDENTICAL register table and estimate.
 # ---------------------------------------------------------------------------

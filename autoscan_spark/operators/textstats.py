@@ -336,53 +336,31 @@ def learn_bpe_merges(
     text_col: str = "text",
     min_freq: int = 2,
     top_words: int | None = None,
-    strategy: str = "driver",
 ) -> list[tuple[str, str]]:
-    """LEARN a BPE merge table from the corpus (the distributed analog of
-    the public Sennrich/GPT-2 training loop) — the complement of
+    """LEARN a BPE merge table from the corpus (the Spark analog of the
+    public Sennrich/GPT-2 training loop) — the complement of
     ``bpe_token_count``, which APPLIES one. The returned rank-ordered list
     plugs straight into ``bpe_token_count(df, merges=...)`` (same
     ``\\w+|[^\\w\\s]`` pre-tokenizer, same character-symbol convention).
 
     Scale shape — the classic BPE trick makes this tractable: merges
-    operate on the DISTINCT-WORD frequency table, not the corpus. One
-    corpus-wide aggregation builds (word, freq); every iteration then
-    runs on that (much smaller, Zipf-capped) table: pair counts via a
-    JVM transform/explode + groupBy, a 1-row argmax collect, and a JVM
-    ``aggregate`` fold applying the merge left-to-right. Lineage is
-    truncated with an eager localCheckpoint per iteration (the
-    connected-components pattern). ``top_words`` caps the vocabulary by
+    operate on the DISTINCT-WORD frequency table, not the corpus. ONE
+    distributed corpus aggregation builds the (word, freq) table; the
+    Sennrich loop then runs in driver memory on that table via the
+    incremental-stats + lazy-heap algorithm (``_sennrich_in_memory``).
+    This is the shape real tokenizer training uses — the merge loop is
+    inherently sequential and the word table is Zipf-small next to the
+    corpus, so 10⁴–10⁵ merges cost seconds of driver CPU instead of
+    ``n_merges`` Spark jobs. ``top_words`` caps the vocabulary by
     frequency (deterministic (freq desc, word asc) order) — the standard
-    practical bound when the distinct-word set of a 100 TB corpus is
-    itself huge; None keeps every word.
+    practical bound on driver memory when the distinct-word set of a
+    100 TB corpus is itself huge; None keeps every word.
 
     Ties on pair frequency break deterministically by (a asc, b asc), so
     the learned table is stable across runs, engines and partitionings.
-
-    ``strategy``:
-
-    - ``"driver"`` (default): ONE distributed corpus aggregation builds the
-      (word, freq) table; the Sennrich loop then runs in driver memory on
-      that table via the incremental-stats + lazy-heap algorithm
-      (``_sennrich_in_memory``). This is the shape real tokenizer training
-      uses — the merge loop is inherently sequential and the word table is
-      Zipf-small next to the corpus, so 10⁴–10⁵ merges cost seconds of
-      driver CPU instead of ``n_merges`` Spark jobs. Pass ``top_words``
-      (standard practice) to bound driver memory when the distinct-token
-      set of a pathological corpus is itself huge.
-    - ``"distributed"``: every iteration runs on the cluster (pair counts
-      via JVM transform/explode + groupBy, 1-row argmax collect, JVM fold
-      apply, localCheckpoint lineage barrier). Only worth it when the
-      capped word table genuinely cannot fit on the driver.
-
-    Both strategies are merge-for-merge identical (differential-pinned).
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if strategy not in ("driver", "distributed"):
-        raise ValueError(
-            f"strategy must be 'driver' or 'distributed', got {strategy!r}"
-        )
     pre = r"\w+|[^\w\s]"
     words = (
         df.select(
@@ -395,63 +373,8 @@ def learn_bpe_merges(
     )
     if top_words is not None:
         words = words.orderBy(F.desc("__freq"), F.asc("__w")).limit(top_words)
-    if strategy == "driver":
-        word_freqs = [(r["__w"], r["__freq"]) for r in words.collect()]
-        return _sennrich_in_memory(word_freqs, n_merges, min_freq)
-    vocab = words.select(
-        "__freq",
-        F.filter(F.split(F.col("__w"), ""), lambda c: c != "").alias("__syms"),
-    ).localCheckpoint(eager=True)
-
-    def pair_counts(v: DataFrame) -> DataFrame:
-        pairs = v.select(
-            "__freq",
-            F.explode(
-                F.when(
-                    F.size("__syms") >= 2,
-                    F.expr(
-                        "transform(sequence(1, size(__syms) - 1), "
-                        "j -> struct(__syms[j - 1] AS a, __syms[j] AS b))"
-                    ),
-                ).otherwise(F.expr("array()"))
-            ).alias("__p"),
-        )
-        return pairs.groupBy("__p").agg(F.sum("__freq").alias("__f"))
-
-    def apply_merge(syms_col, a: str, b: str, merged: str):
-        def step(acc, x):
-            can = (
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (x == F.lit(b))
-            )
-            return F.when(
-                can,
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-                ),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        return F.aggregate(
-            syms_col, F.expr("CAST(array() AS ARRAY<STRING>)"), step
-        )
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        best = (
-            pair_counts(vocab)
-            .orderBy(F.desc("__f"), F.asc("__p.a"), F.asc("__p.b"))
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["__f"] < min_freq:
-            break
-        a, b = best[0]["__p"]["a"], best[0]["__p"]["b"]
-        merges.append((a, b))
-        vocab = vocab.select(
-            "__freq", apply_merge(F.col("__syms"), a, b, a + b).alias("__syms")
-        ).localCheckpoint(eager=True)
-    return merges
+    word_freqs = [(r["__w"], r["__freq"]) for r in words.collect()]
+    return _sennrich_in_memory(word_freqs, n_merges, min_freq)
 
 
 def bpe_token_count(
@@ -744,8 +667,7 @@ def bigram_rarity(
     shuffle. Stopword-headed ``w1`` groups buffer large window partitions
     (spill-capable); for a corpus whose hottest bigram exceeds executor
     spill comfort, fall back to pre-aggregated counts + a broadcast of
-    the capped-top-K bigram table (the ``unigram_familiarity`` hot-vocab
-    pattern).
+    the capped-top-K bigram table.
     """
     from pyspark.sql.window import Window
 
@@ -787,7 +709,6 @@ def unigram_familiarity(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hot_vocab_size: int = 0,
 ) -> DataFrame:
     """Per-document average corpus unigram probability — the rational
     cousin of a perplexity filter (documents full of corpus-rare words
@@ -799,16 +720,8 @@ def unigram_familiarity(
     probabilities whose value depends on float summation order.
 
     Shape at scale: explode → word-frequency groupBy (one shuffle,
-    map-side combined) → words ⋈ freqs equi-join on the word. That join
-    is stopword-skewed (a handful of words carry most of the rows), so
-    ``hot_vocab_size=k`` applies the standard skew split: the top-k
-    frequent words join by BROADCAST (the hot rows never shuffle) and
-    only the heavy-tail words take the shuffle join; the union is
-    row-identical to the plain join because every word is in exactly one
-    branch. Top-k selection is sort+limit (TakeOrdered) with ties broken
-    by the word itself, so the split — though not the result — is
-    deterministic too. The 1-row corpus total is a broadcast cross join,
-    never a collect.
+    map-side combined) → words ⋈ freqs equi-join on the word. The 1-row
+    corpus total is a broadcast cross join, never a collect.
 
     Output: (id_col, ``n_words``, ``sum_counts``, ``familiarity``).
     """
@@ -818,16 +731,7 @@ def unigram_familiarity(
     )
     freqs = words.groupBy("__w").agg(F.count("*").cast("long").alias("__c"))
     total = freqs.agg(F.sum("__c").alias("__tot"))
-    if hot_vocab_size > 0:
-        hot = freqs.orderBy(F.desc("__c"), F.asc("__w")).limit(hot_vocab_size)
-        hot_side = words.join(F.broadcast(hot), "__w")
-        tail_side = words.join(
-            F.broadcast(hot.select("__w")), "__w", "left_anti"
-        ).join(freqs, "__w")
-        joined = hot_side.unionByName(tail_side)
-    else:
-        joined = words.join(freqs, "__w")
-    per_doc = joined.groupBy(qcol(id_col)).agg(
+    per_doc = words.join(freqs, "__w").groupBy(qcol(id_col)).agg(
         F.count("*").cast("long").alias("n_words"),
         F.sum("__c").cast("long").alias("sum_counts"),
     )

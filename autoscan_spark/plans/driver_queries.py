@@ -1316,8 +1316,9 @@ WHERE b.rn_b = 1 AND w.rn_w = 1 AND b.n >= 2"""
 
 
 def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE merge LEARNING over the documents corpus (Sennrich
-    loop on the word-frequency table; iterative — not SQL-expressible,
+    """BPE merge LEARNING over the documents corpus (one distributed
+    word-frequency aggregation, then the Sennrich loop on that table in
+    driver memory; iterative — not SQL-expressible,
     merge-for-merge differential vs a reference implementation in
     pytest). Returns the learned rank-ordered merge table."""
     from autoscan_spark.operators.textstats import learn_bpe_merges
@@ -2020,8 +2021,7 @@ FROM lined d LEFT JOIN agg a USING (doc_id)"""
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level corpus dedup (RefinedWeb's coarser sibling of the
     line pass): same first-occurrence machinery, '\\n\\n' separator, via
-    line_dedup's separator parameter — using the preagg (hot-key) strategy
-    so BOTH strategies carry oracle evidence. Paragraph breaks are
+    line_dedup's separator parameter. Paragraph breaks are
     synthesized from the genuinely-frequent corpus token ' value ' (same
     token _Q_LINE_DEDUP_SQL uses; plain replace, mirrored in the
     oracle)."""
@@ -2031,7 +2031,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     para = docs.withColumn(
         "text", F.expr("replace(text, ' value ', '\\n\\n')")
     )
-    return line_dedup(para, line_sep="\n\n", strategy="preagg").select(
+    return line_dedup(para, line_sep="\n\n").select(
         "doc_id",
         "n_lines_total",
         "n_lines_kept",
@@ -4012,19 +4012,16 @@ FROM runs GROUP BY conv_id, run_id"""
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy hitters over the corpus word stream.
 
-    Oracle-backed (r6): the driver query uses ``hash_fn='md5'`` — bucket
-    = first 8 md5 hex digits of ``d || ':' || word`` — so DuckDB rebuilds
-    the IDENTICAL depth×width sketch and replays the min-estimate, making
-    the whole approximate structure value-hash comparable cross-engine.
-    The library default stays xxhash64 (one JVM hash, no hex round-trip)
-    for production; the no-false-negative / collision-bound guarantees of
-    BOTH hash paths are pinned by differential pytest against exact
-    counts."""
+    Oracle-backed (r6): the sketch's bucket is the first 8 md5 hex digits
+    of ``d || ':' || word``, so DuckDB rebuilds the IDENTICAL depth×width
+    sketch and replays the min-estimate, making the whole approximate
+    structure value-hash comparable cross-engine. The no-false-negative /
+    collision-bound guarantees are pinned by differential pytest against
+    exact counts."""
     from autoscan_spark.operators.sketch import cms_heavy_hitters
 
     return cms_heavy_hitters(
-        _docs(spark, sf_dir), min_count=500, width=2048, depth=4,
-        hash_fn="md5",
+        _docs(spark, sf_dir), min_count=500, width=2048, depth=4
     ).orderBy("word")
 
 

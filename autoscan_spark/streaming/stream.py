@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
-from autoscan_spark.operators.extract import EXTRACTED_SCHEMA, _extract_batches
+from autoscan_spark.operators.extract import (
+    EXTRACTED_SCHEMA,
+    _extract_batches,
+    extract_turns,
+)
 from autoscan_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -49,9 +53,7 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     transcripts = reader.parquet(input_dir)
     if watermark is None:
-        return transcripts.select("conv_id", "turn_idx", "role", "text").mapInArrow(
-            _extract_batches, schema=EXTRACTED_SCHEMA
-        )
+        return extract_turns(transcripts, mode="low")
 
     def batches_with_ts(batches):
         import pyarrow as pa

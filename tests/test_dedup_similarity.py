@@ -838,22 +838,13 @@ def test_line_dedup_differential_vs_python(spark):
         for r in line_dedup(docs.repartition(11)).collect()
     }
     assert got == want
-    # the hot-line preagg fallback is output-identical
-    got_pre = {
-        r["doc_id"]: (r["n_lines_total"], r["n_lines_kept"], r["dedup_text"])
-        for r in line_dedup(docs.repartition(11), strategy="preagg").collect()
-    }
-    assert got_pre == want
 
 
 def test_line_dedup_preagg_hot_line(spark):
-    """The preagg strategy survives (and equals the window strategy on) a
-    corpus where one boilerplate line appears in every document — the skew
-    case the fallback exists for — and its plan shows map-side partial
-    aggregation (partial_min before the shuffle), which is what keeps the
-    hot hash key from concentrating in one task."""
-    import pytest
-
+    """A corpus where one boilerplate line appears in every document (the
+    skew case) keeps that line exactly once, and the plan shows map-side
+    partial aggregation (partial_min before the shuffle), which is what
+    keeps the hot hash key from concentrating in one task."""
     from autoscan_spark.operators.dedup import line_dedup
 
     hot = "subscribe to our newsletter"
@@ -861,35 +852,60 @@ def test_line_dedup_preagg_hot_line(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     ).repartition(8)
-    canon = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    a = canon(line_dedup(docs, strategy="window"))
-    b = canon(line_dedup(docs, strategy="preagg"))
-    assert a == b
+    out = line_dedup(docs)
     # doc 0 keeps the hot line once (its own second copy dedups too);
     # every other doc loses both copies
-    by_id = {t[0]: t for t in b}
+    by_id = {t[0]: t for t in map(tuple, out.collect())}
+    assert len(by_id) == 100
     assert by_id[0][1] == 4 and by_id[0][2] == 3 and by_id[0][3].count(hot) == 1
     assert by_id[5][3].count(hot) == 0 and "unique content 5" in by_id[5][3]
 
-    plan = (
-        line_dedup(docs, strategy="preagg")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "partial_min" in plan
 
-    with pytest.raises(ValueError, match="strategy"):
-        line_dedup(docs, strategy="bogus")
+
+def _sennrich_reference(texts, n_merges, min_freq=2):
+    """Independent single-process Sennrich BPE training loop: the plain
+    recount-every-iteration form (same pre-tokenizer, same greedy
+    left-to-right apply, same (freq desc, pair asc) tie-break)."""
+    import re
+
+    freqs: dict[str, int] = {}
+    for t in texts:
+        for w in re.findall(r"\w+|[^\w\s]", t):
+            freqs[w] = freqs.get(w, 0) + 1
+    vocab = {w: list(w) for w in freqs}
+    merges = []
+    for _ in range(n_merges):
+        counts: dict[tuple, int] = {}
+        for w, f in freqs.items():
+            syms = vocab[w]
+            for i in range(len(syms) - 1):
+                p = (syms[i], syms[i + 1])
+                counts[p] = counts.get(p, 0) + f
+        if not counts:
+            break
+        (a, b), f = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        if f < min_freq:
+            break
+        merges.append((a, b))
+        for w, syms in vocab.items():
+            out: list = []
+            for x in syms:
+                if out and out[-1] == a and x == b:
+                    out[-1] = a + b
+                else:
+                    out.append(x)
+            vocab[w] = out
+    return merges
 
 
 def test_learn_bpe_merges_matches_sennrich_reference(spark):
-    """The distributed BPE learner reproduces the classic single-process
-    Sennrich training loop merge-for-merge (same pre-tokenizer, same
-    greedy left-to-right apply, same (freq desc, pair asc) tie-break),
-    and its output plugs into bpe_token_count."""
-    import re
-
+    """The BPE learner reproduces the classic single-process Sennrich
+    training loop merge-for-merge, and its output plugs into
+    bpe_token_count."""
     from autoscan_spark.operators.textstats import (
         bpe_token_count,
         learn_bpe_merges,
@@ -903,57 +919,21 @@ def test_learn_bpe_merges_matches_sennrich_reference(spark):
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     ).repartition(5)
 
-    # independent reference implementation
-    freqs: dict[str, int] = {}
-    for t in texts:
-        for w in re.findall(r"\w+|[^\w\s]", t):
-            freqs[w] = freqs.get(w, 0) + 1
-    vocab = {w: list(w) for w in freqs}
-    want = []
-    for _ in range(12):
-        counts: dict[tuple, int] = {}
-        for w, f in freqs.items():
-            syms = vocab[w]
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + f
-        if not counts:
-            break
-        (a, b), f = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if f < 2:
-            break
-        want.append((a, b))
-        for w, syms in vocab.items():
-            out: list = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            vocab[w] = out
-
-    # BOTH strategies must reproduce the reference merge-for-merge
-    got = learn_bpe_merges(docs, n_merges=12)  # default: driver-memory loop
-    assert got == want
-    got_dist = learn_bpe_merges(docs, n_merges=12, strategy="distributed")
-    assert got_dist == want
+    got = learn_bpe_merges(docs, n_merges=12)
+    assert got == _sennrich_reference(texts, 12)
     # learned table plugs into the apply path
     counted = bpe_token_count(docs.limit(5), merges=got).collect()
     assert all(r["n_bpe_real"] > 0 for r in counted)
     with pytest.raises(ValueError, match="n_merges"):
         learn_bpe_merges(docs, n_merges=0)
-    with pytest.raises(ValueError, match="strategy"):
-        learn_bpe_merges(docs, n_merges=1, strategy="bogus")
 
 
 def test_learn_bpe_driver_strategy_scales_to_real_vocab(spark, sf_dir):
-    """1,000 merges on the real documents corpus complete in seconds on
-    the driver strategy — one Spark aggregation then in-process Sennrich
-    (n_merges Spark jobs would take minutes). Also pins that the driver
-    loop's incremental stats stay exact at depth: its 64-merge prefix
-    equals the distributed loop's on the same corpus."""
+    """1,000 merges on a wide-vocab corpus complete in seconds — one Spark
+    aggregation then in-process Sennrich (n_merges Spark jobs would take
+    minutes). Also pins that the driver loop's incremental stats stay
+    exact at depth: its 100-merge run on the real corpus equals the
+    recount-every-iteration reference's."""
     import time
 
     from autoscan_spark.operators.textstats import learn_bpe_merges
@@ -987,11 +967,10 @@ def test_learn_bpe_driver_strategy_scales_to_real_vocab(spark, sf_dir):
     assert elapsed < 60, f"driver BPE loop took {elapsed:.1f}s for 1000 merges"
 
     # incremental stats stay exact at depth: on the real corpus the driver
-    # loop's full merge run equals the distributed loop's, to exhaustion
+    # loop's full merge run equals the reference's, to exhaustion
     docs = load_table(spark, sf_dir, "documents").select("text")
-    deep_driver = learn_bpe_merges(docs, n_merges=100)
-    deep_dist = learn_bpe_merges(docs, n_merges=100, strategy="distributed")
-    assert deep_driver == deep_dist
+    texts = [r["text"] for r in docs.collect() if r["text"] is not None]
+    assert learn_bpe_merges(docs, n_merges=100) == _sennrich_reference(texts, 100)
 
 
 def test_remove_duplicate_spans_semantics(spark):

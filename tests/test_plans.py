@@ -4,6 +4,8 @@ the shuffles we budgeted, small dimensions broadcast."""
 
 import re
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from autoscan_spark.operators.extract import drop_failed, extract_turns
@@ -79,15 +81,20 @@ def test_high_pipeline_shuffle_budget(spark, tmp_path_factory):
     assert "ArrowEvalPython" not in plan, plan
 
 
-def test_clustered_wave_fold_and_counts_do_not_shuffle(spark, tmp_path_factory):
+@pytest.mark.parametrize("mode", ["low", "high"])
+def test_clustered_wave_fold_and_counts_do_not_shuffle(spark, tmp_path_factory, mode):
     """A checkpoint wave caches the kernel output repartitioned by bucket.
     Above that cache, neither the fold (grouped by bucket and conv_id) nor
-    the per-bucket lineage count adds an exchange."""
+    the per-bucket lineage count adds an exchange, in either mode."""
     from autoscan_spark.plans.pipeline import extract_pipeline
 
     path = str(tmp_path_factory.mktemp("plan_wave")) + "/t"
     synthesize_transcripts(spark, 20, seed=4).write.parquet(path)
-    extracted, docs = extract_pipeline(spark.read.parquet(path), mode="low", n_buckets=8)
+    src = spark.read.parquet(path)
+    if mode == "high":
+        # high mode fails the job on the -error conversations' payloads
+        src = src.filter(~F.col("conv_id").endswith("-error"))
+    extracted, docs = extract_pipeline(src, mode=mode, n_buckets=8)
     extracted.cache()
     try:
         extracted.count()  # populate, as the wave's first write does
@@ -97,7 +104,7 @@ def test_clustered_wave_fold_and_counts_do_not_shuffle(spark, tmp_path_factory):
             above_cache = plan.split("InMemoryRelation")[0]
             assert "InMemoryTableScan" in above_cache, plan
             assert "Exchange" not in above_cache, plan
-            # the one shuffle is the repartition by bucket inside the cache
+            # the repartition by bucket sits inside the cache
             assert "Exchange hashpartitioning(bucket" in plan, plan
     finally:
         extracted.unpersist()

@@ -91,21 +91,6 @@ def test_unigram_familiarity_exact(spark):
     assert again == {k: r["familiarity"] for k, r in out.items()}
 
 
-def test_unigram_familiarity_skew_split_identical(spark, sf_dir):
-    """The hot-vocab broadcast split must be row-identical to the plain
-    join (every word lands in exactly one branch), and the hot branch
-    must actually broadcast."""
-    from autoscan_spark.operators.textstats import unigram_familiarity
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plain = unigram_familiarity(docs)
-    split = unigram_familiarity(docs, hot_vocab_size=20)
-    assert plain.exceptAll(split).count() == 0
-    assert split.exceptAll(plain).count() == 0
-    plan = split._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_chunk_documents_windows_and_stride(spark):
     from autoscan_spark.operators.textstats import chunk_documents
 
@@ -448,7 +433,7 @@ def test_cms_no_false_negatives_and_exactness_at_width(spark):
 
 
 def test_cms_md5_hash_path(spark):
-    """The engine-replayable md5 hash path: same CMS guarantees, and the
+    """The engine-replayable md5 coordinates: same CMS guarantees, and the
     bucket derivation matches a hand-computed md5 (what the DuckDB oracle
     replays)."""
     import hashlib
@@ -462,21 +447,17 @@ def test_cms_md5_hash_path(spark):
     hh = {
         r.word: r.est_count
         for r in cms_heavy_hitters(
-            docs, min_count=3, width=width, depth=depth, hash_fn="md5"
+            docs, min_count=3, width=width, depth=depth
         ).collect()
     }
     assert hh == {"a": 4, "b": 3}  # collision-free width: exact
     # bucket derivation is EXACTLY the cross-engine idiom: first 8 md5 hex
     # digits of "d:word" as an integer, mod width
     sk = {(r.d, r.bucket): r.cnt
-          for r in cms_sketch(docs, width=width, depth=depth,
-                              hash_fn="md5").collect()}
+          for r in cms_sketch(docs, width=width, depth=depth).collect()}
     for d in range(depth):
         b = int(hashlib.md5(f"{d}:a".encode()).hexdigest()[:8], 16) % width
         assert sk[(d, b)] == 4
-
-    with pytest.raises(ValueError):
-        cms_sketch(docs, hash_fn="sha1")
 
 
 def test_cms_sketch_size_bounded(spark):

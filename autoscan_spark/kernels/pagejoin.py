@@ -14,9 +14,9 @@ Semantics mirror ``_join_markdown_pages`` (reference: autoscan/autoscan.py:353-3
 
 Because the separator depends on post-filter adjacency, filtering and joining
 are NOT separable distributed operations: both happen inside one per-document
-fold. ``join_pages`` is that fold in Python: the reference that tests and the
-benchmark compare the distributed fold against (``operators.fold``, JVM column
-expressions), and the one the streaming stateful fold calls.
+fold. ``join_pages`` is that fold in Python. No pipeline runs it: it is only
+the reference that tests and the benchmark compare the distributed fold
+(``operators.fold``, JVM column expressions) against.
 """
 
 from __future__ import annotations

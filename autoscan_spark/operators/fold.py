@@ -1,12 +1,15 @@
 """Per-conversation ordered document fold.
 
 Reference contract: ``_join_markdown_pages`` (autoscan/autoscan.py:353-383),
-mirrored in Python by ``kernels.pagejoin.join_pages`` — empty-page filtering
+mirrored in Python by ``kernels.pagejoin`` — empty-page filtering
 and the adjacency-dependent separator must happen inside ONE ordered fold
 (the separator depends on post-filter neighbors).
 
 Physical design: the whole fold is JVM column expressions, so the low
 pipeline crosses into Python once (the extraction ``mapInArrow``), not twice.
+A stream runs this same fold as a streaming aggregation in update mode; the
+event-time-expiring stream fold (``streaming.stateful``) keeps pages cleaned
+by ``_clean`` in keyed state and joins them with ``_join``.
 
 1. Map-side, before the aggregation, each page is cleaned (``_clean``: marker
    scrub + a ``str.rstrip()``-exact right-strip).

@@ -857,7 +857,10 @@ def knn_label_noise(
 
     Shape (r07): the query matrix ships to the corpus scan in the kernel
     closure (it was always driver-collected — ``F.broadcast`` collects
-    internally; now the size is GUARDED, see below) and each corpus Arrow
+    internally; now the size is GUARDED, see below); PySpark broadcasts a
+    pickled Python function larger than
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB), so a large matrix
+    reaches each executor once, not once per task. Each corpus Arrow
     batch scores ALL queries with one numpy matmul, emitting only its
     batch-local top-k candidate ids per query with a rounding-safe margin
     (guide §4.2 — this replaces ~|corpus|×|queries| interpreted JVM dot

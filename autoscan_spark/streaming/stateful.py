@@ -1,43 +1,39 @@
-"""Custom stateful streaming operator: incremental per-conversation fold.
+"""Streaming document fold with event-time state expiry.
 
-Batch's ordered fold (operators.fold) needs the whole conversation; in a
-stream, turns arrive incrementally and out of order. This operator keeps the
-conversation's turns as keyed state (``applyInPandasWithState``) and, on each
-trigger that delivers new turns for a conversation, re-emits the current
-folded markdown — update semantics: downstream sinks see the latest fold per
-conversation, converging to the batch result once all turns have arrived
-(tested: restart-with-checkpoint equals the batch fold).
+A stream whose conversations may live as long as the query folds with the
+batch function, unchanged: ``fold_documents(drop_failed(stream))`` in update
+mode. The aggregation keeps each conversation's pages as state and re-emits
+its document whenever new turns arrive, converging to the batch result once
+all turns have arrived (tested: restart-with-checkpoint equals the batch
+fold).
 
-State schema: the accumulated (turn_idx, extracted_text) pairs.
+A streaming aggregation cannot release that state: a plain
+``groupBy(conv_id)`` never evicts, and Spark rejects update mode for
+session-window aggregations. ``stream_fold_documents`` is the keyed-state
+operator (``applyInPandasWithState``) for the one case that needs it:
+dropping a conversation's state once the EVENT-TIME watermark passes its
+last event time by ``idle_timeout_ms``. It only accumulates: each page is
+cleaned (``fold._clean``) before it enters the state, the state holds
+``(turn_idxs, texts, max_ts_ms)``, and every update emits the arrays. The
+empty-page filter, turn order and separator then run in the JVM
+(``array_sort`` + ``fold._join``), the batch fold's own expressions.
 
-Scale knobs for 10^9+ live conversations:
+The timer is ``max_ts_ms + idle_timeout_ms``, clamped just above the current
+watermark because Spark rejects timestamps at or below it. The group's max
+event time is tracked IN the state — basing the timer on the watermark
+instead would expire conversations prematurely whenever the watermark
+outruns wall-idle (first micro-batch of a fresh query, backlog replay,
+``AvailableNow`` over historical data), splitting a live conversation's
+fold. Requires a watermark upstream —
+``stream.stream_extract(..., watermark=...)``. Safe with
+``Trigger.AvailableNow``: timers fire on watermark advance, so the query
+still terminates.
 
-- **RocksDB state store** (``ROCKSDB_STATE_CONF`` /
-  ``configure_rocksdb_state``): the default HDFS-backed provider keeps every
-  conversation's state on the executor heap; RocksDB spills to local disk
-  with changelog checkpointing, which is the only credible shape when live
-  state exceeds memory. Plain OSS Spark conf — the provider class ships in
-  spark-sql.
-- **State expiry** (``expire_mode``):
-  - ``"processing"``: drop a conversation's state after ``idle_timeout_ms``
-    of wall-clock inactivity (``GroupStateTimeout.ProcessingTimeTimeout``).
-    For continuously-running queries only — a registered processing-time
-    timer keeps a ``Trigger.AvailableNow`` query alive waiting for it.
-  - ``"event"``: drop state once the EVENT-TIME watermark passes the
-    conversation's LAST EVENT TIME by ``idle_timeout_ms``
-    (``GroupStateTimeout.EventTimeTimeout`` +
-    ``state.setTimeoutTimestamp(max_event_ts + timeout)``, clamped just
-    above the current watermark because Spark rejects timestamps at or
-    below it). The group's max event time is tracked IN the state — basing
-    the timer on the watermark instead would expire conversations
-    prematurely whenever the watermark outruns wall-idle (first micro-batch
-    of a fresh query, backlog replay, ``AvailableNow`` over historical
-    data), splitting a live conversation's fold. Requires a watermark
-    upstream — ``stream.stream_extract(..., watermark=...)``. Safe with
-    ``Trigger.AvailableNow``: timers fire on watermark advance, so the
-    query still terminates.
-  - ``"none"`` (default): state lives for the query's lifetime — fine for
-    bounded replays/tests, not for an unbounded production stream.
+**RocksDB state store** (``ROCKSDB_STATE_CONF`` / ``configure_rocksdb_state``),
+for either fold: the default HDFS-backed provider keeps every conversation's
+state on the executor heap; RocksDB spills to local disk with changelog
+checkpointing, which is the only credible shape when live state exceeds
+memory. Plain OSS Spark conf — the provider class ships in spark-sql.
 """
 
 from __future__ import annotations
@@ -57,39 +53,35 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from autoscan_spark.kernels.pagejoin import join_pages
-
-STREAM_DOC_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("markdown", StringType()),
-        StructField("n_turns", IntegerType()),
-    ]
-)
+from autoscan_spark.operators.extract import drop_failed
+from autoscan_spark.operators.fold import _clean, _join
 
 _STATE_SCHEMA = StructType(
     [
         StructField("turn_idxs", ArrayType(IntegerType())),
+        # cleaned page texts, aligned with turn_idxs
         StructField("texts", ArrayType(StringType())),
-        # max event-time (epoch ms) seen for this conversation — drives the
-        # event-time expiry timer; 0 when expire_mode != "event"
+        # max event time (epoch ms) seen for this conversation
         StructField("max_ts_ms", LongType()),
     ]
 )
+
+_EMIT_SCHEMA = StructType([StructField("conv_id", StringType()), *_STATE_SCHEMA.fields[:2]])
 
 # Version of _STATE_SCHEMA's keyed-state layout. applyInPandasWithState
 # persists state rows in the streaming checkpoint with NO self-describing
 # schema: resuming a checkpoint written under a different layout
 # mis-deserializes (or fails opaquely) instead of erroring cleanly — the
 # streaming analog of the batch side's LINEAGE_VERSION refusal. Bump this
-# whenever _STATE_SCHEMA changes (v1 = 2 fields, v2 added max_ts_ms) and
-# derive checkpoint locations via versioned_checkpoint_dir() so a layout
-# change can never resume an old checkpoint.
-STATE_VERSION = 2
+# whenever the state's layout or meaning changes (v1 = 2 fields, v2 added
+# max_ts_ms, v3 stores cleaned texts) and derive checkpoint locations via
+# versioned_checkpoint_dir() so a layout change can never resume an old
+# checkpoint.
+STATE_VERSION = 3
 
 
 def versioned_checkpoint_dir(base_dir: str) -> str:
-    """Checkpoint location for a stateful fold query: ``base_dir`` with the
+    """Checkpoint location for an expiring fold query: ``base_dir`` with the
     state-layout version baked into the path. Old-layout checkpoints keep
     their own directory (inspectable, re-runnable with the old code) and
     are never resumed by new-layout code."""
@@ -115,12 +107,7 @@ def configure_rocksdb_state(spark: SparkSession) -> None:
         spark.conf.set(k, v)
 
 
-_EXPIRE_MODES = ("none", "processing", "event")
-
-
-def _make_fold_with_state(
-    expire_mode: str, idle_timeout_ms: int, session_tz: str = "UTC"
-):
+def _make_fold_with_state(idle_timeout_ms: int):
     def fold_with_state(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
@@ -134,96 +121,67 @@ def _make_fold_with_state(
             state.remove()
             return
 
-        idxs, texts, max_ts_ms = (
-            state.get if state.exists else ([], [], 0)
-        )
-        idxs = list(idxs)
-        texts = list(texts)
-        max_ts_ms = int(max_ts_ms or 0)
+        idxs, texts, max_ts_ms = state.get if state.exists else ([], [], 0)
+        idxs, texts = list(idxs), list(texts)
         for pdf in pdfs:
-            idxs.extend(int(i) for i in pdf["turn_idx"])
-            texts.extend(pdf["extracted_text"])
-            if expire_mode == "event" and len(pdf):
-                batch_max = pd.to_datetime(pdf["ts"]).max()
-                if pd.notna(batch_max):
-                    # applyInPandasWithState delivers timestamps as tz-NAIVE
-                    # session-local wall time; .value on a naive Timestamp
-                    # assumes UTC, which would offset the timer by the
-                    # session-timezone delta vs getCurrentWatermarkMs (true
-                    # UTC epoch) and expire live conversations early
-                    if batch_max.tzinfo is None:
-                        batch_max = batch_max.tz_localize(
-                            session_tz, ambiguous=True, nonexistent="shift_forward"
-                        )
-                    max_ts_ms = max(max_ts_ms, int(batch_max.value // 1_000_000))
+            idxs.extend(pdf["turn_idx"].tolist())
+            texts.extend(pdf["text"].tolist())
+            batch_max = pdf["ts_ms"].max()
+            if pd.notna(batch_max):
+                max_ts_ms = max(max_ts_ms, int(batch_max))
 
         state.update((idxs, texts, max_ts_ms))
-        if expire_mode == "processing":
-            state.setTimeoutDuration(idle_timeout_ms)
-        elif expire_mode == "event":
-            # expire relative to the conversation's own last event, NOT the
-            # watermark: a fast-advancing watermark (fresh query, backlog
-            # replay) must not expire a conversation that is event-time
-            # live. Spark requires the timer to sit strictly above the
-            # current watermark, hence the clamp.
-            state.setTimeoutTimestamp(
-                max(max_ts_ms + idle_timeout_ms, state.getCurrentWatermarkMs() + 1)
-            )
-
-        order = sorted(range(len(idxs)), key=lambda i: idxs[i])
-        markdown = join_pages([texts[i] for i in order])
-        yield pd.DataFrame(
-            {"conv_id": [conv_id], "markdown": [markdown], "n_turns": [len(idxs)]}
+        # expire relative to the conversation's own last event, NOT the
+        # watermark; Spark requires the timer strictly above the watermark
+        state.setTimeoutTimestamp(
+            max(max_ts_ms + idle_timeout_ms, state.getCurrentWatermarkMs() + 1)
         )
+        yield pd.DataFrame({"conv_id": [conv_id], "turn_idxs": [idxs], "texts": [texts]})
 
     return fold_with_state
 
 
-def stream_fold_documents(
-    extracted_stream: DataFrame,
-    expire_mode: str = "none",
-    idle_timeout_ms: int = 60 * 60 * 1000,
-) -> DataFrame:
-    """Stateful incremental fold over a streaming extracted-turns DataFrame
-    (output of streaming.stream.stream_extract). Only ``status == 'ok'``
-    turns are folded.
+def stream_fold_documents(extracted_stream: DataFrame, idle_timeout_ms: int) -> DataFrame:
+    """Incremental fold that drops a conversation's state once the
+    watermark passes its last event time by ``idle_timeout_ms`` (see the
+    module docstring). ``extracted_stream`` is
+    ``stream.stream_extract(..., watermark=...)``: it must carry the
+    watermarked ``ts`` column. Only ``status == 'ok'`` turns are folded.
 
-    ``expire_mode``: ``"none"`` | ``"processing"`` | ``"event"`` — see module
-    docstring. ``"event"`` requires a watermark upstream
-    (``stream_extract(..., watermark=...)``).
+    Output: (conv_id, markdown, n_turns), one update per conversation per
+    micro-batch that delivers its turns.
     """
-    if expire_mode not in _EXPIRE_MODES:
-        raise ValueError(f"expire_mode must be one of {_EXPIRE_MODES}, got {expire_mode!r}")
-    timeout = {
-        "none": GroupStateTimeout.NoTimeout,
-        "processing": GroupStateTimeout.ProcessingTimeTimeout,
-        "event": GroupStateTimeout.EventTimeTimeout,
-    }[expire_mode]
-    cols = ["conv_id", "turn_idx", "extracted_text"]
-    if expire_mode == "event":
-        # the watermarked column must reach the stateful operator's child
-        # output or the analyzer rejects EventTimeTimeout
-        if "ts" not in extracted_stream.columns:
-            raise ValueError(
-                "expire_mode='event' needs a watermarked 'ts' column — build "
-                "the stream with stream_extract(..., watermark=...)"
-            )
-        cols.append("ts")
-    session_tz = (
-        extracted_stream.sparkSession.conf.get("spark.sql.session.timeZone")
-        or "UTC"
-    )
-    return (
-        # failed turns never enter the fold, as in the batch pipeline's
-        # drop_failed, so n_turns counts ok turns only
-        extracted_stream.filter(F.col("status") == "ok")
-        .select(*cols)
+    # the watermarked column must reach the stateful operator's child
+    # output or the analyzer rejects EventTimeTimeout
+    if "ts" not in extracted_stream.columns:
+        raise ValueError(
+            "stream_fold_documents needs a watermarked 'ts' column — build "
+            "the stream with stream_extract(..., watermark=...)"
+        )
+    states = (
+        drop_failed(extracted_stream)
+        .select(
+            "conv_id",
+            "turn_idx",
+            _clean(F.col("extracted_text")).alias("text"),
+            "ts",
+            F.unix_millis("ts").alias("ts_ms"),
+        )
         .groupBy("conv_id")
         .applyInPandasWithState(
-            _make_fold_with_state(expire_mode, idle_timeout_ms, session_tz),
-            outputStructType=STREAM_DOC_SCHEMA,
+            _make_fold_with_state(idle_timeout_ms),
+            outputStructType=_EMIT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+    # as in fold_documents: empty pages leave the fold, n_turns counts them
+    pages = F.zip_with(
+        "turn_idxs", "texts", lambda i, t: F.struct(i.alias("turn_idx"), t.alias("text"))
+    )
+    return states.select(
+        "conv_id",
+        F.array_sort(F.filter(pages, lambda x: x["text"] != "")).alias("__items"),
+        F.size("turn_idxs").alias("n_turns"),
+    ).select("conv_id", _join(F.col("__items")).alias("markdown"), "n_turns")

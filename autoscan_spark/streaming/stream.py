@@ -43,10 +43,9 @@ def stream_extract(
     ``watermark`` (e.g. ``"10 minutes"``): tees ``ts`` through the extraction
     kernel (the batch kernel is row-aligned per Arrow batch, so the column
     passes through zero-copy) and attaches the event-time watermark to the
-    extracted stream — downstream stateful operators (e.g.
-    ``stateful.stream_fold_documents`` with ``expire_mode="event"``) need the
-    watermarked column in their child's output, so it must survive the
-    kernel, not sit below it.
+    extracted stream — downstream stateful operators (e.g. the expiring
+    ``stateful.stream_fold_documents``) need the watermarked column in their
+    child's output, so it must survive the kernel, not sit below it.
     """
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger:
@@ -59,16 +58,12 @@ def stream_extract(
         import pyarrow as pa
 
         for batch in batches:
-            ts = batch.column("ts")
-            core = pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in ("conv_id", "turn_idx", "role", "text")],
-                names=["conv_id", "turn_idx", "role", "text"],
+            # the kernel reads its four columns by name and ignores ts
+            (out,) = _extract_batches(iter([batch]))
+            yield out.append_column(
+                pa.field("ts", pa.timestamp("us", tz="UTC")),
+                batch.column("ts").cast(pa.timestamp("us", tz="UTC")),
             )
-            for out in _extract_batches(iter([core])):
-                yield out.append_column(
-                    pa.field("ts", pa.timestamp("us", tz="UTC")),
-                    ts.cast(pa.timestamp("us", tz="UTC")),
-                )
 
     schema_ts = StructType(EXTRACTED_SCHEMA.fields + [StructField("ts", TimestampType())])
     extracted = transcripts.select(

@@ -2,7 +2,8 @@
 
 Expected values derived by hand from the reference semantics
 (_join_markdown_pages, autoscan/autoscan.py:353-383); the distributed fold
-(operators.fold, JVM column expressions) is checked against ``join_pages``.
+(operators.fold, JVM column expressions) and both streaming folds are checked
+against ``join_pages``.
 """
 
 import random
@@ -110,32 +111,44 @@ def test_fold_matches_join_pages(fold_input):
 
 
 def test_stream_fold_matches_batch_fold(spark, fold_input, tmp_path):
-    """The streaming fold (applyInPandasWithState over the Python
-    ``join_pages``) must give every conversation the markdown and turn count
-    the batch fold is checked against above, so the two folds cannot
-    drift."""
+    """Both streaming folds must give every conversation the markdown and
+    turn count the batch fold is checked against above: ``fold_documents``
+    run as a streaming aggregation, and the expiring keyed-state fold (its
+    state's arrays joined by the batch fold's expressions). The expiring
+    fold reads a constant ``ts`` behind a watermark, so its timeout never
+    fires."""
+    from datetime import datetime
+
+    from autoscan_spark.operators.extract import drop_failed
     from autoscan_spark.streaming.stateful import stream_fold_documents
 
     df, want = fold_input
     src = str(tmp_path / "src")
-    ok = df.withColumn("status", F.lit("ok"))
+    ok = df.withColumn("status", F.lit("ok")).withColumn("ts", F.lit(datetime(2024, 1, 1)))
     ok.write.parquet(src)
-    latest = {}
+    folds = {
+        "aggregation": lambda s: fold_documents(drop_failed(s)),
+        "expiring": lambda s: stream_fold_documents(
+            s.withWatermark("ts", "10 minutes"), idle_timeout_ms=60 * 60 * 1000
+        ),
+    }
+    for name, fold in folds.items():
+        latest = {}
 
-    def collect_batch(batch_df, batch_id):
-        for r in batch_df.collect():  # update mode: later emissions win
-            latest[r["conv_id"]] = (r["markdown"], r["n_turns"])
+        def collect_batch(batch_df, batch_id):
+            for r in batch_df.collect():  # update mode: later emissions win
+                latest[r["conv_id"]] = (r["markdown"], r["n_turns"])
 
-    q = (
-        stream_fold_documents(spark.readStream.schema(ok.schema).parquet(src))
-        .writeStream.foreachBatch(collect_batch)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert latest == want
+        q = (
+            fold(spark.readStream.schema(ok.schema).parquet(src))
+            .writeStream.foreachBatch(collect_batch)
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / f"ckpt-{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert latest == want, name
 
 
 def test_page_clean_is_linear_in_whitespace_runs(spark):

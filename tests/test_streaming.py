@@ -3,8 +3,14 @@ batch path; new files are picked up without reprocessing old ones."""
 
 import os
 
-from autoscan_spark.operators.extract import extract_turns
+from autoscan_spark.operators.extract import drop_failed, extract_turns
+from autoscan_spark.operators.fold import fold_documents
 from autoscan_spark.sources.transcripts import synthesize_transcripts
+from autoscan_spark.streaming.stateful import (
+    STATE_VERSION,
+    stream_fold_documents,
+    versioned_checkpoint_dir,
+)
 from autoscan_spark.streaming.stream import run_stream_to_parquet, stream_extract, stream_turn_metrics
 
 
@@ -68,18 +74,25 @@ def test_stream_windowed_metrics(spark, tmp_path_factory):
     assert all(r["n_convs_approx"] > 0 for r in rows)
 
 
-def _run_fold_once(spark, src, ckpt, out, **fold_kwargs):
-    """One AvailableNow pass of the stateful fold; returns all rows the sink
-    has accumulated (parquet appends every update emission)."""
-    from autoscan_spark.streaming.stateful import stream_fold_documents
+def _fold_stream(extracted):
+    return fold_documents(drop_failed(extracted))
 
-    watermark = fold_kwargs.pop("watermark", None)
+
+def _expiring_fold(extracted):
+    return stream_fold_documents(extracted, idle_timeout_ms=60 * 60 * 1000)
+
+
+def _run_fold_once(spark, src, ckpt, out, fold=_fold_stream, watermark=None):
+    """One AvailableNow pass of a streaming fold over the extracted ``src``;
+    returns all rows the sink has accumulated (a foreachBatch sink survives
+    checkpoint recovery, which the memory sink does not, and appends every
+    update emission to parquet)."""
 
     def write_batch(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out)
 
     q = (
-        stream_fold_documents(stream_extract(spark, src, watermark=watermark), **fold_kwargs)
+        fold(stream_extract(spark, src, watermark=watermark))
         .writeStream.foreachBatch(write_batch)
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -90,18 +103,31 @@ def _run_fold_once(spark, src, ckpt, out, **fold_kwargs):
     return spark.read.parquet(out).collect()
 
 
+def _latest(rows):
+    """Latest emission per conversation: the one that has seen most turns."""
+    latest = {}
+    for r in rows:
+        if r["conv_id"] not in latest or r["n_turns"] > latest[r["conv_id"]]["n_turns"]:
+            latest[r["conv_id"]] = r
+    return latest
+
+
 def test_stateful_fold_event_time_expiry(spark, tmp_path_factory):
-    """expire_mode='event': once the watermark passes a conversation's last
-    activity + timeout, its state is dropped — a later turn starts a FRESH
-    fold instead of appending to the old one."""
+    """Once the watermark passes a conversation's last activity + timeout,
+    the expiring fold drops its state — a later turn starts a FRESH fold
+    instead of appending to the old one."""
     from datetime import datetime
 
     from autoscan_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
     base = str(tmp_path_factory.mktemp("eventexp"))
-    src, ckpt, out = (os.path.join(base, d) for d in ("src", "ckpt", "out"))
-    kw = dict(watermark="10 minutes", expire_mode="event",
-              idle_timeout_ms=60 * 60 * 1000)
+    src, out = (os.path.join(base, d) for d in ("src", "out"))
+    # version-scoped checkpoint: a keyed-state layout change bumps
+    # STATE_VERSION and lands in a sibling directory instead of
+    # mis-deserializing this one
+    ckpt = versioned_checkpoint_dir(os.path.join(base, "ckpt"))
+    assert ckpt.endswith(f"state-v{STATE_VERSION}")
+    kw = dict(watermark="10 minutes", fold=_expiring_fold)
 
     def write_rows(rows):
         spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.mode("append").parquet(src)
@@ -129,7 +155,7 @@ def test_stateful_fold_event_time_expiry(spark, tmp_path_factory):
 
 
 def test_stateful_fold_event_expiry_is_not_premature(spark, tmp_path_factory):
-    """expire_mode='event' must key the timer off the conversation's LAST
+    """The expiring fold must key the timer off the conversation's LAST
     EVENT TIME, not the current watermark: on a fresh query the first
     batch's watermark is 0 (epoch), and during backlog replay the watermark
     outruns wall-idle — neither may expire a conversation that is
@@ -142,8 +168,7 @@ def test_stateful_fold_event_expiry_is_not_premature(spark, tmp_path_factory):
 
     base = str(tmp_path_factory.mktemp("eventlive"))
     src, ckpt, out = (os.path.join(base, d) for d in ("src", "ckpt", "out"))
-    kw = dict(watermark="10 minutes", expire_mode="event",
-              idle_timeout_ms=60 * 60 * 1000)
+    kw = dict(watermark="10 minutes", fold=_expiring_fold)
 
     def write_rows(rows):
         spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.mode("append").parquet(src)
@@ -165,15 +190,13 @@ def test_stateful_fold_event_expiry_is_not_premature(spark, tmp_path_factory):
 
 
 def test_stateful_fold_rocksdb_state_store(spark, tmp_path_factory):
-    """The stateful fold runs (and state survives restart) on the RocksDB
+    """The streaming fold runs (and state survives restart) on the RocksDB
     state store provider — the memory-bounded provider a 10^9-conversation
     stream needs. Changelog files in the checkpoint prove RocksDB engaged."""
     import glob
 
     from pyspark.sql import functions as F
 
-    from autoscan_spark.operators.extract import drop_failed, extract_turns
-    from autoscan_spark.operators.fold import fold_documents
     from autoscan_spark.streaming.stateful import ROCKSDB_STATE_CONF, configure_rocksdb_state
 
     base = str(tmp_path_factory.mktemp("rocksdb"))
@@ -197,10 +220,7 @@ def test_stateful_fold_rocksdb_state_store(spark, tmp_path_factory):
                 spark.conf.set(k, v)
     full.unpersist()
 
-    latest = {}
-    for r in rows:
-        if r["conv_id"] not in latest or r["n_turns"] > latest[r["conv_id"]]["n_turns"]:
-            latest[r["conv_id"]] = r
+    latest = _latest(rows)
     batch = {
         r["conv_id"]: r
         for r in fold_documents(drop_failed(extract_turns(full, mode="low"))).collect()
@@ -215,25 +235,10 @@ def test_stateful_fold_rocksdb_state_store(spark, tmp_path_factory):
 
 def test_stateful_stream_fold_converges_to_batch(spark, tmp_path_factory):
     """Turns arrive across two separate stream runs (restart w/ checkpoint):
-    keyed state must persist, and the final emission per conversation must
-    equal the batch fold of all turns."""
-    import os as _os
-
-    from autoscan_spark.operators.extract import drop_failed, extract_turns
-    from autoscan_spark.operators.fold import fold_documents
-    from autoscan_spark.streaming.stateful import (
-        STATE_VERSION,
-        stream_fold_documents,
-        versioned_checkpoint_dir,
-    )
-
+    the fold's state must persist, and the final emission per conversation
+    must equal the batch fold of all turns."""
     base = str(tmp_path_factory.mktemp("statefold"))
-    src = _os.path.join(base, "src")
-    # version-scoped checkpoint: a _STATE_SCHEMA layout change bumps
-    # STATE_VERSION and lands in a sibling directory instead of
-    # mis-deserializing this one
-    ckpt = versioned_checkpoint_dir(_os.path.join(base, "ckpt"))
-    assert ckpt.endswith(f"state-v{STATE_VERSION}")
+    src, ckpt, out = (os.path.join(base, d) for d in ("src", "ckpt", "out"))
 
     # 24 conversations include -error ones, whose failed turns the stream
     # fold must drop like the batch fold does
@@ -241,35 +246,12 @@ def test_stateful_stream_fold_converges_to_batch(spark, tmp_path_factory):
     # split each conversation's turns across the two batches
     full.filter("turn_idx % 2 = 1").write.mode("append").parquet(src)
 
-    out = _os.path.join(base, "out")
-
-    def run_once():
-        # foreachBatch sink: supports checkpoint recovery (memory sink does
-        # not), appends each micro-batch's updates to parquet
-        def write_batch(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            stream_fold_documents(stream_extract(spark, src))
-            .writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out).collect()
-
-    first = run_once()
+    first = _run_fold_once(spark, src, ckpt, out)
     assert all(r["n_turns"] > 0 for r in first)
 
     full.filter("turn_idx % 2 = 0").write.mode("append").parquet(src)
-    second = run_once()
     # latest emission per conversation (parquet accumulates all updates)
-    latest = {}
-    for r in second:
-        if r["conv_id"] not in latest or r["n_turns"] > latest[r["conv_id"]]["n_turns"]:
-            latest[r["conv_id"]] = r
+    latest = _latest(_run_fold_once(spark, src, ckpt, out))
 
     batch = {
         r["conv_id"]: r

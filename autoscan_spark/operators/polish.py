@@ -29,6 +29,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from autoscan_spark.operators.extract import _drop_zip_finders
+
 POLISH_VERSION = "polish-v1"
 
 _HYPHEN_JOIN = re.compile(r"(\w)-\n\n([a-z])")
@@ -62,6 +64,7 @@ def polish_documents(docs: DataFrame) -> DataFrame:
     the original markdown on kernel failure and a skip for empty content."""
 
     def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_finders()
         for pdf in batches:
             def one(md):
                 if md is None or not md.strip():
@@ -74,5 +77,6 @@ def polish_documents(docs: DataFrame) -> DataFrame:
             pdf = pdf.copy()
             pdf["markdown"] = pdf["markdown"].map(one)
             yield pdf
+        _drop_zip_finders()
 
     return docs.mapInPandas(apply, schema=docs.schema)

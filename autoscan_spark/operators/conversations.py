@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from autoscan_spark.operators.sqlutil import qcol, qident, reject_reserved
+from autoscan_spark.operators.sqlutil import (
+    qcol,
+    qident,
+    reject_reserved,
+    split_words,
+    with_words,
+)
 
 TEMPLATES = ("chatml", "colon")
 
@@ -165,10 +171,7 @@ def response_echo(
     # column NAME (e.g. conv_col="__rg") can collide with the hoists
     reject_reserved(pairs, ("__rw", "__cw", "__rg", "__cg"), "response_echo")
     return (
-        pairs.withColumn(
-            "__rw", F.expr("split(trim(lower(response)), '\\\\s+')")
-        )
-        .withColumn("__cw", F.expr("split(trim(lower(context)), '\\\\s+')"))
+        with_words(with_words(pairs, "response", "__rw"), "context", "__cw")
         .withColumn("__rg", F.expr(shingle_expr("__rw", n)))
         .withColumn("__cg", F.expr(shingle_expr("__cw", n)))
         .select(
@@ -223,7 +226,7 @@ def preference_pairs(
     reject_reserved(
         df.select(qcol(conv_col)), ("__s", "__arr"), "preference_pairs"
     )
-    words = f"split(trim(lower({qident(text_col)})), '\\\\s+')"
+    words = split_words(qident(text_col))
     # BIGINT literal before the multiply — INT*INT under ANSI mode throws
     # ARITHMETIC_OVERFLOW for responses with >= 2148 alphabetic words
     score = (
@@ -470,7 +473,7 @@ def trim_context(
     # empty/whitespace-only turns count 0 tokens (split('') yields [''])
     n_tokens = F.when(
         F.trim(qcol(text_col)) == "", F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(qcol(text_col)), r"\s+")))
+    ).otherwise(F.size(F.expr(split_words(qident(text_col), lower=False))))
     w_desc = Window.partitionBy(qcol(conv_col)).orderBy(qcol(turn_col).desc())
     cum = w_desc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
@@ -524,14 +527,13 @@ def turn_redundancy(
         df, ("__prev", "__tw", "__pw", "__tg", "__pg"), "turn_redundancy"
     )
     w = Window.partitionBy(qcol(conv_col)).orderBy(qcol(turn_col))
-    return (
+    pairs = (
         df.filter(qcol(role_col) == assistant_role)
         .withColumn("__prev", F.lag(qcol(text_col)).over(w))
         .filter(F.col("__prev").isNotNull())
-        .withColumn(
-            "__tw", F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-        )
-        .withColumn("__pw", F.expr("split(trim(lower(__prev)), '\\\\s+')"))
+    )
+    return (
+        with_words(with_words(pairs, text_col, "__tw"), "__prev", "__pw")
         .withColumn("__tg", F.expr(shingle_expr("__tw", n)))
         .withColumn("__pg", F.expr(shingle_expr("__pw", n)))
         .select(

@@ -22,7 +22,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from autoscan_spark.operators.sqlutil import qcol, qident, reject_reserved
+from autoscan_spark.operators.sqlutil import (
+    qcol,
+    qident,
+    reject_reserved,
+    split_words,
+    with_words,
+)
 from pyspark.sql.functions import pandas_udf
 
 # MinHash permutation parameters: h_i(x) = (a_i * x + b_i) mod P over
@@ -72,11 +78,13 @@ def shingle_expr(words_col: str, n: int) -> str:
     joined text. The single definition every shingle consumer shares
     (minhash/jaccard via ``word_shingles``, SFT echo via
     ``conversations.response_echo``) so their shingle semantics cannot
-    silently diverge. Takes a COLUMN, never an inline split: lambda
-    bodies are re-evaluated per element with no common-subexpression
-    reuse, so an inlined ``slice(split(text), i, n)`` re-runs the regex
-    split once per shingle — O(words²) per document (measured as the
-    dominant cost of the LSH signature stage)."""
+    silently diverge, over words from the single splitter
+    (``sqlutil.split_words``). Takes a COLUMN projected by
+    ``sqlutil.with_words``, never an inline split: lambda bodies are
+    re-evaluated per element with no common-subexpression reuse, so an
+    inlined ``slice(split(text), i, n)`` re-runs the regex split once per
+    shingle — O(words²) per document (measured as the dominant cost of
+    the LSH signature stage)."""
     return (
         f"array_distinct(CASE WHEN size({words_col}) >= {n} THEN "
         f"transform(sequence(0, size({words_col}) - {n}), "
@@ -93,10 +101,7 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFram
     keeps the hoist (non-cheap producer, multiple references)."""
     reject_reserved(df, ("__ws_hoist", "shingles"), "word_shingles")
     return (
-        df.withColumn(
-            "__ws_hoist",
-            F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')"),
-        )
+        with_words(df, text_col, "__ws_hoist")
         .withColumn("shingles", F.expr(shingle_expr("__ws_hoist", n)))
         .drop("__ws_hoist")
     )
@@ -515,30 +520,17 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def window_hash_expr(text_col: str, n: int, words_col: str | None = None) -> str:
-    """SQL expression: array of ``unhex(md5(...))`` hashes of the text's
-    n-word windows (empty array below n words). Shared by duplicate_spans
-    and benchmark_contamination so both sides hash identically.
-
-    Pass ``words_col`` (an already-hoisted word-array column) from any
-    per-row pipeline: lambda bodies re-evaluate per element with no CSE,
-    so inlining the split makes the expression O(words²) per document
-    (one full regex re-split per window). The ``text_col`` fallback
-    exists only for contexts that cannot hoist."""
-    words = words_col or f"split(trim({qident(text_col)}), '\\\\s+')"
+def window_hash_expr(words: str, n: int) -> str:
+    """SQL expression: array of ``unhex(md5(...))`` hashes of the n-word
+    windows of the hoisted word-array column ``words`` (empty array below
+    n words). Shared by duplicate_spans, remove_duplicate_spans and
+    benchmark_contamination so every side hashes identically. Takes a
+    column, not an inline split (see ``sqlutil.split_words``)."""
     return (
         f"CASE WHEN size({words}) >= {n} THEN "
         f"transform(sequence(0, size({words}) - {n}), "
         f"i -> unhex(md5(concat_ws(' ', slice({words}, i + 1, {n}))))) "
         f"ELSE array() END"
-    )
-
-
-def _hoist_words(df: DataFrame, text_col: str, out: str) -> DataFrame:
-    """Materialize the word split once per row (see window_hash_expr)."""
-    reject_reserved(df, (out,), "_hoist_words")
-    return df.withColumn(
-        out, F.expr(f"split(trim({qident(text_col)}), '\\\\s+')")
     )
 
 
@@ -570,13 +562,11 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    exploded = _hoist_words(
-        _spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__whw"
-    ).select(
+    base = _spread(df.select(qcol(id_col), qcol(text_col)))
+    reject_reserved(base, ("__whw",), "duplicate_spans")
+    exploded = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
-        F.explode(
-            F.expr(window_hash_expr(text_col, n, words_col="__whw"))
-        ).alias("__wh"),
+        F.explode(F.expr(window_hash_expr("__whw", n))).alias("__wh"),
     )
     with_counts = exploded.withColumn(
         "__cnt", F.count("*").over(Window.partitionBy("__wh"))
@@ -837,13 +827,14 @@ def remove_duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    words_expr = f"split(trim({qident(text_col)}), '\\\\s+')"
+    words_expr = split_words(qident(text_col), lower=False)
     base = _spread(df.select(qcol(id_col), qcol(text_col)))
-    wins = _hoist_words(base, text_col, "__whw").select(
+    reject_reserved(base, ("__whw",), "remove_duplicate_spans")
+    wins = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
-        F.posexplode(
-            F.expr(window_hash_expr(text_col, n, words_col="__whw"))
-        ).alias("__wstart", "__wh"),
+        F.posexplode(F.expr(window_hash_expr("__whw", n))).alias(
+            "__wstart", "__wh"
+        ),
     )
     wh = Window.partitionBy("__wh")
     tagged = wins.withColumn("__cnt", F.count("*").over(wh)).withColumn(
@@ -929,23 +920,18 @@ def benchmark_contamination(
     with fewer than n words emit no windows and are absent (nothing to
     match on).
     """
+    reject_reserved(benchmark, ("__whw",), "benchmark_contamination")
     bench_windows = (
-        _hoist_words(benchmark, bench_text_col, "__whw")
-        .select(
-            F.explode(
-                F.expr(window_hash_expr(bench_text_col, n, words_col="__whw"))
-            ).alias("__wh")
-        )
+        with_words(benchmark, bench_text_col, "__whw", lower=False)
+        .select(F.explode(F.expr(window_hash_expr("__whw", n))).alias("__wh"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    doc_windows = _hoist_words(
-        _spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__whw"
-    ).select(
+    base = _spread(df.select(qcol(id_col), qcol(text_col)))
+    reject_reserved(base, ("__whw",), "benchmark_contamination")
+    doc_windows = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
-        F.explode(
-            F.expr(window_hash_expr(text_col, n, words_col="__whw"))
-        ).alias("__wh"),
+        F.explode(F.expr(window_hash_expr("__whw", n))).alias("__wh"),
     )
     return (
         doc_windows.join(F.broadcast(bench_windows), on="__wh", how="left")
@@ -1375,7 +1361,6 @@ def winnow_fingerprints(
     if k < 1 or window < 1:
         raise ValueError(f"k and window must be >= 1, got k={k} window={window}")
     reject_reserved(df, ("__wn_w", "__wn_h"), "winnow_fingerprints")
-    tc = qident(text_col)
     hashes = (
         f"CASE WHEN size(__wn_w) >= {k} THEN "
         f"transform(sequence(0, size(__wn_w) - {k}), "
@@ -1389,7 +1374,7 @@ def winnow_fingerprints(
         f"ELSE array(array_min(__wn_h)) END)"
     )
     return (
-        df.withColumn("__wn_w", F.expr(f"split(trim(lower({tc})), '\\\\s+')"))
+        with_words(df, text_col, "__wn_w")
         .withColumn("__wn_h", F.expr(hashes))
         .select(qcol(id_col), F.expr(selected).alias("fingerprints"))
     )

@@ -45,6 +45,7 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -81,22 +82,7 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-_ARROW_SPAN_TYPE = pa.list_(
-    pa.struct([("start", pa.int32()), ("end", pa.int32()), ("kind", pa.string())])
-)
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("extracted_text", pa.string()),
-        ("spans", _ARROW_SPAN_TYPE),
-        ("status", pa.string()),
-        ("kind", pa.string()),
-        ("in_chars", pa.int64()),
-        ("out_chars", pa.int64()),
-        ("extractor_version", pa.string()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
 
 
 def _drop_zip_finders() -> None:
@@ -123,7 +109,7 @@ def _extract_batches(
     _drop_zip_finders()
     import pyarrow.compute as pc
 
-    span_fields = list(_ARROW_SPAN_TYPE.value_type)
+    span_fields = list(_ARROW_SCHEMA.field("spans").type.value_type)
     prev_conv = prev_out = context = None
     for batch in batches:
         texts = batch.column("text").to_pylist()

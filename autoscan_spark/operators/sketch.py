@@ -29,7 +29,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from autoscan_spark.operators.sqlutil import qcol, qident, reject_reserved
+from autoscan_spark.operators.sqlutil import (
+    qcol,
+    qident,
+    reject_reserved,
+    split_words,
+    with_words,
+)
 
 
 def _coords(word: Column, width: int, depth: int) -> Column:
@@ -81,9 +87,7 @@ def cms_sketch(
     # the md5 coordinate chain is the operator's cost and a one-split
     # input would run it on one core (no-op at real scale; see _spread)
     words = _spread(df.select(qcol(text_col))).select(
-        F.explode(
-            F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-        ).alias("__word")
+        F.explode(F.expr(split_words(qident(text_col)))).alias("__word")
     )
     coords = words.select(
         F.posexplode(
@@ -162,9 +166,7 @@ def cms_heavy_hitters(
 
     sketch = cms_sketch(df, text_col=text_col, width=width, depth=depth)
     cands = _spread(df.select(qcol(text_col))).select(
-        F.explode(
-            F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-        ).alias("word")
+        F.explode(F.expr(split_words(qident(text_col)))).alias("word")
     ).distinct()
     est = cms_estimate(sketch, cands, word_col="word", width=width, depth=depth)
     return est.filter(F.col("est_count") >= int(min_count))
@@ -208,9 +210,7 @@ def hll_registers(
     spread = _spread(df.select(qcol(text_col)))
     if n <= 1:
         words = spread.select(
-            F.explode(
-                F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-            ).alias("__word")
+            F.explode(F.expr(split_words(qident(text_col)))).alias("__word")
         )
     else:
         words = _word_grams(spread, text_col, n, "__word").select("__word")
@@ -330,9 +330,7 @@ def _word_grams(df: DataFrame, text_col: str, n: int, out: str) -> DataFrame:
 
     reject_reserved(df, ("__bg_w", out), "_word_grams")
     return (
-        df.withColumn(
-            "__bg_w", F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-        )
+        with_words(df, text_col, "__bg_w")
         # drop short rows BEFORE shingling: shingle_expr's fewer-than-n
         # fallback (one whole-text shingle, right for minhash recall) is
         # wrong here — a 2-word doc cannot contain an 8-gram

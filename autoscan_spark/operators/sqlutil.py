@@ -7,6 +7,10 @@ quote). Every operator that builds SQL text routes names through
 ``qident`` and literals through ``qlit`` (the pattern ``profile_table``
 established). ``F.col``/``select``/``groupBy`` call sites keep the plain
 name — the DataFrame API resolves those without the SQL parser.
+
+What a word is lives here too: ``split_words`` is the one tokenizing
+fragment (whitespace split of the trimmed, optionally lowercased text)
+and ``with_words`` the one hoist that projects it into a column.
 """
 
 from __future__ import annotations
@@ -44,3 +48,36 @@ def qcol(name: str):
     from pyspark.sql import functions as F
 
     return F.col(qident(name))
+
+
+def split_words(sql: str, lower: bool = True) -> str:
+    """SQL fragment: the words of the SQL expression ``sql`` — the text
+    (lowercased with ``lower``) trimmed of spaces and split on whitespace
+    runs. ``trim`` strips only spaces, so a leading tab or newline yields
+    an empty first word; empty or all-space text yields ``['']``; NULL
+    yields NULL. Pass a column through ``qident`` first.
+
+    Inside a lambda, reference a ``with_words`` column instead of
+    inlining this fragment: lambda bodies re-evaluate per element with no
+    common-subexpression reuse, so an inlined split re-runs the regex
+    once per element — O(words²) per document."""
+    text = f"lower({sql})" if lower else sql
+    return f"split(trim({text}), '\\\\s+')"
+
+
+def with_words(df, text_col: str, out: str, lower: bool = True):
+    """Project ``split_words`` of ``text_col`` ONCE into column ``out``.
+
+    Catalyst has no common-subexpression reuse across lambda-bearing
+    expressions, so inlining the split N times evaluates it N times.
+    Downstream expressions reference the projected attribute instead;
+    CollapseProject declines to re-inline a non-cheap producer referenced
+    more than once, so for non-generator consumers the split stays
+    single-evaluation (pinned by plan inspection in tests/test_plans.py).
+    An ``F.explode`` over ``out`` does not get that guarantee: Catalyst
+    infers the filter ``size(out) > 0 AND isnotnull(out)``, pushes it
+    below this projection and re-evaluates the split there, so the regex
+    runs three times per document (``explode_outer`` infers no filter)."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(out, F.expr(split_words(qident(text_col), lower)))

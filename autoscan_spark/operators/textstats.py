@@ -12,7 +12,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from autoscan_spark.operators.sqlutil import qcol, qident, reject_reserved
+from autoscan_spark.operators.sqlutil import (
+    qcol,
+    qident,
+    reject_reserved,
+    split_words,
+    with_words,
+)
 from pyspark.sql.functions import pandas_udf
 
 # Language profiles: distinctive stopwords per language. Scores are stopword
@@ -25,19 +31,6 @@ LANG_STOPWORDS = {
 }
 
 
-def _with_words(df: DataFrame, text_col: str, col: str) -> DataFrame:
-    """Project the tokenized-words array ONCE into ``col``.
-
-    Catalyst has no common-subexpression reuse across lambda-bearing
-    expressions, so inlining the ``split`` string N times evaluates it N
-    times. Hoisting it into its own projection makes downstream expressions
-    reference the attribute instead; CollapseProject declines to re-inline a
-    non-cheap producer referenced more than once, so the split stays
-    single-evaluation (verified by plan inspection in tests/test_plans.py).
-    """
-    return df.withColumn(col, F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')"))
-
-
 def lang_id(
     df: DataFrame, text_col: str = "text", words_col: str | None = None
 ) -> DataFrame:
@@ -46,13 +39,13 @@ def lang_id(
     JVM-side: per-language stopword-hit counts via array_intersect-style
     filters over the token array; argmax via array_max over (score, lang)
     structs; CJK short-circuit via a unicode-range regexp count. The token
-    split is hoisted into one projected column (``_with_words``) so it is
+    split is hoisted into one projected column (``with_words``) so it is
     evaluated once, not once per language score; pass ``words_col`` to
-    reuse an already-projected ``_with_words`` column when composing with
+    reuse an already-projected ``with_words`` column when composing with
     other word-level ops (corpus_prep shares one split this way).
     """
     words = words_col or "__lang_words"
-    base = df if words_col else _with_words(df, text_col, words)
+    base = df if words_col else with_words(df, text_col, words)
     wq = qident(words)  # words_col is user-suppliable — quote in SQL text
     scores = []
     for lang, stops in LANG_STOPWORDS.items():
@@ -78,10 +71,10 @@ def quality_features(
     """Add quality-heuristic feature columns (all JVM expressions):
     n_chars, n_words, mean_word_len, punct_ratio, stopword_ratio,
     upper_ratio, and a composite ``quality_ok`` boolean gate. The token
-    split is hoisted into one projected column (see ``_with_words``);
+    split is hoisted into one projected column (see ``with_words``);
     ``words_col`` reuses an existing projection when composing."""
     words = words_col or "__qf_words"
-    base = df if words_col else _with_words(df, text_col, words)
+    base = df if words_col else with_words(df, text_col, words)
     wq = qident(words)
     all_stops = ",".join(
         f"'{w}'" for stops in LANG_STOPWORDS.values() for w in stops
@@ -130,8 +123,9 @@ def quality_features(
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``n_ws_tokens`` (whitespace) and ``n_bpe_tokens`` (BPE-ish regex:
     word pieces + standalone punctuation — the usual pre-tokenizer shape)."""
+    words = split_words(qident(text_col), lower=False)
     return df.withColumn(
-        "n_ws_tokens", F.expr(f"size(split(trim({qident(text_col)}), '\\\\s+'))").cast("long")
+        "n_ws_tokens", F.expr(f"size({words})").cast("long")
     ).withColumn(
         "n_bpe_tokens",
         F.expr(f"size(regexp_extract_all({qident(text_col)}, '\\\\w+|[^\\\\w\\\\s]', 0))").cast("long"),
@@ -187,7 +181,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     50k-distinct-word timing test (tests/test_driver_contract.py).
     """
     words = "__rep_words"
-    base = _with_words(df, text_col, words)
+    base = with_words(df, text_col, words)
     # longest run in the sorted array == max occurrence count of any word;
     # `w <=> acc.prev` is null-safe so the first element starts run=1
     run = "IF(w <=> acc.prev, acc.run + 1L, 1L)"
@@ -475,7 +469,7 @@ def c4_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
     lines = f"split({qident(text_col)}, '\\n')"
     kept = (
         f"filter({lines}, l -> trim(l) rlike '[.!?\"]$' "
-        f"AND size(split(trim(l), '\\\\s+')) >= 3)"
+        f"AND size({split_words('l', lower=False)}) >= 3)"
     )
     return (
         df.withColumn("__kept", F.expr(kept))
@@ -519,10 +513,10 @@ def gopher_quality(
     and the composite gate ``gopher_ok``. Counting uses ``replace``/
     ``substring`` (not regex) wherever possible so the DuckDB oracle
     mirrors it exactly; every ratio is an exact integer division. The
-    token split is hoisted (see ``_with_words``); ``words_col`` reuses an
+    token split is hoisted (see ``with_words``); ``words_col`` reuses an
     existing projection when composing."""
     words = words_col or "__gq_words"
-    base = df if words_col else _with_words(df, text_col, words)
+    base = df if words_col else with_words(df, text_col, words)
     t = qident(text_col)
     wq = qident(words)
     lines = f"split({t}, '\\n')"
@@ -603,12 +597,9 @@ def chunk_documents(
         raise ValueError(f"stride must be >= 1, got {stride}")
     tc = qident(text_col)  # quoted identifier
     df = df.filter(F.expr(f"{tc} IS NOT NULL AND length(trim({tc})) > 0"))
-    # Hoist the regex split into its own projection: Catalyst has no
-    # common-subexpression reuse across lambda bodies, so inlining the
-    # split would re-tokenize the full document FOUR times per row
-    # (sequence bound + two slices + size). CollapseProject does not
-    # re-inline a non-cheap producer referenced more than once, so the
-    # hoisted array stays single-eval in the physical plan.
+    # hoisted split (see ``with_words``): inlined, it would re-tokenize
+    # the full document FOUR times per row (sequence bound + two slices +
+    # size)
     words = "__words"
     chunks = (
         f"transform("
@@ -617,9 +608,7 @@ def chunk_documents(
         f"concat_ws(' ', slice({words}, i * {stride} + 1, {window_tokens})) AS chunk, "
         f"size(slice({words}, i * {stride} + 1, {window_tokens})) AS n))"
     )
-    return df.withColumn(
-        "__words", F.expr(f"split(trim({tc}), '\\\\s+')")
-    ).select(
+    return with_words(df, text_col, words, lower=False).select(
         F.col(id_col), F.posexplode(F.expr(chunks)).alias("chunk_id", "__c")
     ).select(
         id_col,
@@ -627,6 +616,19 @@ def chunk_documents(
         F.col("__c.start").cast("long").alias("chunk_start"),
         F.col("__c.n").cast("long").alias("n_chunk_tokens"),
         F.col("__c.chunk").alias("chunk_text"),
+    )
+
+
+def _bigrams_expr(words: str) -> str:
+    """SQL expression: ``struct(w1, w2)`` of each pair of consecutive words
+    in the hoisted word-array column ``words`` (empty below 2 words). Takes
+    a column, not an inline split: ``{words}[j]`` inside the lambda would
+    re-run the split once per bigram — O(words²) per document."""
+    return (
+        f"CASE WHEN size({words}) >= 2 THEN "
+        f"transform(sequence(1, size({words}) - 1), "
+        f"j -> struct({words}[j - 1] AS w1, {words}[j] AS w2)) "
+        f"ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>) END"
     )
 
 
@@ -671,20 +673,8 @@ def bigram_rarity(
     """
     from pyspark.sql.window import Window
 
-    # words hoisted into a projection: `{words}[j]` inlined in the lambda
-    # would re-run the regex split once per BIGRAM (lambda bodies have no
-    # CSE) — O(words²) per document
-    words = "__bgw"
-    bigrams_expr = (
-        f"CASE WHEN size({words}) >= 2 THEN "
-        f"transform(sequence(1, size({words}) - 1), "
-        f"j -> struct({words}[j - 1] AS w1, {words}[j] AS w2)) "
-        f"ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>) END"
-    )
-    doc_bi = df.withColumn(
-        "__bgw", F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-    ).select(
-        qcol(id_col), F.explode(F.expr(bigrams_expr)).alias("__bg")
+    doc_bi = with_words(df, text_col, "__bgw").select(
+        qcol(id_col), F.explode(F.expr(_bigrams_expr("__bgw"))).alias("__bg")
     ).select(qcol(id_col), F.col("__bg.w1").alias("__w1"), F.col("__bg.w2").alias("__w2"))
     return (
         doc_bi.withColumn(
@@ -727,7 +717,7 @@ def unigram_familiarity(
     """
     words = df.select(
         F.col(id_col),
-        F.explode(F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")).alias("__w"),
+        F.explode(F.expr(split_words(qident(text_col)))).alias("__w"),
     )
     freqs = words.groupBy("__w").agg(F.count("*").cast("long").alias("__c"))
     total = freqs.agg(F.sum("__c").alias("__tot"))
@@ -795,7 +785,7 @@ def token_frequencies(
     (n DESC, token ASC) tie-break."""
     words = "__tf_words"
     toks = (
-        _with_words(df, text_col, words)
+        with_words(df, text_col, words)
         .select(F.explode(F.col(words)).alias("token"))
         .filter(F.col("token") != "")
     )
@@ -963,9 +953,7 @@ def span_corruption(
         f")), ' ')"
     )
     return (
-        df.withColumn(
-            "__scw", F.expr(f"split(trim({qident(text_col)}), '\\\\s+')")
-        )
+        with_words(df, text_col, w, lower=False)
         .filter(F.expr(f"size({w}) >= {g}"))
         .withColumn("__offs", F.expr(offs_expr))
         .select(
@@ -1007,8 +995,12 @@ def readability(
         f"greatest(1, size(regexp_extract_all(lower(x), '[aeiouy]+', 0))))"
     )
     return (
-        df.filter(F.expr(f"{tc} IS NOT NULL AND length(trim({tc})) > 0"))
-        .withColumn("__rdw", F.expr(f"split(trim({tc}), '\\\\s+')"))
+        with_words(
+            df.filter(F.expr(f"{tc} IS NOT NULL AND length(trim({tc})) > 0")),
+            text_col,
+            w,
+            lower=False,
+        )
         .select(
             qcol(id_col),
             F.expr(f"CAST(size({w}) AS BIGINT)").alias("n_words"),
@@ -1061,7 +1053,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql.window import Window
 
-    terms = _with_words(
+    terms = with_words(
         df.select(qcol(id_col), qcol(text_col)), text_col, "__tw"
     ).select(
         qcol(id_col).alias("doc_id"),
@@ -1126,18 +1118,9 @@ def pmi_collocations(
     from pyspark.sql.window import Window
 
     reject_reserved(df, ("__pmw", "__pmb"), "pmi_collocations")
-    words = "__pmw"
-    bigrams_expr = (
-        f"CASE WHEN size({words}) >= 2 THEN "
-        f"transform(sequence(1, size({words}) - 1), "
-        f"j -> struct({words}[j - 1] AS w1, {words}[j] AS w2)) "
-        f"ELSE CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>) END"
-    )
     pairs = (
-        df.withColumn(
-            words, F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-        )
-        .select(F.explode(F.expr(bigrams_expr)).alias("__pmb"))
+        with_words(df, text_col, "__pmw")
+        .select(F.explode(F.expr(_bigrams_expr("__pmw"))).alias("__pmb"))
         .select(F.col("__pmb.w1").alias("w1"), F.col("__pmb.w2").alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
@@ -1197,7 +1180,7 @@ def lexicon_hits(
         raise ValueError("lexicon must be non-empty")
     reject_reserved(df, ("__lx_w",), "lexicon_hits")
     in_list = ",".join("'" + w.replace("'", "''").lower() + "'" for w in lexicon)
-    base = _with_words(df, text_col, "__lx_w")
+    base = with_words(df, text_col, "__lx_w")
     hits = f"size(filter(__lx_w, w -> w IN ({in_list})))"
     return base.select(
         qcol(id_col),
@@ -1273,7 +1256,7 @@ def oov_rate(
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     reject_reserved(df, ("__ov_w",), "oov_rate")
-    words = _with_words(df, text_col, "__ov_w").select(
+    words = with_words(df, text_col, "__ov_w").select(
         qcol(id_col), F.explode("__ov_w").alias("__word")
     )
     vocab = (
@@ -1384,7 +1367,7 @@ def ngram_commonness(
     from autoscan_spark.operators.dedup import _spread, shingle_expr
 
     grams = (
-        _with_words(_spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__nc_w")
+        with_words(_spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__nc_w")
         .withColumn("__nc_g", F.expr(shingle_expr("__nc_w", n)))
         .select(
             qcol(id_col).alias("__id"),
@@ -1595,9 +1578,7 @@ def word_entropy(
     counts = (
         df.select(
             qcol(id_col),
-            F.explode(
-                F.expr(f"split(trim(lower({qident(text_col)})), '\\\\s+')")
-            ).alias("__w"),
+            F.explode(F.expr(split_words(qident(text_col)))).alias("__w"),
         )
         .groupBy(qcol(id_col), F.col("__w"))
         .agg(F.count(F.lit(1)).alias("__c"))

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from autoscan_spark.operators.extract import drop_failed, extract_turns
 from autoscan_spark.operators.fold import fold_documents
 from autoscan_spark.operators.metrics import conversation_metrics
+from autoscan_spark.operators.sqlutil import split_words, with_words
 from autoscan_spark.sources.tables import load_table
 from autoscan_spark.sources.transcripts import (
     TRANSCRIPTS_FROM_DOCUMENTS_DUCKDB,
@@ -232,7 +233,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
+        F.size(F.expr(split_words("text", lower=False))).cast("long").alias("n_tokens"),
     )
 
 
@@ -248,11 +249,9 @@ _STOPWORDS = ("the", "a", "and", "of", "to", "in")
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality heuristics: length, word count, stopword ratio (×1e6 rounded,
     so cross-engine float hashing is stable)."""
-    from autoscan_spark.operators.textstats import _with_words
-
     stop_list = ",".join(f"'{w}'" for w in _STOPWORDS)
     # hoisted words column: one split per row, not one per consumer expr
-    docs = _with_words(_docs(spark, sf_dir), "text", "__w")
+    docs = with_words(_docs(spark, sf_dir), "text", "__w")
     n_words = F.expr("size(__w)")
     n_stop = F.expr(f"size(filter(__w, w -> w in ({stop_list})))")
     return docs.select(
@@ -879,14 +878,13 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     just each operator in isolation."""
     from autoscan_spark.operators.dedup import exact_dedup
     from autoscan_spark.operators.textstats import (
-        _with_words,
         lang_id,
         quality_features,
         token_counts,
     )
 
     # one shared words projection for both word-level ops (lang + quality)
-    docs = _with_words(_docs(spark, sf_dir), "text", "__words")
+    docs = with_words(_docs(spark, sf_dir), "text", "__words")
     en = lang_id(docs, words_col="__words").filter(F.col("lang_pred") == "en")
     gated = (
         quality_features(en, words_col="__words")
@@ -2558,20 +2556,24 @@ SELECT doc_id,
 FROM cleaned"""
 
 
+def _bench_prefixes(docs: DataFrame) -> DataFrame:
+    """The decontamination benchmark set: the first 12 words of every 25th
+    document, so contamination exists by construction."""
+    return docs.filter(F.expr("doc_id % 25 = 0")).select(
+        F.expr(
+            f"concat_ws(' ', slice({split_words('text', lower=False)}, 1, 12))"
+        ).alias("text")
+    )
+
+
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination: benchmark = the first 12 words of every
-    25th document (so contamination exists by construction); per-doc 8-gram
+    """Eval-set decontamination against ``_bench_prefixes``: per-doc 8-gram
     overlap ppm + gate. The benchmark window set broadcasts — the corpus
     side never shuffles."""
     from autoscan_spark.operators.dedup import benchmark_contamination
 
     docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.expr("doc_id % 25 = 0")).select(
-        F.expr(
-            "concat_ws(' ', slice(split(trim(text), '\\\\s+'), 1, 12))"
-        ).alias("text")
-    )
-    return benchmark_contamination(docs, bench, n=8)
+    return benchmark_contamination(docs, _bench_prefixes(docs), n=8)
 
 
 _Q_DECONTAM_SQL = r"""
@@ -4476,17 +4478,12 @@ FROM a"""
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter benchmark decontamination — the sketch-based scale
     path for the same benchmark set `decontaminate` checks exactly
-    (first 12 words of every 25th document, 8-gram windows); supersets
+    (``_bench_prefixes``, 8-gram windows); supersets
     the exact overlap, false positives bounded by bits/k."""
     from autoscan_spark.operators.sketch import bloom_contamination
 
     docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.expr("doc_id % 25 = 0")).select(
-        F.expr(
-            "concat_ws(' ', slice(split(trim(text), '\\\\s+'), 1, 12))"
-        ).alias("text")
-    )
-    return bloom_contamination(docs, bench, n=8)
+    return bloom_contamination(docs, _bench_prefixes(docs), n=8)
 
 
 _Q_BLOOM_SQL = r"""

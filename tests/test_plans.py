@@ -205,19 +205,31 @@ def test_cosine_is_jvm_side(spark, sf_dir):
 
 
 def test_words_split_evaluated_once_per_plan(spark, sf_dir):
-    """The tokenizing split is hoisted into one projection (_with_words);
+    """The tokenizing split is hoisted into one projection (with_words);
     inlining it would evaluate it once per consumer expression (5× in
-    lang_id, 4× in quality_features, 3× in repetition_stats) because
+    lang_id, 4× in quality_features, 3× in repetition_stats, once per
+    shingle, window or bigram in the lambda-bearing ops) because
     Catalyst has no CSE across lambda-bearing expressions. CollapseProject
     must NOT re-inline the non-cheap producer."""
+    from autoscan_spark.operators.dedup import winnow_fingerprints, word_shingles
     from autoscan_spark.operators.textstats import (
+        bigram_rarity,
         lang_id,
         quality_features,
         repetition_stats,
+        word_entropy,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for op in (lang_id, quality_features, repetition_stats):
+    for op in (
+        lang_id,
+        quality_features,
+        repetition_stats,
+        word_shingles,
+        winnow_fingerprints,
+        bigram_rarity,
+        word_entropy,
+    ):
         plan = _executed_plan(op(docs))
         n = plan.count("split(trim(lower")
         assert n == 1, f"{op.__name__}: split evaluated {n}× in plan:\n{plan[:2000]}"

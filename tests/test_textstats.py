@@ -63,15 +63,51 @@ def test_gopher_quality_signal_values_exact(spark):
 
 def test_gopher_quality_shares_words_projection(spark):
     # words_col reuse path: identical results with a pre-projected split
-    from autoscan_spark.operators.textstats import _with_words
+    from autoscan_spark.operators.sqlutil import with_words
 
     df = _df(spark, [GOOD, "zz " * 30])
     a = gopher_quality(df, min_words=5).select("doc_id", "gopher_ok")
-    pre = _with_words(df, "text", "__w")
+    pre = with_words(df, "text", "__w")
     b = gopher_quality(pre, words_col="__w", min_words=5).select(
         "doc_id", "gopher_ok"
     )
     assert a.collect() == b.collect()
+
+
+def test_split_words_tokens(spark):
+    """The one word splitter every text operator tokenizes through: trim
+    spaces, split on whitespace runs (tabs and newlines too), lowercase
+    unless ``lower=False``. ``trim`` strips only spaces, so a leading tab
+    leaves an empty first word; empty text is one empty word."""
+    from autoscan_spark.operators.sqlutil import qident, split_words, with_words
+
+    df = _df(spark, ["  Hello\tWORLD \n\n foo  ", "", "   ", "\tMiXeD case", None])
+    rows = (
+        with_words(df, "text", "__w")
+        .select(
+            "doc_id",
+            "__w",
+            F.expr(split_words(qident("text"))).alias("lower"),
+            F.expr(split_words(qident("text"), lower=False)).alias("keep"),
+        )
+        .orderBy("doc_id")
+        .collect()
+    )
+    assert [r["lower"] for r in rows] == [
+        ["hello", "world", "foo"],
+        [""],
+        [""],
+        ["", "mixed", "case"],
+        None,
+    ]
+    assert [r["keep"] for r in rows] == [
+        ["Hello", "WORLD", "foo"],
+        [""],
+        [""],
+        ["", "MiXeD", "case"],
+        None,
+    ]
+    assert [r["__w"] for r in rows] == [r["lower"] for r in rows]
 
 
 def test_unigram_familiarity_exact(spark):

@@ -26,7 +26,9 @@ Tokenization is a single-pass regex scanner (tags / comments / text runs) —
 offsets for spans directly. Quoted ``>`` inside attribute values would
 mis-split a tag (the usual regex-scanner trade); attributes are never
 consumed by this kernel, so the failure mode is a dropped text sliver, and
-malformed markup degrades gracefully rather than erroring.
+malformed markup degrades gracefully rather than erroring. The scan is
+linear in the input: past the last ``>`` no tag can close, so that tail is
+tokenized without the tag branches (``_tokens``).
 
 Span offsets: each kept block contributes one span ``(start, end, kind)``
 with offsets into the ORIGINAL payload string covering the block's raw text
@@ -71,6 +73,11 @@ _TOKEN = re.compile(
     r"|(?P<text>[^<]+)",
     re.DOTALL,
 )
+# _TOKEN where no '>' follows: every tag branch needs one, so only an
+# unterminated comment (to end of input, or before a final newline, as $
+# matches there), a stray '<' or a text run can match. Trying the tag
+# branches there would rescan to EOF once per '<' — quadratic.
+_TAIL_TOKEN = re.compile(r"(?P<decl><!--.*?$)|(?P<junk><)|(?P<text>[^<]+)", re.DOTALL)
 _HAS_ENTITY = re.compile(r"&[#a-zA-Z]")
 
 
@@ -148,7 +155,7 @@ class _MainContentScanner:
         start_tag = self._start_tag
         end_tag = self._end_tag
         data = self._data
-        for m in _TOKEN.finditer(raw):
+        for m in _tokens(raw):
             kind = m.lastgroup
             if kind == "text":
                 data(m.group("text"), m.start(), m.end())
@@ -162,6 +169,24 @@ class _MainContentScanner:
                 end_tag(m.group("end").lower())
             # decl / junk: skipped
         self._flush()
+
+
+def _tokens(raw: str):
+    """``_TOKEN.finditer(raw)``, linear in ``len(raw)``: tokens that start
+    past the last ``>`` come from ``_TAIL_TOKEN``, which matches exactly
+    what ``_TOKEN`` would there."""
+    last_gt = raw.rfind(">")
+    if raw.rfind("<") <= last_gt:  # no '<' past the last '>': nothing to rescan
+        return _TOKEN.finditer(raw)
+    return _split_tokens(raw, last_gt)
+
+
+def _split_tokens(raw: str, last_gt: int):
+    for m in _TOKEN.finditer(raw):
+        if m.start() > last_gt:
+            yield from _TAIL_TOKEN.finditer(raw, m.start())
+            return
+        yield m
 
 
 def extract_html(raw: str) -> Tuple[str, List[Tuple[int, int, str]]]:

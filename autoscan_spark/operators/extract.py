@@ -44,7 +44,6 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -193,11 +192,11 @@ def extract_turns(
     if mode not in {"low", "high"}:
         raise ValueError("mode must be one of 'low', 'high'")
     if first_turn is not None:
-        df = df.filter(F.col("turn_idx") >= first_turn)
+        df = df.filter(f"turn_idx >= {int(first_turn)}")
     if last_turn is not None:
-        df = df.filter(F.col("turn_idx") <= last_turn)
+        df = df.filter(f"turn_idx <= {int(last_turn)}")
 
-    cols = df.select("conv_id", "turn_idx", "role", "text")
+    cols = df.selectExpr("conv_id", "turn_idx", "role", "text")
     if mode == "low":
         return cols.mapInArrow(_extract_batches, schema=EXTRACTED_SCHEMA)
     return (
@@ -210,4 +209,4 @@ def extract_turns(
 def drop_failed(extracted: DataFrame) -> DataFrame:
     """Low-mode drop semantics: keep only successful turns (reference:
     autoscan/autoscan.py:283-289 drops failed pages before the join)."""
-    return extracted.filter(F.col("status") == "ok")
+    return extracted.filter("status = 'ok'")

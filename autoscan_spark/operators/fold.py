@@ -5,11 +5,15 @@ mirrored in Python by ``kernels.pagejoin`` — empty-page filtering
 and the adjacency-dependent separator must happen inside ONE ordered fold
 (the separator depends on post-filter neighbors).
 
-Physical design: the whole fold is JVM column expressions, so the low
-pipeline crosses into Python once (the extraction ``mapInArrow``), not twice.
-A stream runs this same fold as a streaming aggregation in update mode; the
-event-time-expiring stream fold (``streaming.stateful``) keeps pages cleaned
-by ``_clean`` in keyed state and joins them with ``_join``.
+Physical design: the whole fold runs in the JVM, so the low pipeline crosses
+into Python once (the extraction ``mapInArrow``), not twice. Its expressions
+are SQL fragments (``_clean``, ``_join``, in ``operators.sqlutil``'s style)
+that the engine parses in one call each, instead of Column trees built one
+gateway round trip per node: the fold costs a few dozen py4j calls to build,
+not several hundred. A stream runs this same fold as a streaming aggregation
+in update mode; the event-time-expiring stream fold (``streaming.stateful``)
+keeps pages cleaned by ``_clean`` in keyed state and joins them with
+``_join``.
 
 1. Map-side, before the aggregation, each page is cleaned (``_clean``: marker
    scrub + a ``str.rstrip()``-exact right-strip).
@@ -33,7 +37,7 @@ autoscan/autoscan.py:165,174), i.e. BEFORE empty-page filtering.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -44,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark.kernels.pagejoin import PAGE_BREAK
+from autoscan_spark.operators.sqlutil import qident, qlit
 
 DOC_SCHEMA = StructType(
     [
@@ -69,36 +74,38 @@ _WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
 _RSTRIP = f"(?<!{_WS_CLASS}){_WS_CLASS}+\\z"
 
 
-def _clean(text: Column) -> Column:
-    """``kernels.pagejoin.clean_page`` as a column expression.
+_WS_LITERALS = ", ".join(map(qlit, PY_WHITESPACE))
+
+
+def _clean(sql: str) -> str:
+    """SQL fragment: ``kernels.pagejoin.clean_page`` of the SQL expression
+    ``sql`` (pass a column through ``qident`` first).
 
     The regex runs only when there is something to strip: the text holds the
     marker (whose removal can expose trailing whitespace) or ends in
     whitespace. Extracted text is already right-stripped by the kernel, so
     almost every page passes through untouched.
     """
-    return F.when(
-        text.contains(PAGE_BREAK) | F.substring(text, -1, 1).isin(*PY_WHITESPACE),
-        F.regexp_replace(F.replace(text, F.lit(PAGE_BREAK), F.lit("")), _RSTRIP, ""),
-    ).otherwise(text)
+    marker = qlit(PAGE_BREAK)
+    return (
+        f"CASE WHEN contains({sql}, {marker}) OR substring({sql}, -1, 1) IN ({_WS_LITERALS}) "
+        f"THEN regexp_replace(replace({sql}, {marker}, ''), {qlit(_RSTRIP)}, '') "
+        f"ELSE {sql} END"
+    )
 
 
-def _join(items: Column) -> Column:
-    """Join the ``text`` fields of an ordered array of structs with the
-    reference separator: ``"\\n"`` when the previous text ends with ``|`` and
-    the current one starts with ``|``, otherwise ``"\\n\\n"``. Every text must
-    be non-empty; ``items`` must be a column reference (the lambda indexes it
-    once per element)."""
-
-    def piece(x: Column, i: Column) -> Column:
-        sep = (
-            F.when(i == 0, F.lit(""))
-            .when(items[i - 1]["text"].endswith("|") & x["text"].startswith("|"), F.lit("\n"))
-            .otherwise(F.lit("\n\n"))
-        )
-        return F.concat(sep, x["text"])
-
-    return F.array_join(F.transform(items, piece), "")
+def _join(items: str) -> str:
+    """SQL fragment: join the ``text`` fields of an ordered array of structs
+    with the reference separator: ``"\\n"`` when the previous text ends with
+    ``|`` and the current one starts with ``|``, otherwise ``"\\n\\n"``.
+    Every text must be non-empty; ``items`` must be a column reference (the
+    lambda indexes it once per element)."""
+    sep = (
+        "CASE WHEN i = 0 THEN '' "
+        f"WHEN endswith({items}[i - 1].text, '|') AND startswith(x.text, '|') THEN '\\n' "
+        "ELSE '\\n\\n' END"
+    )
+    return f"array_join(transform({items}, (x, i) -> concat({sep}, x.text)), '')"
 
 
 def fold_documents(extracted: DataFrame, clustered_by: str | None = None) -> DataFrame:
@@ -113,16 +120,16 @@ def fold_documents(extracted: DataFrame, clustered_by: str | None = None) -> Dat
     shuffle.
     """
     keys = ["conv_id"] if clustered_by is None else [clustered_by, "conv_id"]
-    pages = extracted.select(
-        *keys, "turn_idx", _clean(F.col("extracted_text")).alias("text"), "in_chars", "out_chars"
+    qkeys = list(map(qident, keys))
+    pages = extracted.selectExpr(
+        *qkeys, "turn_idx", f"{_clean('extracted_text')} AS text", "in_chars", "out_chars"
     )
     # an empty page becomes null, which collect_list skips
-    item = F.when(F.col("text") != "", F.struct("turn_idx", "text"))
     return pages.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(item)).alias("__items"),
-        F.count("*").cast("int").alias("n_turns"),
-        F.sum("in_chars").cast("long").alias("in_chars"),
-        F.sum("out_chars").cast("long").alias("out_chars"),
-    ).select(
-        "conv_id", _join(F.col("__items")).alias("markdown"), "n_turns", "in_chars", "out_chars", *keys[:-1]
+        F.expr("array_sort(collect_list(CASE WHEN text != '' THEN struct(turn_idx, text) END)) AS __items"),
+        F.expr("CAST(count(*) AS INT) AS n_turns"),
+        F.expr("CAST(sum(in_chars) AS BIGINT) AS in_chars"),
+        F.expr("CAST(sum(out_chars) AS BIGINT) AS out_chars"),
+    ).selectExpr(
+        "conv_id", f"{_join('__items')} AS markdown", "n_turns", "in_chars", "out_chars", *qkeys[:-1]
     )

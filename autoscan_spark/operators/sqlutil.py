@@ -77,7 +77,10 @@ def with_words(df, text_col: str, out: str, lower: bool = True):
     An ``F.explode`` over ``out`` does not get that guarantee: Catalyst
     infers the filter ``size(out) > 0 AND isnotnull(out)``, pushes it
     below this projection and re-evaluates the split there, so the regex
-    runs three times per document (``explode_outer`` infers no filter)."""
+    runs three times per document. Explode with ``F.explode_outer``
+    instead, which infers no filter; it differs only by one null row for
+    NULL text (a split is never empty), which a filter on the exploded
+    column drops."""
     from pyspark.sql import functions as F
 
     return df.withColumn(out, F.expr(split_words(qident(text_col), lower)))

@@ -786,7 +786,7 @@ def token_frequencies(
     words = "__tf_words"
     toks = (
         with_words(df, text_col, words)
-        .select(F.explode(F.col(words)).alias("token"))
+        .select(F.explode_outer(F.col(words)).alias("token"))
         .filter(F.col("token") != "")
     )
     counts = toks.groupBy("token").agg(F.count("*").cast("long").alias("n"))
@@ -1057,7 +1057,7 @@ def tfidf_top_terms(
         df.select(qcol(id_col), qcol(text_col)), text_col, "__tw"
     ).select(
         qcol(id_col).alias("doc_id"),
-        F.explode("__tw").alias("term"),
+        F.explode_outer("__tw").alias("term"),
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -1256,9 +1256,11 @@ def oov_rate(
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     reject_reserved(df, ("__ov_w",), "oov_rate")
+    # explode_outer + the null filter keep explode's rows (a split is never
+    # empty, so only NULL text yields the outer null row)
     words = with_words(df, text_col, "__ov_w").select(
-        qcol(id_col), F.explode("__ov_w").alias("__word")
-    )
+        qcol(id_col), F.explode_outer("__ov_w").alias("__word")
+    ).filter(F.col("__word").isNotNull())
     vocab = (
         words.groupBy("__word")
         .agg(F.count(F.lit(1)).alias("__freq"))

@@ -66,7 +66,7 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.plans.pipeline import extract_pipeline, with_bucket
+from autoscan_spark.plans.pipeline import bucket_wave, extract_pipeline, with_bucket  # noqa: F401
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
 # parquet, so appending a new schema next to old files would leave a
@@ -230,11 +230,8 @@ class CheckpointedExtraction:
         wave_id: int,
     ) -> None:
         t0 = time.perf_counter()
-        src = with_bucket(transcripts, self.n_buckets).filter(
-            F.col("bucket").isin([int(b) for b in buckets])
-        )
         extracted, docs = extract_pipeline(
-            src,
+            bucket_wave(transcripts, self.n_buckets, buckets),
             mode=self.mode,
             first_turn=self.first_turn,
             last_turn=self.last_turn,

@@ -39,9 +39,13 @@ from autoscan_spark.operators.polish import polish_documents
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Add the checkpoint bucket, ``pmod(xxhash64(conv_id), n_buckets)``."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", F.expr(f"CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)"))
+
+
+def bucket_wave(df: DataFrame, n_buckets: int, buckets: list[int]) -> DataFrame:
+    """``with_bucket`` keeping only the rows of ``buckets`` (a checkpoint
+    wave's source), filtered by one ``bucket IN (..)`` expression."""
+    return with_bucket(df, n_buckets).filter(f"bucket IN ({', '.join(str(int(b)) for b in buckets)})")
 
 
 def extract_pipeline(

@@ -13,10 +13,11 @@ session-window aggregations. ``stream_fold_documents`` is the keyed-state
 operator (``applyInPandasWithState``) for the one case that needs it:
 dropping a conversation's state once the EVENT-TIME watermark passes its
 last event time by ``idle_timeout_ms``. It only accumulates: each page is
-cleaned (``fold._clean``) before it enters the state, the state holds
+cleaned before it enters the state, the state holds
 ``(turn_idxs, texts, max_ts_ms)``, and every update emits the arrays. The
-empty-page filter, turn order and separator then run in the JVM
-(``array_sort`` + ``fold._join``), the batch fold's own expressions.
+empty-page filter, turn order and separator then run in the JVM. Cleaning
+and joining are the batch fold's own SQL fragments (``fold._clean`` and
+``fold._join``), so one definition of each serves both folds.
 
 The timer is ``max_ts_ms + idle_timeout_ms``, clamped just above the current
 watermark because Spark rejects timestamps at or below it. The group's max
@@ -42,7 +43,6 @@ from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -160,12 +160,12 @@ def stream_fold_documents(extracted_stream: DataFrame, idle_timeout_ms: int) -> 
         )
     states = (
         drop_failed(extracted_stream)
-        .select(
+        .selectExpr(
             "conv_id",
             "turn_idx",
-            _clean(F.col("extracted_text")).alias("text"),
+            f"{_clean('extracted_text')} AS text",
             "ts",
-            F.unix_millis("ts").alias("ts_ms"),
+            "unix_millis(ts) AS ts_ms",
         )
         .groupBy("conv_id")
         .applyInPandasWithState(
@@ -177,11 +177,9 @@ def stream_fold_documents(extracted_stream: DataFrame, idle_timeout_ms: int) -> 
         )
     )
     # as in fold_documents: empty pages leave the fold, n_turns counts them
-    pages = F.zip_with(
-        "turn_idxs", "texts", lambda i, t: F.struct(i.alias("turn_idx"), t.alias("text"))
-    )
-    return states.select(
+    pages = "zip_with(turn_idxs, texts, (i, t) -> struct(i AS turn_idx, t AS text))"
+    return states.selectExpr(
         "conv_id",
-        F.array_sort(F.filter(pages, lambda x: x["text"] != "")).alias("__items"),
-        F.size("turn_idxs").alias("n_turns"),
-    ).select("conv_id", _join(F.col("__items")).alias("markdown"), "n_turns")
+        f"array_sort(filter({pages}, x -> x.text != '')) AS __items",
+        "size(turn_idxs) AS n_turns",
+    ).selectExpr("conv_id", f"{_join('__items')} AS markdown", "n_turns")

@@ -50,6 +50,34 @@ def test_html_link_density_drops_link_farm():
     assert text == ""
 
 
+def test_html_tokenizer_is_linear_in_unclosed_tags():
+    """A '<' with no later '>' must not rescan to EOF once per tag
+    attempt: doubling the input may at most ~double the time (start tags,
+    end tags and declarations; the last shape has a '>' before the tail)."""
+    import time
+
+    def best_time(raw):
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            extract_html(raw)
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    for unit, head in (("<a x", "<p>"), ("</a x", "<p>"), ("<!x", "<p>"), ("<a x", "<p>" * 500 + "text")):
+        t_n = best_time(head + unit * (100_000 // len(unit)))
+        t_2n = best_time(head + unit * (200_000 // len(unit)))
+        assert t_2n <= 2.5 * t_n, (unit, t_n, t_2n)
+
+
+def test_html_unclosed_tail_tokens():
+    """Past the last '>', a stray '<' degrades to text and an unterminated
+    comment runs to the end (before a final newline, where $ matches)."""
+    assert extract_html("<p>" + "x" * 30 + " <b x")[0] == "x" * 30 + " b x"
+    assert extract_html("<p>" + "x" * 30 + "<!-- open\n")[0] == "x" * 30
+    assert extract_html("<p>" + "x" * 30 + "<!x</p x")[0] == "x" * 30 + "!x/p x"
+
+
 # ---------- PDF stream ----------
 
 PDF_PAYLOAD = (

@@ -159,7 +159,7 @@ def test_page_clean_is_linear_in_whitespace_runs(spark):
     def best_time(page):
         df = spark.createDataFrame([(page,)], "t string").cache()
         df.count()
-        out = df.select(F.length(_clean(F.col("t"))).alias("n"))
+        out = df.select(F.length(F.expr(_clean("t"))).alias("n"))
         times = []
         for _ in range(3):
             t0 = time.perf_counter()

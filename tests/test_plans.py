@@ -110,6 +110,57 @@ def test_clustered_wave_fold_and_counts_do_not_shuffle(spark, tmp_path_factory, 
         extracted.unpersist()
 
 
+# Building the pipeline once took 695 gateway calls in low mode and 1,079
+# for a 64-bucket wave, when the fold, the bucket and the wave filter were
+# Column trees built one call per node; as SQL text they take 93 and 117.
+# Rebuilding the page clean alone as a Column tree adds about 150.
+PIPELINE_BUILD_CALL_BUDGET = 200
+
+
+def test_pipeline_build_gateway_call_budget(spark, tmp_path_factory):
+    """Building the pipeline's plan is driver time paid before any task
+    runs, mostly in py4j round trips. The fold, the bucket and the wave
+    filter are SQL text the engine parses in one call each; a rewrite back
+    to per-node Column calls blows this budget instead of only slowing
+    every run."""
+    import threading
+
+    from autoscan_spark.plans.pipeline import bucket_wave, extract_pipeline
+
+    path = str(tmp_path_factory.mktemp("plan_calls")) + "/t"
+    synthesize_transcripts(spark, 20, seed=4).write.parquet(path)
+    src = spark.read.parquet(path)
+    builds = {
+        "low": lambda: extract_pipeline(src, mode="low"),
+        "n_buckets=64": lambda: extract_pipeline(
+            bucket_wave(src, 64, list(range(64))), mode="low", n_buckets=64
+        ),
+    }
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        # py4j's finalizer thread releases dead objects concurrently
+        if threading.get_ident() == caller:
+            calls[0] += 1
+        return send(*args, **kwargs)
+
+    counts = {}
+    for name, build in builds.items():
+        build()  # warm-up: first-use class and function lookups
+        client.send_command = counting
+        try:
+            calls[0] = 0
+            built = build()
+            counts[name] = calls[0]
+        finally:
+            del client.send_command  # back to the class method
+        del built
+    assert all(n <= PIPELINE_BUILD_CALL_BUDGET for n in counts.values()), counts
+
+
 def test_broadcast_join_for_small_dimension(spark, sf_dir):
     from autoscan_spark.plans.driver_queries import q_orders_by_nation
 
@@ -215,8 +266,11 @@ def test_words_split_evaluated_once_per_plan(spark, sf_dir):
     from autoscan_spark.operators.textstats import (
         bigram_rarity,
         lang_id,
+        oov_rate,
         quality_features,
         repetition_stats,
+        tfidf_top_terms,
+        token_frequencies,
         word_entropy,
     )
 
@@ -229,10 +283,18 @@ def test_words_split_evaluated_once_per_plan(spark, sf_dir):
         winnow_fingerprints,
         bigram_rarity,
         word_entropy,
+        token_frequencies,
+        tfidf_top_terms,
     ):
         plan = _executed_plan(op(docs))
         n = plan.count("split(trim(lower")
         assert n == 1, f"{op.__name__}: split evaluated {n}× in plan:\n{plan[:2000]}"
+    # an explode over the words must not get a split re-evaluated in an
+    # inferred filter; oov_rate's vocabulary and per-doc branches each scan
+    # the input, so it holds one split per branch
+    plan = _executed_plan(oov_rate(docs))
+    n = plan.count("split(trim(lower")
+    assert n == 2, f"oov_rate: split evaluated {n}× in plan (want 1 per branch):\n{plan[:2000]}"
 
 
 def test_ngram_jaccard_builds_grams_once_per_side(spark, tmp_path_factory):

@@ -153,11 +153,10 @@ def test_pipeline_build_gateway_call_budget(spark, tmp_path_factory):
         client.send_command = counting
         try:
             calls[0] = 0
-            built = build()
+            build()
             counts[name] = calls[0]
         finally:
             del client.send_command  # back to the class method
-        del built
     assert all(n <= PIPELINE_BUILD_CALL_BUDGET for n in counts.values()), counts
 
 

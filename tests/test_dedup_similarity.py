@@ -242,10 +242,20 @@ def test_md5_hyperplanes_deterministic_and_bounded():
     assert not (a[0, 0] == a[0, 1]).all()
 
 
+def _round6_half_up(x: float) -> float:
+    """Spark's ``round(double, 6)``: HALF_UP on the double's decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
 def test_lsh_recall_counts_match_set_overlap(spark, vectors):
-    """lsh_recall's n_hits must equal the literal set-overlap of the two
-    top-k id sets computed independently via lsh_topk/bruteforce_topk
-    with the same planes and rounded-cosine ranking."""
+    """lsh_recall's n_hits must equal, per query, the literal set overlap
+    of two top-5 id sets replayed in numpy with no Spark operator: the
+    md5-plane signatures, the bucket-colliding candidates ranked by
+    (round(cos, 6) DESC, id ASC), and the exact top-5 under the same
+    ranking. Dots and norms accumulate sequentially (``cumsum``) in
+    float64, as the JVM folds do, so the rounded cosines are the engine's."""
     from autoscan_spark.operators.similarity import lsh_recall, md5_hyperplanes
 
     queries = vectors.filter(F.col("vec_id") < 8)
@@ -254,10 +264,34 @@ def test_lsh_recall_counts_match_set_overlap(spark, vectors):
         r["query_id"]: (r["n_hits"], r["recall_ppm"])
         for r in lsh_recall(vectors, queries, k=5, planes_matrix=planes).collect()
     }
-    assert len(got) == queries.count()
+    pdf = vectors.toPandas().sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    weights = 1 << np.arange(planes.shape[1], dtype=np.int64)
+    sigs = np.stack([((mat @ p.T) > 0) @ weights for p in planes], axis=1)
+    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+
+    def cos_r(i, j):
+        dot = np.cumsum(mat[i] * mat[j])[-1]
+        return _round6_half_up(float(dot / (norms[i] * norms[j])))
+
+    def top5(i, cands):
+        return set(sorted(cands, key=lambda j: (-cos_r(i, j), ids[j]))[:5])
+
+    want = {}
+    for i in np.nonzero(ids < 8)[0]:
+        others = [j for j in range(len(ids)) if j != i]
+        colliding = [j for j in others if (sigs[j] == sigs[i]).any()]
+        want[int(ids[i])] = len(top5(i, colliding) & top5(i, others))
+    assert sorted(got) == sorted(want)
     for q, (n, ppm) in got.items():
-        assert 0 <= n <= 5
+        assert n == want[q], f"query {q}: n_hits {n} != replay {want[q]}"
         assert ppm == n * 200000
+    # the replay must exercise both a partial and a non-trivial overlap
+    assert 0 < sum(want.values()) < 5 * len(want)
+
+
+def test_ivf_topk_runs_and_overlaps(spark, vectors):
     queries = vectors.filter(F.col("vec_id") < 5)
     exact = bruteforce_topk(vectors, queries, k=5)
     approx = ivf_topk(vectors, queries, k=5, n_cells=8, nprobe=4)

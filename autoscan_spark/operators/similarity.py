@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine`` / ``cosine_pairs``: JVM-side expressions (zip_with + aggregate),
+- ``cosine_pairs``: JVM-side cosine (zip_with + aggregate folds),
   whole-stage-codegen friendly, no Python in the hot path.
 - ``bruteforce_topk``: exact baseline — broadcast the (small) query set,
   score every corpus vector, per-query top-k via window. One shuffle
@@ -11,24 +11,23 @@
 - ``ivf_topk``: IVF-style — corpus assigned to nearest of C coarse centroids
   (Arrow-vectorized numpy matmul), queries probe the ``nprobe`` nearest
   centroids only.
+
+Every operator is built from the same few blocks, each written once:
+``_side`` (the norm-hoisted side of a cosine join, scored by ``_COSINE``),
+``_top_k`` (the per-query ranker), ``_lsh_candidates`` and
+``_ivf_candidates`` (the bucket and cell joins), ``_cell_sims`` (the
+centroid kernel behind ``_assign_cell`` and the cell probe) and
+``_unit_rows`` (the numpy row normalisation).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
-
-
-def cosine_expr(a: str, b: str) -> str:
-    """SQL expression: cosine similarity of two array<float/double> columns."""
-    dot = f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0d, (s, v) -> s + v)"
-    na = f"sqrt(aggregate({a}, 0d, (s, v) -> s + cast(v as double) * cast(v as double)))"
-    nb = f"sqrt(aggregate({b}, 0d, (s, v) -> s + cast(v as double) * cast(v as double)))"
-    return f"({dot}) / nullif(({na}) * ({nb}), 0d)"
 
 
 def norm_expr(a: str) -> str:
@@ -36,14 +35,47 @@ def norm_expr(a: str) -> str:
     return f"sqrt(aggregate({a}, 0d, (s, v) -> s + cast(v as double) * cast(v as double)))"
 
 
-def _dot_over_norms(a: str, b: str, na: str, nb: str) -> str:
-    """Cosine from a per-pair dot and PRE-COMPUTED per-row norms — the same
-    arithmetic as ``cosine_expr`` (identical folds on identical data →
-    bitwise-identical doubles), but each row's norm evaluates once per ROW
-    instead of once per PAIR: for Q queries × C corpus rows that removes
-    (Q-1)·C + (C-1)·Q redundant array folds from the join."""
-    dot = f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0d, (s, v) -> s + v)"
-    return f"({dot}) / nullif(({na}) * ({nb}), 0d)"
+# Cosine of a query side (``__qv``, ``__qn``) and a corpus side (``__cv``,
+# ``__cn``) built by ``_side``: a per-pair dot over PRE-COMPUTED per-row
+# norms, so each row's norm evaluates once per ROW instead of once per PAIR
+# (for Q queries × C corpus rows that removes (Q-1)·C + (C-1)·Q redundant
+# array folds from the join).
+_COSINE = (
+    "(aggregate(zip_with(__qv, __cv, (x, y) -> cast(x as double) * cast(y as double)),"
+    " 0d, (s, v) -> s + v)) / nullif((__qn) * (__cn), 0d)"
+)
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, tag: str, *extra: Column
+) -> DataFrame:
+    """One side of a cosine join: the id as ``id_as``, the vector as
+    ``__{tag}v`` and its L2 norm as ``__{tag}n`` (tag ``q`` or ``c`` for
+    ``_COSINE``), then ``extra``."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).alias(f"__{tag}v"),
+        F.expr(norm_expr(vec_col)).alias(f"__{tag}n"),
+        *extra,
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """The rows of ``scored`` ranked 1..k within each ``query_id`` by
+    (``score`` DESC, ``neighbor_id`` ASC), the rank in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    """The vectors as a float64 matrix, each row over its L2 norm. A
+    zero-norm row stays as it is (all its cosines read 0 where the JVM's
+    ``nullif`` reads NULL); every other row divides by its TRUE norm, which
+    the margin-widened prefilters rescored by the JVM rely on."""
+    mat = np.vstack(vecs).astype(np.float64)
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return mat / norms[:, None]
 
 
 def cosine_pairs(
@@ -54,19 +86,11 @@ def cosine_pairs(
 ) -> DataFrame:
     """All (query, corpus) cosine scores; the query side is broadcast and
     L2 norms are hoisted to per-row columns below the join."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-    )
+    q = _side(queries, id_col, vec_col, "query_id", "q")
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "c")
     return (
         c.crossJoin(F.broadcast(q))
-        .withColumn("cosine", F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn")))
+        .withColumn("cosine", F.expr(_COSINE))
         .select("query_id", "neighbor_id", "cosine")
     )
 
@@ -82,14 +106,7 @@ def bruteforce_topk(
     scored = cosine_pairs(corpus, queries, id_col, vec_col)
     if not include_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, "cosine").select("query_id", "neighbor_id", "cosine", "rank")
 
 
 # |numpy_cosine - JVM_fold_cosine| for the same pair is summation-order
@@ -145,16 +162,10 @@ def _blocked_exact_candidates(
         if len(pdf) < 2:
             return empty
 
-        def _mat(sub: pd.DataFrame) -> np.ndarray:
-            m = np.vstack(sub["vec"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(m, axis=1)
-            # zero-norm rows: JVM nullif yields NULL cosine (never a pair);
-            # map them to -inf-like cosines by leaving dot = 0 / 1
-            n[n == 0.0] = 1.0
-            return m / n[:, None]
-
+        # zero-norm rows: JVM nullif yields NULL cosine (never a pair); their
+        # dots read 0, so they pass only a cut <= 0 and the rescore drops them
         if g1 == g2:
-            unit = _mat(pdf)
+            unit = _unit_rows(pdf["vec"])
             ids = pdf["id"].to_numpy()
             iu = np.triu_indices(len(pdf), k=1)
             keep = (unit @ unit.T)[iu] >= cut
@@ -164,7 +175,7 @@ def _blocked_exact_candidates(
             b_rows = pdf[pdf["__blk"] == g2]
             if not len(a_rows) or not len(b_rows):
                 return empty
-            cos = _mat(a_rows) @ _mat(b_rows).T
+            cos = _unit_rows(a_rows["vec"]) @ _unit_rows(b_rows["vec"]).T
             ai, bi = np.nonzero(cos >= cut)
             ia = a_rows["id"].to_numpy()[ai]
             ib = b_rows["id"].to_numpy()[bi]
@@ -208,25 +219,16 @@ def embedding_near_dups(
         pair_ids = _blocked_exact_candidates(
             corpus, threshold, id_col, vec_col
         )
-        a = corpus.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("__qv"),
-            F.expr(norm_expr(vec_col)).alias("__qn"),
-        )
-        b = corpus.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("__cv"),
-            F.expr(norm_expr(vec_col)).alias("__cn"),
-        )
+        a = _side(corpus, id_col, vec_col, "id_a", "q")
+        b = _side(corpus, id_col, vec_col, "id_b", "c")
         cands = pair_ids.join(a, "id_a").join(b, "id_b")
     else:
-        bucketed = add_lsh_buckets(
-            corpus, dim=None, n_planes=n_planes, n_tables=n_tables, seed=seed,
-            vec_col=vec_col,
-        ).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.expr(norm_expr(vec_col)).alias("norm"),
+        bucketed = _side(
+            add_lsh_buckets(
+                corpus, dim=None, n_planes=n_planes, n_tables=n_tables,
+                seed=seed, vec_col=vec_col,
+            ),
+            id_col, vec_col, "id", "",
             F.posexplode("buckets").alias("table_id", "bucket"),
         )
         a = bucketed.alias("a")
@@ -243,17 +245,15 @@ def embedding_near_dups(
             .select(
                 F.col("a.id").alias("id_a"),
                 F.col("b.id").alias("id_b"),
-                F.col("a.vec").alias("__qv"),
-                F.col("b.vec").alias("__cv"),
-                F.col("a.norm").alias("__qn"),
-                F.col("b.norm").alias("__cn"),
+                F.col("a.__v").alias("__qv"),
+                F.col("b.__v").alias("__cv"),
+                F.col("a.__n").alias("__qn"),
+                F.col("b.__n").alias("__cn"),
             )
             .distinct()
         )
     return (
-        cands.withColumn(
-            "cosine", F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn"))
-        )
+        cands.withColumn("cosine", F.expr(_COSINE))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -335,6 +335,34 @@ def add_lsh_buckets(
     return df.withColumn("buckets", bucketize(F.col(vec_col)))
 
 
+def _lsh_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    **lsh,
+) -> DataFrame:
+    """Every distinct (query, corpus) pair sharing a bucket in at least one
+    hash table (``lsh`` goes to ``add_lsh_buckets``), self-pairs excluded:
+    ``query_id``, ``neighbor_id`` and both norm-hoisted sides, ready for
+    ``_COSINE``. The query side is broadcast."""
+    table_bucket = F.posexplode("buckets").alias("table_id", "bucket")
+    cb = _side(
+        add_lsh_buckets(corpus, vec_col=vec_col, **lsh),
+        id_col, vec_col, "neighbor_id", "c", table_bucket,
+    )
+    qb = _side(
+        add_lsh_buckets(queries, vec_col=vec_col, **lsh),
+        id_col, vec_col, "query_id", "q", table_bucket,
+    )
+    return (
+        cb.join(F.broadcast(qb), on=["table_id", "bucket"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
+        .distinct()
+    )
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -347,33 +375,11 @@ def lsh_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing ≥1 LSH bucket."""
-    cb = add_lsh_buckets(corpus, dim, n_planes, n_tables, seed, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-        F.posexplode("buckets").alias("table_id", "bucket"),
-    )
-    qb = add_lsh_buckets(queries, dim, n_planes, n_tables, seed, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
-        F.posexplode("buckets").alias("table_id", "bucket"),
-    )
-    cands = (
-        cb.join(F.broadcast(qb), on=["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
-        .distinct()
-    )
-    scored = cands.withColumn(
-        "cosine", F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = _lsh_candidates(
+        corpus, queries, id_col, vec_col,
+        dim=dim, n_planes=n_planes, n_tables=n_tables, seed=seed,
+    ).withColumn("cosine", F.expr(_COSINE))
+    return _top_k(scored, k, "cosine").select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def lsh_recall(
@@ -406,36 +412,9 @@ def lsh_recall(
     corpus-side shuffle other than the per-query top-k windows."""
     if planes_matrix is None:
         planes_matrix = md5_hyperplanes(n_tables, n_planes, 0)
-
-    cb = add_lsh_buckets(
-        corpus, None, vec_col=vec_col, planes_matrix=planes_matrix
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-        F.posexplode("buckets").alias("table_id", "bucket"),
-    )
-    qb = add_lsh_buckets(
-        queries, None, vec_col=vec_col, planes_matrix=planes_matrix
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
-        F.posexplode("buckets").alias("table_id", "bucket"),
-    )
-    approx_scored = (
-        cb.join(F.broadcast(qb), on=["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
-        .distinct()
-        .withColumn(
-            "cosine_r",
-            F.round(
-                F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn")),
-                tie_round,
-            ),
-        )
-    )
+    approx_scored = _lsh_candidates(
+        corpus, queries, id_col, vec_col, dim=None, planes_matrix=planes_matrix
+    ).withColumn("cosine_r", F.round(F.expr(_COSINE), tie_round))
     return _recall_vs_exact(
         approx_scored, corpus, queries, k, id_col, vec_col, tie_round
     )
@@ -456,14 +435,7 @@ def _recall_vs_exact(
     left-join onto the query list so misses read as 0."""
 
     def _topk_ids(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine_r"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= k)
-            .select("query_id", "neighbor_id")
-        )
+        return _top_k(scored, k, "cosine_r").select("query_id", "neighbor_id")
 
     exact_scored = (
         cosine_pairs(corpus, queries, id_col, vec_col)
@@ -486,6 +458,73 @@ def _recall_vs_exact(
             .cast("long")
             .alias("recall_ppm"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Cells: vectors scored against unit centroids
+# ---------------------------------------------------------------------------
+
+
+def _cell_sims(vecs: pd.Series, cents: np.ndarray, decimals: int | None) -> np.ndarray:
+    """Cosine of each vector of an Arrow batch to each unit centroid, one
+    BLAS matmul. ``decimals`` rounds it BEFORE any ranking: ``ivf_recall``
+    must pick cells as an engine computing exact double cosines does; the
+    k-means paths rank the raw cosines (``None``)."""
+    sims = _unit_rows(vecs) @ cents.T
+    return sims if decimals is None else np.round(sims, decimals)
+
+
+def _assign_cell(cents: np.ndarray, decimals: int | None = None):
+    """pandas UDF: the index of each vector's nearest centroid, ties to
+    the lowest index."""
+
+    @pandas_udf("int")
+    def assign_cell(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:  # empty Arrow batch: np.vstack would raise
+            return pd.Series([], dtype="int32")
+        sims = _cell_sims(vecs, cents, decimals)
+        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
+
+    return assign_cell
+
+
+def _ivf_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cents: np.ndarray,
+    nprobe: int,
+    decimals: int | None = None,
+) -> DataFrame:
+    """Every (query, corpus) pair whose corpus row lies in one of the
+    query's ``nprobe`` nearest cells, self-pairs excluded: ``query_id``,
+    ``neighbor_id`` and both norm-hoisted sides, ready for ``_COSINE``.
+    The query side is broadcast. A corpus row has one cell and a query
+    probes distinct cells, so under unique ids each pair occurs once and
+    needs no ``distinct``."""
+
+    @pandas_udf("array<int>")
+    def probe_cells(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:  # empty Arrow batch: np.vstack would raise
+            return pd.Series([], dtype=object)
+        sims = _cell_sims(vecs, cents, decimals)
+        # stable argsort on -sims: equal cosines keep ascending index
+        # order, the same tie rule as assign_cell
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+        return pd.Series([row.tolist() for row in order])
+
+    c = _side(
+        corpus, id_col, vec_col, "neighbor_id", "c",
+        _assign_cell(cents, decimals)(F.col(vec_col)).alias("cell"),
+    )
+    q = _side(
+        queries, id_col, vec_col, "query_id", "q",
+        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
+    )
+    return c.join(F.broadcast(q), on="cell").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
 
 
@@ -521,65 +560,13 @@ def ivf_recall(
         .limit(n_cells)
         .collect()
     )
+    # id-sorted: a cell's index orders as its centroid id, so the index
+    # tie rule of the cell kernel is the oracle's centroid-id tie-break
     cent_rows = sorted(cent_rows, key=lambda r: r["__cid"])
-    cent_ids = np.array([r["__cid"] for r in cent_rows], dtype=np.int64)
-    cents = np.vstack([np.asarray(r["__cv"], dtype=np.float64) for r in cent_rows])
-    cents = cents / np.clip(
-        np.linalg.norm(cents, axis=1, keepdims=True), 1e-12, None
-    )
-
-    def _cell_sims(vecs: pd.Series) -> np.ndarray:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        mat = mat / np.clip(
-            np.linalg.norm(mat, axis=1, keepdims=True), 1e-12, None
-        )
-        # rounded BEFORE ranking so cell choice matches an engine that
-        # computes exact double cosines (ties → lowest centroid id, which
-        # is the lowest INDEX because cent_rows is id-sorted)
-        return np.round(mat @ cents.T, tie_round)
-
-    @pandas_udf("long")
-    def assign_cell(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        sims = _cell_sims(vecs)
-        return pd.Series(cent_ids[np.argmax(sims, axis=1)])
-
-    @pandas_udf("array<long>")
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        sims = _cell_sims(vecs)
-        # stable argsort on -sims: equal (rounded) cosines keep ascending
-        # index order == ascending centroid id, matching the SQL rank
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([cent_ids[row].tolist() for row in order])
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-        assign_cell(F.col(vec_col)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-    )
-    approx_scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
-        .distinct()
-        .withColumn(
-            "cosine_r",
-            F.round(
-                F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn")),
-                tie_round,
-            ),
-        )
-    )
+    cents = _unit_rows([r["__cv"] for r in cent_rows])
+    approx_scored = _ivf_candidates(
+        corpus, queries, id_col, vec_col, cents, nprobe, tie_round
+    ).withColumn("cosine_r", F.round(F.expr(_COSINE), tie_round))
     return _recall_vs_exact(
         approx_scored, corpus, queries, k, id_col, vec_col, tie_round
     )
@@ -651,9 +638,7 @@ def _centroids_from_sample(
         .limit(sample_n)
         .toPandas()
     )
-    mat = np.array(pdf[pdf.columns[0]].tolist(), dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    mat = mat / np.clip(norms, 1e-12, None)
+    mat = _unit_rows(pdf[pdf.columns[0]])
     if kmeans_iterations == 0:
         return mat
     cents, _ = _spherical_kmeans(mat, mat[:n_cells].copy(), kmeans_iterations)
@@ -687,8 +672,10 @@ def semantic_dedup(
     Scale shape: centroid training is the bounded-sample spherical
     k-means ``ivf_topk`` uses (driver numpy on ≤ 256×n_cells rows; only
     the (n_cells × dim) matrix ships to executors); assignment is one
-    Arrow-vectorized matmul; the pairwise step is an equi-join on
-    ``cell`` — the shuffle key the paper's design exists to create.
+    Arrow-vectorized matmul, materialized by a ``localCheckpoint``; the
+    pairwise step groups on ``cell`` — the shuffle key the paper's design
+    exists to create — and scores each cell with one numpy matmul
+    (``applyInPandas``).
     Output: ``keep="survivors"`` → surviving rows (all original columns);
     ``keep="pairs"`` → (id_a, id_b, cosine) duplicate pairs.
     """
@@ -708,19 +695,10 @@ def semantic_dedup(
         corpus, vec_col, n_cells, seed, kmeans_iterations
     )
 
-    @pandas_udf("int")
-    def assign_cell(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:  # empty Arrow batch: np.vstack would raise
-            return pd.Series([], dtype="int32")
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.clip(norms, 1e-12, None)
-        return pd.Series(np.argmax(mat @ cents.T, axis=1).astype("int32"))
-
     celled = corpus.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
-        assign_cell(F.col(vec_col)).alias("cell"),
+        _assign_cell(cents)(F.col(vec_col)).alias("cell"),
     ).localCheckpoint()  # barrier: grouping must not re-run the UDF
 
     # Per-cell pairwise as ONE numpy matmul per cell via applyInPandas —
@@ -745,9 +723,7 @@ def semantic_dedup(
         )
         if n < 2:
             return empty
-        mat = np.vstack(pdf["__v"].to_numpy()).astype(np.float64)
-        norms = np.clip(np.linalg.norm(mat, axis=1), 1e-12, None)
-        unit = mat / norms[:, None]
+        unit = _unit_rows(pdf["__v"])
         cos = unit @ unit.T
         iu = np.triu_indices(n, k=1)
         keep_m = cos[iu] >= tau
@@ -790,51 +766,10 @@ def ivf_topk(
     k-means on a bounded training sample (see ``_centroids_from_sample``) —
     better-balanced cells, higher recall at the same nprobe."""
     cents = _centroids_from_sample(corpus, vec_col, n_cells, seed, kmeans_iterations)
-
-    @pandas_udf("int")
-    def assign_cell(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:  # empty Arrow batch: np.vstack would raise
-            return pd.Series([], dtype="int32")
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.clip(norms, 1e-12, None)
-        return pd.Series(np.argmax(mat @ cents.T, axis=1).astype("int32"))
-
-    @pandas_udf("array<int>")
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:  # empty Arrow batch: np.vstack would raise
-            return pd.Series([], dtype=object)
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.clip(norms, 1e-12, None)
-        sims = mat @ cents.T
-        order = np.argsort(-sims, axis=1)[:, :nprobe].astype("int32")
-        return pd.Series([row.tolist() for row in order])
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-        assign_cell(F.col(vec_col)).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
-    )
-    cands = c.join(F.broadcast(q), on="cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cands.withColumn(
-        "cosine", F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = _ivf_candidates(
+        corpus, queries, id_col, vec_col, cents, nprobe
+    ).withColumn("cosine", F.expr(_COSINE))
+    return _top_k(scored, k, "cosine").select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def knn_label_noise(
@@ -885,8 +820,6 @@ def knn_label_noise(
     Output: (id_col, ``own_label``, ``knn_label``, ``n_votes`` bigint of
     the winning label, ``is_noisy`` boolean).
     """
-    from pyspark.sql.window import Window
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if queries is None:
@@ -910,16 +843,19 @@ def knn_label_noise(
     q_vecs = q_pdf[q_pdf.columns[1]].tolist()
     qids_np = q_pdf[q_pdf.columns[0]].to_numpy()
     dim = next((len(v) for v in q_vecs if v is not None), 1)
-    qmat = np.vstack(
-        [
-            np.zeros(dim) if v is None else np.asarray(v, dtype=np.float64)
-            for v in q_vecs
-        ]
-    ) if len(q_vecs) else np.zeros((0, dim))
-    qnorm = np.linalg.norm(qmat, axis=1)
-    q_degenerate = qnorm == 0.0  # NULL cosine for every pair under the JVM
-    qnorm[q_degenerate] = 1.0
-    qunit = qmat / qnorm[:, None]
+
+    def _dense(vecs) -> np.ndarray:
+        # a NULL vector reads as zeros: degenerate, like a zero-norm one
+        return np.vstack(
+            [np.zeros(dim) if v is None else np.asarray(v, dtype=np.float64) for v in vecs]
+        )
+
+    if len(q_vecs):
+        qmat = _dense(q_vecs)
+        qunit = _unit_rows(qmat)
+    else:
+        qmat = qunit = np.zeros((0, dim))
+    q_degenerate = np.linalg.norm(qmat, axis=1) == 0.0  # NULL cosine for every pair under the JVM
 
     id_type = df.schema[id_col].dataType.simpleString()
     margin = _EXACT_COS_MARGIN
@@ -930,16 +866,9 @@ def knn_label_noise(
                 continue
             nids = pdf["__nid"].to_numpy()
             null_vec = pdf["__nv"].isna().to_numpy()
-            mat = np.vstack(
-                [
-                    np.zeros(dim) if v is None else np.asarray(v, dtype=np.float64)
-                    for v in pdf["__nv"]
-                ]
-            )
-            cnorm = np.linalg.norm(mat, axis=1)
-            c_degenerate = null_vec | (cnorm == 0.0)
-            cnorm[cnorm == 0.0] = 1.0
-            cos = np.round((mat / cnorm[:, None]) @ qunit.T, 6)
+            mat = _dense(pdf["__nv"])
+            c_degenerate = null_vec | (np.linalg.norm(mat, axis=1) == 0.0)
+            cos = np.round(_unit_rows(mat) @ qunit.T, 6)
             # NULL-cosine pairs rank below every real cosine (Spark desc
             # puts nulls last): -inf keeps them candidates only when the
             # batch has fewer than k real rows, exactly the case where
@@ -968,34 +897,18 @@ def knn_label_noise(
     ).mapInPandas(
         _cand_batches, f"query_id {id_type}, neighbor_id {id_type}"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
+    q = _side(
+        queries, id_col, vec_col, "query_id", "q",
         F.col(label_col).alias("own_label"),
-        F.col(vec_col).alias("__qv"),
-        F.expr(norm_expr(vec_col)).alias("__qn"),
     )
-    c = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("__nl"),
-        F.col(vec_col).alias("__cv"),
-        F.expr(norm_expr(vec_col)).alias("__cn"),
-    )
+    c = _side(df, id_col, vec_col, "neighbor_id", "c", F.col(label_col).alias("__nl"))
     scored = (
         cand.join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "__cos",
-            F.round(
-                F.expr(_dot_over_norms("__qv", "__cv", "__qn", "__cn")), 6
-            ),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("neighbor_id")
+        .withColumn("__cos", F.round(F.expr(_COSINE), 6))
     )
     votes = (
-        scored.withColumn("__rn", F.row_number().over(w_rank))
-        .filter(F.col("__rn") <= k)
+        _top_k(scored, k, "__cos")
         .groupBy("query_id", "own_label", "__nl")
         .agg(F.count(F.lit(1)).cast("long").alias("n_votes"))
     )

@@ -13,7 +13,6 @@ identical table (CTE ``TR`` below).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from typing import Dict
 
@@ -35,14 +34,6 @@ from autoscan_spark.sources.transcripts import (
 _TR = f"WITH tr AS ({TRANSCRIPTS_FROM_DOCUMENTS_DUCKDB})"
 
 _MARKER = "---PAGE BREAK---"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +205,7 @@ FROM e GROUP BY conv_id"""
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-group documents by content, keep min doc_id."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
         F.count("*").cast("long").alias("n_dups"),
         F.min("doc_id").cast("long").alias("keeper_id"),
@@ -230,7 +221,7 @@ FROM documents GROUP BY md5(text)"""
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting over documents."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.expr(split_words("text", lower=False))).cast("long").alias("n_tokens"),
@@ -251,7 +242,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     so cross-engine float hashing is stable)."""
     stop_list = ",".join(f"'{w}'" for w in _STOPWORDS)
     # hoisted words column: one split per row, not one per consumer expr
-    docs = with_words(_docs(spark, sf_dir), "text", "__w")
+    docs = with_words(load_table(spark, sf_dir, "documents"), "text", "__w")
     n_words = F.expr("size(__w)")
     n_stop = F.expr(f"size(filter(__w, w -> w in ({stop_list})))")
     return docs.select(
@@ -278,7 +269,7 @@ FROM documents"""
 
 def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window delta over the events stream table (per-user ordered by ts)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -304,7 +295,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-3-gram Jaccard between consecutive documents (JVM arrays)."""
     from autoscan_spark.operators.dedup import ngram_jaccard
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
     b = docs.select(
         (F.col("doc_id") - 1).alias("id_a"), F.col("text").alias("text_b")
@@ -332,7 +323,8 @@ def q_content_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprint: md5 of whitespace-normalized lowercased text."""
     from autoscan_spark.operators.textstats import content_fingerprint
 
-    return content_fingerprint(_docs(spark, sf_dir)).select("doc_id", "content_fp")
+    docs = load_table(spark, sf_dir, "documents")
+    return content_fingerprint(docs).select("doc_id", "content_fp")
 
 
 _Q_CONTENT_FP_SQL = r"""
@@ -345,7 +337,7 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish pre-tokenizer counts (word pieces + punctuation)."""
     from autoscan_spark.operators.textstats import token_counts
 
-    return token_counts(_docs(spark, sf_dir)).select(
+    return token_counts(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "n_ws_tokens", "n_bpe_tokens"
     )
 
@@ -361,7 +353,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID (argmax over per-language hit counts)."""
     from autoscan_spark.operators.textstats import lang_id
 
-    return lang_id(_docs(spark, sf_dir)).select("doc_id", "lang_pred")
+    return lang_id(load_table(spark, sf_dir, "documents")).select("doc_id", "lang_pred")
 
 
 def _langid_oracle() -> str:
@@ -386,7 +378,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-heuristic gate columns (ints + boolean; ratios are internal)."""
     from autoscan_spark.operators.textstats import quality_features
 
-    return quality_features(_docs(spark, sf_dir)).select(
+    return quality_features(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.col("n_chars").alias("n_chars_q"), F.col("n_words").alias("n_words_q"), "quality_ok"
     )
 
@@ -417,7 +409,7 @@ def q_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (JVM zip_with/aggregate; query side broadcast)."""
     from autoscan_spark.operators.similarity import cosine_pairs
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return cosine_pairs(emb, queries).select(
         "query_id", "neighbor_id", F.round(F.col("cosine"), 6).alias("cosine_r")
@@ -434,20 +426,15 @@ FROM embeddings c, (SELECT * FROM embeddings WHERE vec_id < 10) q"""
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 per query (rank by rounded cosine then id so
     the ordering is engine-portable)."""
-    from autoscan_spark.operators.similarity import cosine_pairs
+    from autoscan_spark.operators.similarity import _top_k, cosine_pairs
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     scored = cosine_pairs(emb, queries).filter(
         F.col("query_id") != F.col("neighbor_id")
     ).withColumn("cosine_r", F.round(F.col("cosine"), 6))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_r"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "cosine_r", "rank")
+    return _top_k(scored, 5, "cosine_r").select(
+        "query_id", "neighbor_id", "cosine_r", F.col("rank").cast("int").alias("rank")
     )
 
 
@@ -471,7 +458,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-bucketed scale path is exercised by tests/test_dedup_similarity)."""
     from autoscan_spark.operators.similarity import embedding_near_dups
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dups(emb, threshold=0.25, exact=True)
     return pairs.select(
         "id_a", "id_b", F.round(F.col("cosine"), 6).alias("cosine_r")
@@ -490,7 +477,7 @@ WHERE a.vec_id < b.vec_id
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: new session when the per-user gap exceeds 300s
     (cumulative-sum window — the batch form of the streaming session op)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts", 1).over(w))
     is_new = F.when(gap.isNull() | (gap > 300), 1).otherwise(0)
@@ -606,7 +593,7 @@ FROM tr"""
 
 def q_topk_docs_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort / top-k: 3 longest documents per language (window + rank)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
         docs.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -625,7 +612,7 @@ QUALIFY rank <= 3"""
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operations: long docs ∩ english, short docs ∖ english, union-all
     distinct count per branch label."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     long_en = docs.filter("n_chars >= 300").select("doc_id").intersect(
         docs.filter("lang = 'en'").select("doc_id")
     )
@@ -660,7 +647,7 @@ SELECT branch, CAST(count(*) AS BIGINT) AS n_docs FROM (
 def q_grouping_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregation breadth: multi-key grouping with distinct + conditional
     aggregates over the events table."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("n_users"),
         F.round(F.sum(F.when(F.col("value") > 0, F.col("value")).otherwise(0.0)), 6).alias("pos_value"),
@@ -795,7 +782,7 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate would surface as a row/hash mismatch, not silently pass)."""
     from autoscan_spark.operators.dedup import minhash_dedup
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, threshold=0.1, n=3, num_hashes=64, bands=32)
     return pairs.select(
         "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard_r")
@@ -832,7 +819,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     many input splits, so kernel parallelism comes for free."""
     from autoscan_spark.operators.dedup import simhash64, simhash_near_pairs
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return simhash_near_pairs(simhash64(docs), max_hamming=7, n_chunks=8)
 
 
@@ -884,7 +871,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # one shared words projection for both word-level ops (lang + quality)
-    docs = with_words(_docs(spark, sf_dir), "text", "__words")
+    docs = with_words(load_table(spark, sf_dir, "documents"), "text", "__words")
     en = lang_id(docs, words_col="__words").filter(F.col("lang_pred") == "en")
     gated = (
         quality_features(en, words_col="__words")
@@ -942,7 +929,7 @@ def q_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential-fuzzed against union-find in pytest."""
     from autoscan_spark.operators.dedup import dedup_connected, minhash_dedup
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, threshold=0.1, n=3, num_hashes=64, bands=32)
     return dedup_connected(docs, pairs).select("doc_id").orderBy("doc_id")
 
@@ -982,7 +969,7 @@ def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only: seeded, deterministic; recall vs exact pinned in pytest."""
     from autoscan_spark.operators.similarity import lsh_topk
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return lsh_topk(emb, queries, k=5, n_planes=12, n_tables=6).select(
         "query_id", "neighbor_id", "rank"
@@ -995,7 +982,7 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs exact pinned in pytest."""
     from autoscan_spark.operators.similarity import ivf_topk
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return ivf_topk(
         emb, queries, k=5, n_cells=16, nprobe=4, kmeans_iterations=3
@@ -1007,7 +994,7 @@ def q_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) — the anti-domination rule of web-corpus construction."""
     from autoscan_spark.operators.sampling import cap_per_group
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return cap_per_group(docs, "source", "doc_id", 10).select(
         "doc_id", "source"
     )
@@ -1057,7 +1044,7 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     the patterns are restricted to shared syntax)."""
     from autoscan_spark.operators.textstats import scrub_pii
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     injected = docs.withColumn(
         "text",
         F.expr(
@@ -1108,7 +1095,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ppm) and top single-word occurrence count."""
     from autoscan_spark.operators.textstats import repetition_stats
 
-    return repetition_stats(_docs(spark, sf_dir)).select(
+    return repetition_stats(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "distinct_ppm", "top_word_freq"
     )
 
@@ -1129,7 +1116,7 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal; one shuffle on window hash)."""
     from autoscan_spark.operators.dedup import duplicate_spans
 
-    return duplicate_spans(_docs(spark, sf_dir), n=5)
+    return duplicate_spans(load_table(spark, sf_dir, "documents"), n=5)
 
 
 _Q_DUP_SPANS_SQL = r"""
@@ -1157,7 +1144,7 @@ def q_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered words are cut and docs rebuilt from survivors."""
     from autoscan_spark.operators.dedup import remove_duplicate_spans
 
-    return remove_duplicate_spans(_docs(spark, sf_dir), n=5)
+    return remove_duplicate_spans(load_table(spark, sf_dir, "documents"), n=5)
 
 
 _Q_REMOVE_SPANS_SQL = r"""
@@ -1321,7 +1308,7 @@ def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest). Returns the learned rank-ordered merge table."""
     from autoscan_spark.operators.textstats import learn_bpe_merges
 
-    merges = learn_bpe_merges(_docs(spark, sf_dir), n_merges=16)
+    merges = learn_bpe_merges(load_table(spark, sf_dir, "documents"), n_merges=16)
     return spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         schema="rank int, piece_a string, piece_b string",
@@ -1335,7 +1322,7 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy + agreement pinned in pytest)."""
     from autoscan_spark.operators.classify import distill_heuristic_gate
 
-    return distill_heuristic_gate(_docs(spark, sf_dir)).select(
+    return distill_heuristic_gate(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "gate_label", "quality_keep"
     )
 
@@ -1345,7 +1332,7 @@ def q_bpe_token_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply loop — not SQL-expressible; merge semantics pinned by pytest)."""
     from autoscan_spark.operators.textstats import bpe_token_count
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return bpe_token_count(docs).select("doc_id", "n_bpe_real").orderBy("doc_id")
 
 
@@ -1370,7 +1357,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN over the identically deduped right side."""
     from autoscan_spark.operators.temporal import asof_join
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -1413,7 +1400,8 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs/engines/partitionings (leakage-safe dataset splits)."""
     from autoscan_spark.operators.sampling import hash_split
 
-    return hash_split(_docs(spark, sf_dir), "doc_id").select("doc_id", "split")
+    docs = load_table(spark, sf_dir, "documents")
+    return hash_split(docs, "doc_id").select("doc_id", "split")
 
 
 _Q_HASH_SPLIT_SQL = """
@@ -1433,7 +1421,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sampling import stratified_hash_sample
 
     return stratified_hash_sample(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         "doc_id",
         "lang",
         {"en": 0.5, "de": 1.0},
@@ -1458,7 +1446,7 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern as scrub_pii."""
     from autoscan_spark.operators.textstats import url_domain_stats
 
-    docs = _docs(spark, sf_dir).withColumn(
+    docs = load_table(spark, sf_dir, "documents").withColumn(
         "text",
         F.expr(
             "concat(text, ' see https://site', cast(pmod(doc_id, 20) as string), "
@@ -1493,7 +1481,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-k with deterministic (n DESC, token ASC) tie-break."""
     from autoscan_spark.operators.textstats import token_frequencies
 
-    return token_frequencies(_docs(spark, sf_dir), top_n=100)
+    return token_frequencies(load_table(spark, sf_dir, "documents"), top_n=100)
 
 
 _Q_VOCAB_SQL = r"""
@@ -1507,10 +1495,6 @@ SELECT token, n FROM (
 ORDER BY n DESC, token ASC LIMIT 100"""
 
 
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 # money amounts are doubles in the parquet; all arithmetic is done on
 # integer cents (floor(x*100 + 0.5) — identical IEEE evaluation in both
 # engines, immune to round-half rule differences) so sums are EXACT and
@@ -1522,7 +1506,7 @@ _CENTS = "CAST(floor({col} * 100 + 0.5) AS BIGINT)"
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary over lineitem: grouped exact-integer
     aggregates with a date-range scan predicate (pushdown-eligible)."""
-    li = _table(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-01")
     )
     qty = _CENTS.format(col="l_quantity")
@@ -1562,10 +1546,10 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-style star join: lineitem ⋈ orders ⋈ customer ⋈ nation,
     revenue per nation in exact integer cents. Plan shape: the two big
     fact-fact joins shuffle on their keys; the nation dimension broadcasts."""
-    li = _table(spark, sf_dir, "lineitem")
-    orders = _table(spark, sf_dir, "orders")
-    cust = _table(spark, sf_dir, "customer")
-    nation = _table(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     return (
@@ -1596,9 +1580,9 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join breadth (TPC-H Q22-flavored): customers that never placed
     an URGENT order. left_anti needs only the filtered order keys on the
     build side; the priority filter is pushdown-eligible."""
-    cust = _table(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     urgent = (
-        _table(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -1621,13 +1605,13 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents. Ties broken by l_orderkey so the top-k cut is deterministic;
     sort+limit compiles to TakeOrdered (no global sort at scale), and all
     three date/segment filters are pushdown-eligible scan predicates."""
-    cust = _table(spark, sf_dir, "customer").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    orders = _table(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-06-01")
     )
-    li = _table(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-06-01")
     )
     price = _CENTS.format(col="l_extendedprice")
@@ -1662,8 +1646,8 @@ def q_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     had at least one line item shipped more than 60 days after the order
     date. left_semi join with a mixed equi + range condition — the build
     side carries only (l_orderkey, l_shipdate)."""
-    orders = _table(spark, sf_dir, "orders")
-    li = _table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -1689,7 +1673,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive date/discount/quantity predicate (all pushdown-eligible)
     and one global exact-cents aggregate — the canonical
     scan-predicate-aggregate microbenchmark."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     return (
@@ -1722,13 +1706,13 @@ def q_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-style returned-item reporting: top-20 customers by revenue
     lost to returns in a date window. Deterministic top-k (ties by
     c_custkey) via TakeOrdered; nation broadcast."""
-    li = _table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _table(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
     )
-    cust = _table(spark, sf_dir, "customer")
-    nation = _table(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     return (
@@ -1768,13 +1752,13 @@ def q_parttype_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the p_name filter sits UNDER the join so only matching
     parts reach the fact table; part/supplier join under AQE (both are
     dimension-sized next to lineitem), nation explicitly broadcast."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").contains("red")
     )
-    supp = _table(spark, sf_dir, "supplier")
-    nation = _table(spark, sf_dir, "nation")
-    orders = _table(spark, sf_dir, "orders")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     return (
@@ -1820,7 +1804,7 @@ def q_user_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.temporal import zscore_outliers
 
     return zscore_outliers(
-        _events(spark, sf_dir), k=3, min_n=5,
+        load_table(spark, sf_dir, "events"), k=3, min_n=5,
         group_col="user_id", id_col="event_id", value_col="value",
     )
 
@@ -1852,7 +1836,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash is engine-stable."""
     from autoscan_spark.operators.textstats import gopher_quality
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     injected = docs.withColumn(
         "text",
         F.concat(
@@ -1931,7 +1915,7 @@ def q_lang_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine."""
     from autoscan_spark.operators.sampling import temperature_rates
 
-    return temperature_rates(_docs(spark, sf_dir), "lang").select(
+    return temperature_rates(load_table(spark, sf_dir, "documents"), "lang").select(
         "lang", "n_docs", "keep_rate"
     )
 
@@ -1951,9 +1935,8 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; the sampling pass is shuffle-free."""
     from autoscan_spark.operators.sampling import temperature_sample
 
-    return temperature_sample(_docs(spark, sf_dir), "lang", "doc_id").select(
-        "doc_id", "lang"
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    return temperature_sample(docs, "lang", "doc_id").select("doc_id", "lang")
 
 
 _Q_TEMP_SAMPLE_SQL = """
@@ -1979,7 +1962,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored in the oracle)."""
     from autoscan_spark.operators.dedup import line_dedup
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     lined = docs.withColumn("text", F.expr("replace(text, ' value ', '\\n')"))
     return line_dedup(lined).select(
         "doc_id",
@@ -2025,7 +2008,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle)."""
     from autoscan_spark.operators.dedup import line_dedup
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     para = docs.withColumn(
         "text", F.expr("replace(text, ' value ', '\\n\\n')")
     )
@@ -2072,7 +2055,7 @@ def q_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability (cross-engine-stable by construction)."""
     from autoscan_spark.operators.textstats import bigram_rarity
 
-    return bigram_rarity(_docs(spark, sf_dir))
+    return bigram_rarity(load_table(spark, sf_dir, "documents"))
 
 
 _Q_BIGRAM_RARITY_SQL = r"""
@@ -2106,7 +2089,7 @@ def q_snapshot_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the delta survivors."""
     from autoscan_spark.operators.dedup import dedup_against
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     donor = old.select(
         (F.col("doc_id") + 1).alias("doc_id"), F.col("text").alias("dup_text")
@@ -2147,7 +2130,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sampling import token_budget_sample
     from autoscan_spark.operators.textstats import token_counts
 
-    toks = token_counts(_docs(spark, sf_dir)).select(
+    toks = token_counts(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", F.col("n_ws_tokens").alias("n_tokens")
     )
     return token_budget_sample(
@@ -2176,7 +2159,7 @@ def q_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     perplexity proxy; exact integer aggregates, one final division)."""
     from autoscan_spark.operators.textstats import unigram_familiarity
 
-    return unigram_familiarity(_docs(spark, sf_dir)).select(
+    return unigram_familiarity(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "n_words", "sum_counts", "familiarity"
     )
 
@@ -2205,7 +2188,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Line structure synthesized as in line_dedup (' value ' boundary)."""
     from autoscan_spark.operators.dedup import strip_boilerplate_lines
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     lined = docs.withColumn("text", F.expr("replace(text, ' value ', '\\n')"))
     return strip_boilerplate_lines(lined, min_docs=3).select(
         "doc_id",
@@ -2247,7 +2230,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically mutated — classify each doc added / removed /
     changed / unchanged (the nightly diff of a continuously rebuilt
     corpus)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", F.col("text").alias("old_text")
     )
@@ -2299,7 +2282,7 @@ def q_lang_source_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     implicit form needs an extra distinct-collection job; the oracle
     mirrors it as conditional aggregation)."""
     langs = ["de", "en", "es", "fr", "zh"]
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     wide = (
         docs.groupBy("source")
         .pivot("lang", langs)
@@ -2329,7 +2312,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.textstats import chunk_documents
 
     return chunk_documents(
-        _docs(spark, sf_dir), window_tokens=32, stride=24
+        load_table(spark, sf_dir, "documents"), window_tokens=32, stride=24
     ).select(
         "doc_id",
         "chunk_id",
@@ -2362,7 +2345,7 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured breadth: JSON property extraction from the events
     ``props`` column (get_json_object ≙ DuckDB json_extract_string),
     aggregated per event type in exact integers."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         # try_cast: under ANSI mode a non-integer $.k must degrade to NULL
         # (mirrored by DuckDB TRY_CAST), not crash the job
@@ -2398,7 +2381,7 @@ def q_normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # injected via a Python literal: Spark SQL's chr() wraps at 256, so
     # chr(769) is NOT the combining acute there (DuckDB's chr is full
     # codepoint — the oracle keeps chr())
-    docs = _docs(spark, sf_dir).withColumn(
+    docs = load_table(spark, sf_dir, "documents").withColumn(
         "text",
         F.concat(F.col("text"), F.lit(" cafe\u0301 \ufb01ne, no\u0308el")),
     
@@ -2423,7 +2406,7 @@ FROM (SELECT doc_id,
 def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language length quantiles (p50/p90/p99, linear interpolation) —
     Spark exact `percentile` vs DuckDB `quantile_cont` (same estimator)."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     q = docs.groupBy("lang").agg(
         F.expr("percentile(n_chars, array(0.5, 0.9, 0.99))").alias("__q"),
         F.count("*").cast("long").alias("n_docs"),
@@ -2451,7 +2434,7 @@ def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact distinct for the oracle; production uses HLL approx)."""
     from autoscan_spark.operators.profile import profile_table
 
-    return profile_table(_docs(spark, sf_dir), exact_distinct=True)
+    return profile_table(load_table(spark, sf_dir, "documents"), exact_distinct=True)
 
 
 _Q_PROFILE_SQL = r"""
@@ -2484,7 +2467,8 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     click → purchase occurred in strictly increasing time order."""
     from autoscan_spark.operators.temporal import funnel_counts
 
-    return funnel_counts(_events(spark, sf_dir), ["view", "click", "purchase"])
+    ev = load_table(spark, sf_dir, "events")
+    return funnel_counts(ev, ["view", "click", "purchase"])
 
 
 _Q_FUNNEL_SQL = """
@@ -2518,7 +2502,7 @@ def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrub_pii."""
     from autoscan_spark.operators.textstats import c4_clean
 
-    docs = _docs(spark, sf_dir).withColumn(
+    docs = load_table(spark, sf_dir, "documents").withColumn(
         "text",
         F.expr(
             "concat(regexp_replace(text, ' (table|row) ', concat('.', chr(10))), '.')"
@@ -2572,7 +2556,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     side never shuffles."""
     from autoscan_spark.operators.dedup import benchmark_contamination
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return benchmark_contamination(docs, _bench_prefixes(docs), n=8)
 
 
@@ -2613,7 +2597,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-hash span placement — cross-engine-exact, zero shuffles."""
     from autoscan_spark.operators.textstats import span_corruption
 
-    return span_corruption(_docs(spark, sf_dir))
+    return span_corruption(load_table(spark, sf_dir, "documents"))
 
 
 _Q_SPAN_CORRUPTION_SQL = r"""
@@ -2654,7 +2638,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cross-engine bit-stable; zero shuffles)."""
     from autoscan_spark.operators.textstats import readability
 
-    return readability(_docs(spark, sf_dir))
+    return readability(load_table(spark, sf_dir, "documents"))
 
 
 _Q_READABILITY_SQL = r"""
@@ -2686,7 +2670,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sampling import pack_sequences
     from autoscan_spark.operators.textstats import chunk_documents
 
-    chunks = chunk_documents(_docs(spark, sf_dir), window_tokens=64)
+    chunks = chunk_documents(load_table(spark, sf_dir, "documents"), window_tokens=64)
     return pack_sequences(chunks, capacity=512, num_partitions=8)
 
 
@@ -2712,7 +2696,7 @@ def q_lsh_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap — not just the exact side."""
     from autoscan_spark.operators.similarity import lsh_recall, md5_hyperplanes
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     return lsh_recall(
         emb,
         emb.filter(F.col("vec_id") < 50),
@@ -2780,11 +2764,11 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROMO-type parts (exact integer cents → single bit-stable row). The
     date filter is a pushdown-eligible scan predicate; part joins under
     AQE (classic broadcast side at TPC-H scale ratios)."""
-    li = _table(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-04-01"))
     )
-    part = _table(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     rev = f"{price} * (100 - {disc})"
@@ -2825,14 +2809,14 @@ def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the lineitem-only aggregate BEFORE the orders/customer joins (the
     Q18 plan shape — the expensive join sees only qualifying keys);
     sort+limit compiles to TakeOrdered."""
-    li = _table(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     qty = (
         li.groupBy("l_orderkey")
         .agg(F.expr("sum(CAST(l_quantity AS BIGINT))").alias("total_qty"))
         .filter(F.col("total_qty") > 200)
     )
-    orders = _table(spark, sf_dir, "orders")
-    cust = _table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     price = _CENTS.format(col="o_totalprice")
     return (
         qty.join(orders, qty.l_orderkey == orders.o_orderkey)
@@ -2869,10 +2853,10 @@ def q_supplier_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp, so revenue not net profit): lineitem ⋈ supplier ⋈ nation ⋈
     orders, grouped by supplier nation × order year, exact integer cents.
     nation is explicitly broadcast (25 rows); supplier joins under AQE."""
-    li = _table(spark, sf_dir, "lineitem")
-    supp = _table(spark, sf_dir, "supplier")
-    nation = _table(spark, sf_dir, "nation")
-    orders = _table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     return (
@@ -2906,11 +2890,11 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     both directions, by order year. Both nation dimensions broadcast; the
     nation filters sit UNDER the joins so only qualifying suppliers/
     customers reach the lineitem join."""
-    li = _table(spark, sf_dir, "lineitem")
-    supp = _table(spark, sf_dir, "supplier")
-    cust = _table(spark, sf_dir, "customer")
-    orders = _table(spark, sf_dir, "orders")
-    nation = _table(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
     pair = ("NATION_18", "NATION_19")
     n1 = nation.filter(F.col("n_name").isin(*pair)).select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
@@ -2960,7 +2944,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-damped variant is deliberately left to consumers)."""
     from autoscan_spark.operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
 
 
 _Q_TFIDF_SQL = r"""
@@ -2993,7 +2977,7 @@ def q_repeat_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sampling import repeat_upsample
 
     out = repeat_upsample(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         strata_col="source",
         key_col="doc_id",
         epochs={"src0": 2.25, "src1": 1.0, "src2": 0.5},
@@ -3058,12 +3042,12 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     |suppliers|×|years| rows, not the fact table. Fact-sized exchanges:
     2 → 0 locally (orders broadcasts at bench scale); at cluster scale
     the one unavoidable fact shuffle is the l_orderkey SMJ with orders."""
-    li = _table(spark, sf_dir, "lineitem")
-    orders = _table(spark, sf_dir, "orders")
-    cust = _table(spark, sf_dir, "customer")
-    supp = _table(spark, sf_dir, "supplier")
-    nation = _table(spark, sf_dir, "nation")
-    region = _table(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     cust_region = (
         cust.join(
             F.broadcast(
@@ -3138,7 +3122,7 @@ def q_ivf_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring, overlap (see ``similarity.ivf_recall``)."""
     from autoscan_spark.operators.similarity import ivf_recall
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     return ivf_recall(
         emb, emb.filter(F.col("vec_id") < 50), k=5, n_cells=16, nprobe=4
     )
@@ -3210,7 +3194,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantics in tests/test_dedup_similarity.py)."""
     from autoscan_spark.operators.similarity import semantic_dedup
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     # n_cells auto: cells scale with the corpus (fixed expected cell size)
     # so the within-cell pairwise step stays linear at the sf1 rung
     return semantic_dedup(
@@ -3299,8 +3283,8 @@ def q_orders_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     second tiny aggregate over the 1-row-per-customer intermediate. The
     expensive shuffle keys on custkey; the histogram regroup is
     negligible (≤ max-orders-per-customer distinct keys)."""
-    cust = _table(spark, sf_dir, "customer")
-    orders = _table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -3331,8 +3315,8 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integral) — no float division, bit-stable cross-engine."""
     from pyspark.sql.window import Window
 
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#12"
     ).select("p_partkey")
     price = _CENTS.format(col="l_extendedprice")
@@ -3379,8 +3363,8 @@ def q_or_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the disjunction as a post-join filter Catalyst pushes per-side where
     possible (common-factor extraction); exact integer cents, single
     bit-stable row."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     rev = f"{price} * (100 - {disc})"
@@ -3425,7 +3409,7 @@ def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup_similarity.py), so the engines agree exactly."""
     from autoscan_spark.operators.dedup import fuzzy_dup_pairs
 
-    return fuzzy_dup_pairs(_docs(spark, sf_dir), max_distance=64)
+    return fuzzy_dup_pairs(load_table(spark, sf_dir, "documents"), max_distance=64)
 
 
 # brute force within the necessary |len diff| <= k window; lev computed
@@ -3451,7 +3435,7 @@ def q_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``temporal.rolling_time_stats``."""
     from autoscan_spark.operators.temporal import rolling_time_stats
 
-    return rolling_time_stats(_events(spark, sf_dir), window_seconds=3600)
+    return rolling_time_stats(load_table(spark, sf_dir, "events"), window_seconds=3600)
 
 
 # epoch_us // 1e6 is floor division == Spark's timestamp->long truncation
@@ -3475,7 +3459,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     count 5) — see ``textstats.pmi_collocations``."""
     from autoscan_spark.operators.textstats import pmi_collocations
 
-    return pmi_collocations(_docs(spark, sf_dir), min_count=5, top_k=100)
+    docs = load_table(spark, sf_dir, "documents")
+    return pmi_collocations(docs, min_count=5, top_k=100)
 
 
 # PMI ratio in the bigram event space; // is floor division == Spark DIV
@@ -3513,8 +3498,8 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't re-run the lineitem aggregation; the max broadcasts back.
     Exact integer cents·100 revenue units, so ties are exact and the
     result is deterministic cross-engine."""
-    li = _table(spark, sf_dir, "lineitem")
-    supp = _table(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
     price = _CENTS.format(col="l_extendedprice")
     disc = _CENTS.format(col="l_discount")
     rev = (
@@ -3563,7 +3548,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     week offset). One window shuffle + one distinct-count groupBy."""
     from autoscan_spark.operators.temporal import retention_cohorts
 
-    return retention_cohorts(_events(spark, sf_dir))
+    return retention_cohorts(load_table(spark, sf_dir, "events"))
 
 
 _Q_RETENTION_SQL = """
@@ -3584,7 +3569,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     types per user, with exact integer-ppm share per source type."""
     from autoscan_spark.operators.temporal import event_transitions
 
-    return event_transitions(_events(spark, sf_dir))
+    return event_transitions(load_table(spark, sf_dir, "events"))
 
 
 _Q_TRANSITIONS_SQL = """
@@ -3611,7 +3596,8 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.dedup import winnow_pairs
 
     return winnow_pairs(
-        _docs(spark, sf_dir), k=4, window=8, min_shared=3, max_bucket=64
+        load_table(spark, sf_dir, "documents"),
+        k=4, window=8, min_shared=3, max_bucket=64,
     )
 
 
@@ -3647,7 +3633,7 @@ def q_template_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace, digit-runs -> '0') text, ranked per template."""
     from autoscan_spark.operators.dedup import template_dedup
 
-    return template_dedup(_docs(spark, sf_dir))
+    return template_dedup(load_table(spark, sf_dir, "documents"))
 
 
 _Q_TEMPLATE_DEDUP_SQL = r"""
@@ -3670,7 +3656,7 @@ def q_lexicon_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.textstats import lexicon_hits
 
     return lexicon_hits(
-        _docs(spark, sf_dir), list(_LEXICON), max_hit_ppm=100_000
+        load_table(spark, sf_dir, "documents"), list(_LEXICON), max_hit_ppm=100_000
     )
 
 
@@ -3696,7 +3682,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     word, exact integer ppm) — the mixture-temperature diagnostic."""
     from autoscan_spark.operators.textstats import tokenizer_fertility
 
-    return tokenizer_fertility(_docs(spark, sf_dir))
+    return tokenizer_fertility(load_table(spark, sf_dir, "documents"))
 
 
 _Q_FERTILITY_SQL = r"""
@@ -3719,7 +3705,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast vocab join; the tokenizer-coverage diagnostic)."""
     from autoscan_spark.operators.textstats import oov_rate
 
-    return oov_rate(_docs(spark, sf_dir), vocab_size=20)
+    return oov_rate(load_table(spark, sf_dir, "documents"), vocab_size=20)
 
 
 _Q_OOV_SQL = r"""
@@ -3784,7 +3770,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure over exact-Jaccard pairs."""
     from autoscan_spark.operators.dedup import cluster_size_stats, minhash_dedup
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, threshold=0.1, n=3, num_hashes=64, bands=32)
     return cluster_size_stats(docs, pairs)
 
@@ -3829,7 +3815,7 @@ def q_hourly_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm shares (UTC-pinned hour())."""
     from autoscan_spark.operators.temporal import hourly_profile
 
-    return hourly_profile(_events(spark, sf_dir))
+    return hourly_profile(load_table(spark, sf_dir, "events"))
 
 
 _Q_HOURLY_SQL = """
@@ -3850,7 +3836,7 @@ def q_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, corpus never shuffles)."""
     from autoscan_spark.operators.textstats import length_percentile_filter
 
-    return length_percentile_filter(_docs(spark, sf_dir))
+    return length_percentile_filter(load_table(spark, sf_dir, "documents"))
 
 
 _Q_LENGTH_FILTER_SQL = """
@@ -3870,7 +3856,7 @@ def q_ngram_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of distinct 3-grams appearing in >= 3 other docs, exact ppm."""
     from autoscan_spark.operators.textstats import ngram_commonness
 
-    return ngram_commonness(_docs(spark, sf_dir), n=3, common_docs=3)
+    return ngram_commonness(load_table(spark, sf_dir, "documents"), n=3, common_docs=3)
 
 
 _Q_NGRAM_COMMONNESS_SQL = r"""
@@ -3901,7 +3887,7 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day-offset explode of the deduplicated (user, day) table)."""
     from autoscan_spark.operators.temporal import rolling_active_users
 
-    return rolling_active_users(_events(spark, sf_dir), window_days=7)
+    return rolling_active_users(load_table(spark, sf_dir, "events"), window_days=7)
 
 
 _Q_ROLLING_AU_SQL = """
@@ -3924,7 +3910,7 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer-ppm ratio)."""
     from autoscan_spark.operators.temporal import stickiness
 
-    return stickiness(_events(spark, sf_dir), window_days=7)
+    return stickiness(load_table(spark, sf_dir, "events"), window_days=7)
 
 
 _Q_STICKINESS_SQL = """
@@ -4023,7 +4009,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sketch import cms_heavy_hitters
 
     return cms_heavy_hitters(
-        _docs(spark, sf_dir), min_count=500, width=2048, depth=4
+        load_table(spark, sf_dir, "documents"), min_count=500, width=2048, depth=4
     ).orderBy("word")
 
 
@@ -4067,7 +4053,7 @@ def q_code_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteeing every line heuristic fires in both engines."""
     from autoscan_spark.operators.textstats import code_prose_stats
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bucket = F.pmod(
         F.conv(
             F.substring(
@@ -4136,7 +4122,7 @@ def q_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably fire."""
     from autoscan_spark.operators.textstats import encoding_quality
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bucket = F.pmod(
         F.conv(
             F.substring(
@@ -4190,7 +4176,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts over the bit-stable familiarity (perplexity-proxy) score."""
     from autoscan_spark.operators.textstats import ccnet_buckets
 
-    return ccnet_buckets(_docs(spark, sf_dir))
+    return ccnet_buckets(load_table(spark, sf_dir, "documents"))
 
 
 _Q_CCNET_SQL = rf"""
@@ -4229,7 +4215,7 @@ def q_funnel_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.temporal import funnel_within
 
     return funnel_within(
-        _events(spark, sf_dir), ["view", "click", "purchase"], 86400
+        load_table(spark, sf_dir, "events"), ["view", "click", "purchase"], 86400
     )
 
 
@@ -4264,7 +4250,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.dedup import minhash_dedup
     from autoscan_spark.operators.sampling import cluster_split
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, threshold=0.1, n=3, num_hashes=64, bands=32)
     return cluster_split(
         docs, pairs, {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -4417,7 +4403,7 @@ def q_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     density quality signal; both tails gate)."""
     from autoscan_spark.operators.textstats import word_entropy
 
-    return word_entropy(_docs(spark, sf_dir))
+    return word_entropy(load_table(spark, sf_dir, "documents"))
 
 
 _Q_WORD_ENTROPY_SQL = r"""
@@ -4442,7 +4428,7 @@ def q_hll_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sum of powers of two, float64-EXACT in both engines)."""
     from autoscan_spark.operators.sketch import hll_distinct
 
-    return hll_distinct(_docs(spark, sf_dir), n=3)
+    return hll_distinct(load_table(spark, sf_dir, "documents"), n=3)
 
 
 _Q_HLL_SQL = r"""
@@ -4482,7 +4468,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact overlap, false positives bounded by bits/k."""
     from autoscan_spark.operators.sketch import bloom_contamination
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return bloom_contamination(docs, _bench_prefixes(docs), n=8)
 
 
@@ -4544,7 +4530,7 @@ def q_interevent_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-second gap min/max/integer-avg. One user-key shuffle."""
     from autoscan_spark.operators.temporal import interevent_stats
 
-    return interevent_stats(_events(spark, sf_dir))
+    return interevent_stats(load_table(spark, sf_dir, "events"))
 
 
 def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4552,7 +4538,7 @@ def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order): tile counts + length ranges. One shuffle."""
     from autoscan_spark.operators.profile import length_deciles
 
-    return length_deciles(_docs(spark, sf_dir), n_tiles=10)
+    return length_deciles(load_table(spark, sf_dir, "documents"), n_tiles=10)
 
 
 def q_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4562,8 +4548,8 @@ def q_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     small non-Brand#1 parts. Exercises the distinct-aggregate (Expand)
     plan over a filtered dimension join — the brand/size filters sit
     UNDER the join, part joins under AQE."""
-    li = _table(spark, sf_dir, "lineitem")
-    part = _table(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1") & (F.col("p_size") <= 15)
     )
     return (
@@ -4579,7 +4565,7 @@ def q_weekly_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded (churn out of the window is undefined)."""
     from autoscan_spark.operators.temporal import weekly_churn
 
-    return weekly_churn(_events(spark, sf_dir))
+    return weekly_churn(load_table(spark, sf_dir, "events"))
 
 
 def q_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4592,7 +4578,7 @@ def q_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_dedup,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, threshold=0.1, n=3, num_hashes=64, bands=32)
     return cluster_representatives(docs, pairs, "n_chars").orderBy("doc_id")
 
@@ -4604,7 +4590,7 @@ def q_sample_exact_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     from autoscan_spark.operators.sampling import hash_top_n
 
     return hash_top_n(
-        _docs(spark, sf_dir).select("doc_id", "lang", "n_chars"),
+        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars"),
         "doc_id",
         500,
     )
@@ -4617,7 +4603,7 @@ def q_knn_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles."""
     from autoscan_spark.operators.similarity import knn_label_noise
 
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     return knn_label_noise(emb, emb.filter(F.col("vec_id") < 200), k=5)
 
 

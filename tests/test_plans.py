@@ -254,6 +254,19 @@ def test_cosine_is_jvm_side(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
+def test_ivf_recall_candidates_need_no_distinct(spark, sf_dir):
+    """A corpus row lies in one cell and a query probes distinct cells, so
+    ivf_recall's (query, neighbor) candidates are unique without a
+    ``distinct``: the only aggregate left in its plan is the per-query hit
+    count, and none is keyed on the candidates' vector arrays."""
+    from autoscan_spark.plans.driver_queries import q_ivf_recall_at_5
+
+    plan = _executed_plan(q_ivf_recall_at_5(spark, sf_dir))
+    keys = re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)
+    assert keys, plan
+    assert all(re.fullmatch(r"query_id#\d+L?", k) for k in keys), keys
+
+
 def test_words_split_evaluated_once_per_plan(spark, sf_dir):
     """The tokenizing split is hoisted into one projection (with_words);
     inlining it would evaluate it once per consumer expression (5× in

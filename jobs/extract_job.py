@@ -10,6 +10,9 @@ Usage (cluster):
     spark-submit --py-files autoscan_spark.zip jobs/extract_job.py \
         --input cat.db.transcripts --output s3://bucket/extracted ...
 
+``--input`` goes through ``sources.iceberg.read_transcripts``: a catalog
+table name when an Iceberg runtime is on the classpath, else a parquet path.
+
 The job is resumable: re-running with the same --output continues from the
 last committed bucket (plans.checkpoint).
 """
@@ -28,7 +31,8 @@ sys.path.insert(0, REPO_ROOT)
 
 def parse_args(argv=None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="autoscan_spark extraction job")
-    ap.add_argument("--input", required=True, help="transcripts parquet dir or table")
+    ap.add_argument("--input", required=True,
+                    help="transcripts parquet dir, or a catalog table with an Iceberg runtime")
     ap.add_argument("--output", required=True, help="output root directory")
     ap.add_argument("--mode", choices=["low", "high"], default="low",
                     help="low = parallel+drop-failed; high = serial per conversation with lag-1 context, fail-fast (reference accuracy modes)")
@@ -46,9 +50,10 @@ def main(argv=None) -> None:
 
     from autoscan_spark.plans.checkpoint import CheckpointedExtraction
     from autoscan_spark.session import get_spark
+    from autoscan_spark.sources.iceberg import read_transcripts
 
     spark = get_spark(app_name="autoscan-spark-extract", master=args.master)
-    transcripts = spark.read.parquet(args.input)
+    transcripts = read_transcripts(spark, args.input)
     job = CheckpointedExtraction(
         root=args.output,
         n_buckets=args.buckets,

@@ -16,7 +16,6 @@ def get_spark(
     app_name: str = "autoscan-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 2048,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -49,7 +48,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # keep parquet scan partitions reasonable for the local bench; on a
         # real cluster this is the default 128m
         .config("spark.sql.files.maxPartitionBytes", "134217728")

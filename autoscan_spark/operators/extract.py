@@ -8,7 +8,10 @@ same Arrow batch kernel, ``_extract_batches``, through ``mapInArrow``:
   autoscan/autoscan.py:272-289). At 100 TB this is the throughput path — the
   extraction stage adds ZERO shuffles; Catalyst pushes the turn-range filter
   into the parquet/Iceberg scan, and each Arrow batch is processed by a
-  vectorized Python kernel.
+  vectorized Python kernel. Arrow compute triages the batch first: only the
+  turns the envelope can change (markup, fences, table or heading openings,
+  trailing whitespace, tool turns) run the per-row Python kernel, and the
+  plain turns, most of a mixed corpus, pass through as Arrow arrays.
 
 - ``mode='high'`` — per-conversation serial scan with lag-1 *output* context
   (reference: sequential loop, autoscan/autoscan.py:257-271; context
@@ -55,7 +58,8 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.kernels.dispatch import STATUS_OK, extract_turn
+from autoscan_spark.kernels.dispatch import KIND_PLAIN, STATUS_OK, extract_turn
+from autoscan_spark.operators.fold import WS_CLASS
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -83,6 +87,14 @@ EXTRACTED_SCHEMA = StructType(
 
 _ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
 
+# RE2 (pyarrow.compute) pattern of the texts ``extract_turn`` may change or
+# classify as other than plain: a PDF payload, an opening fence (the fence
+# strip), an opening table row or heading (the only outputs ``apply_context``
+# changes), any ``<`` (the HTML classifier needs one) and a trailing
+# whitespace character (``rstrip``). Any other non-tool turn comes back as
+# its own text with one plain span.
+_NEEDS_KERNEL = f"^(?:%PDF-STREAM|```|[|#])|<|{WS_CLASS}\\z"
+
 
 def _drop_zip_finders() -> None:
     """Delete every ``zipimporter`` from ``sys.path_importer_cache`` so the
@@ -96,77 +108,138 @@ def _extract_batches(
     batches: Iterator[pa.RecordBatch], serial: bool = False
 ) -> Iterator[pa.RecordBatch]:
     """Vectorized batch kernel. Hot path discipline (this function dominates
-    the 100 TB run): input key columns pass through as Arrow arrays untouched
-    (zero copy); only role/text cross into Python; output arrays are built
-    natively (ListArray.from_arrays for spans) — no from_pydict, no pandas;
-    char counters come from Arrow compute, not Python len().
+    the 100 TB run): each batch is triaged with Arrow compute, and only the
+    rows ``_NEEDS_KERNEL`` selects (markup, fences, tables, headings, trailing
+    whitespace, tool turns) cross into Python for ``extract_turn``. Every
+    other row is a plain pass-through whose output columns are built in
+    Arrow: its text (null as ``''``), one ``plain`` span over it (none when
+    empty), status ``ok``, kind ``plain``. Key columns pass through
+    untouched, the kernel rows' results are scattered back with one ``take``
+    per column, and span offsets come from a numpy ``cumsum``.
 
     ``serial`` (high mode) expects rows sorted by ``(conv_id, turn_idx)``:
     each turn gets the previous turn's output as context when both belong to
-    the same conversation, and the first failed turn raises (fail-fast, like
-    the reference's sequential mode, autoscan/autoscan.py:250-255)."""
+    the same conversation (a pass-through turn's output is its text, which
+    the context rule never changes), and the first failed turn raises
+    (fail-fast, like the reference's sequential mode,
+    autoscan/autoscan.py:250-255)."""
     _drop_zip_finders()
+    import numpy as np
     import pyarrow.compute as pc
 
     span_fields = list(_ARROW_SCHEMA.field("spans").type.value_type)
-    prev_conv = prev_out = context = None
+    prev_conv = prev_out = None
     for batch in batches:
-        texts = batch.column("text").to_pylist()
-        roles = batch.column("role").to_pylist()
-        conv_ids = batch.column("conv_id").to_pylist() if serial else None
-        n = len(texts)
-        out_texts = [None] * n
-        statuses = [None] * n
-        kinds = [None] * n
-        span_offsets = [0] * (n + 1)
+        n = batch.num_rows
+        text, role = batch.column("text"), batch.column("role")
+        needs = pc.fill_null(
+            pc.or_kleene(
+                pc.equal(role, "tool"), pc.match_substring_regex(text, _NEEDS_KERNEL)
+            ),
+            False,
+        ).to_numpy(zero_copy_only=False)
+        rows = np.flatnonzero(needs)
+        m = len(rows)
+        texts = text.take(rows).to_pylist()
+        roles = role.take(rows).to_pylist()
+        if serial:
+            conv = batch.column("conv_id")
+            convs = conv.take(rows).to_pylist()
+            before = np.maximum(rows - 1, 0)
+            before_convs = conv.take(before).to_pylist()
+            before_texts = text.take(before).to_pylist()
+        row_list = rows.tolist()
+        outs = [None] * m
+        statuses = [None] * m
+        kinds = [None] * m
+        n_spans = [0] * m
         starts: list[int] = []
         ends: list[int] = []
         span_kinds: list[str] = []
-        for i in range(n):
+        for j in range(m):
+            context = None
             if serial:
-                context = prev_out if conv_ids[i] == prev_conv else None
-            extracted, spans, status, kind = extract_turn(texts[i], roles[i], context)
-            if serial:
-                if status != STATUS_OK:
-                    raise RuntimeError(
-                        f"extraction failed in high (sequential) mode for "
-                        f"conv_id={conv_ids[i]} "
-                        f"turn_idx={batch.column('turn_idx')[i].as_py()}: {status}"
-                    )
-                prev_conv, prev_out = conv_ids[i], extracted
-            out_texts[i] = extracted
-            statuses[i] = status
-            kinds[i] = kind
+                i = row_list[j]
+                if i == 0:
+                    if convs[j] == prev_conv:
+                        context = prev_out
+                elif convs[j] == before_convs[j]:
+                    if j and row_list[j - 1] == i - 1:
+                        context = outs[j - 1]
+                    else:
+                        context = before_texts[j] or ""
+            extracted, spans, status, kind = extract_turn(texts[j], roles[j], context)
+            if serial and status != STATUS_OK:
+                raise RuntimeError(
+                    f"extraction failed in high (sequential) mode for "
+                    f"conv_id={convs[j]} "
+                    f"turn_idx={batch.column('turn_idx')[row_list[j]].as_py()}: {status}"
+                )
+            outs[j] = extracted
+            statuses[j] = status
+            kinds[j] = kind
+            n_spans[j] = len(spans)
             for s, e, k in spans:
                 starts.append(s)
                 ends.append(e)
                 span_kinds.append(k)
-            span_offsets[i + 1] = len(starts)
+        if serial and n:
+            prev_conv = conv[n - 1].as_py()
+            if m and row_list[-1] == n - 1:
+                prev_out = outs[-1]
+            else:
+                prev_out = text[n - 1].as_py() or ""
 
+        # Scatter: kernel row j takes element j of its kernel-value column,
+        # and a pass-through row the element after the last, the constant.
+        pick = np.full(n, m, np.int32)
+        pick[rows] = np.arange(m, dtype=np.int32)
+        statuses.append(STATUS_OK)
+        kinds.append(KIND_PLAIN)
+        text_pick = np.arange(m, m + n, dtype=np.int32)
+        text_pick[rows] = pick[rows]
+        out_text_arr = pa.concat_arrays(
+            [pa.array(outs, pa.string()), pc.fill_null(text, "")]
+        ).take(text_pick)
+
+        # a pass-through row holds one plain span over its text unless empty
+        lengths = pc.fill_null(pc.utf8_length(text), 0).to_numpy()
+        n_spans = np.array(n_spans, np.int32)
+        counts = (lengths > 0).astype(np.int32)
+        counts[rows] = n_spans
+        offsets = np.zeros(n + 1, np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        n_kernel_spans = len(starts)
+        span_pick = np.full(offsets[-1], n_kernel_spans, np.int32)
+        span_start = np.zeros(offsets[-1], np.int32)
+        span_end = np.empty(offsets[-1], np.int32)
+        plain = ~needs & (lengths > 0)
+        span_end[offsets[:-1][plain]] = lengths[plain]
+        # kernel row j's spans fill offsets[rows[j]] onwards, in order
+        at = np.repeat(offsets[rows] - (np.cumsum(n_spans) - n_spans), n_spans)
+        at += np.arange(n_kernel_spans, dtype=np.int32)
+        span_pick[at] = np.arange(n_kernel_spans, dtype=np.int32)
+        span_start[at] = starts
+        span_end[at] = ends
+        span_kinds.append(KIND_PLAIN)
         struct = pa.StructArray.from_arrays(
             [
-                pa.array(starts, pa.int32()),
-                pa.array(ends, pa.int32()),
-                pa.array(span_kinds, pa.string()),
+                pa.array(span_start),
+                pa.array(span_end),
+                pa.array(span_kinds, pa.string()).take(span_pick),
             ],
             fields=span_fields,
         )
-        spans_arr = pa.ListArray.from_arrays(pa.array(span_offsets, pa.int32()), struct)
-        out_text_arr = pa.array(out_texts, pa.string())
-        in_chars = pc.fill_null(
-            pc.cast(pc.utf8_length(batch.column("text")), pa.int64()), 0
-        )
-        out_chars = pc.cast(pc.utf8_length(out_text_arr), pa.int64())
         yield pa.RecordBatch.from_arrays(
             [
                 batch.column("conv_id"),
                 pc.cast(batch.column("turn_idx"), pa.int32()),
                 out_text_arr,
-                spans_arr,
-                pa.array(statuses, pa.string()),
-                pa.array(kinds, pa.string()),
-                in_chars,
-                out_chars,
+                pa.ListArray.from_arrays(pa.array(offsets), struct),
+                pa.array(statuses, pa.string()).take(pick),
+                pa.array(kinds, pa.string()).take(pick),
+                pa.array(lengths.astype(np.int64)),
+                pc.cast(pc.utf8_length(out_text_arr), pa.int64()),
                 pa.nulls(n, pa.string()).fill_null(EXTRACTOR_VERSION),
             ],
             schema=_ARROW_SCHEMA,

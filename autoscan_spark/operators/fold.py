@@ -61,17 +61,18 @@ DOC_SCHEMA = StructType(
 )
 
 # The code points for which Python's str.isspace() is true, i.e. exactly what
-# str.rstrip() strips (Java's \s is ASCII-only).
+# str.rstrip() strips (Java's \s is ASCII-only); WS_CLASS is their regex
+# character class, in the \x{...} escapes that Java and RE2 both read.
 PY_WHITESPACE = (
     "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
     + "".join(map(chr, range(0x2000, 0x200B)))
     + "\u2028\u2029\u202f\u205f\u3000"
 )
-_WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
+WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
 # \z, not $: Java's $ also matches before a final line terminator. The
 # lookbehind makes only the start of each whitespace run a match candidate,
 # so a long internal run is scanned once instead of once per position.
-_RSTRIP = f"(?<!{_WS_CLASS}){_WS_CLASS}+\\z"
+_RSTRIP = f"(?<!{WS_CLASS}){WS_CLASS}+\\z"
 
 
 _WS_LITERALS = ", ".join(map(qlit, PY_WHITESPACE))

@@ -31,8 +31,6 @@ from pyspark.sql import DataFrame
 
 from autoscan_spark.operators.extract import _drop_zip_finders
 
-POLISH_VERSION = "polish-v1"
-
 _HYPHEN_JOIN = re.compile(r"(\w)-\n\n([a-z])")
 _TABLE_STITCH = re.compile(r"(\|)\n\n(\|)")
 _COLLAPSE = re.compile(r"\n{3,}")

@@ -219,21 +219,15 @@ def embedding_near_dups(
         pair_ids = _blocked_exact_candidates(
             corpus, threshold, id_col, vec_col
         )
-        a = _side(corpus, id_col, vec_col, "id_a", "q")
-        b = _side(corpus, id_col, vec_col, "id_b", "c")
-        cands = pair_ids.join(a, "id_a").join(b, "id_b")
     else:
-        bucketed = _side(
-            add_lsh_buckets(
-                corpus, dim=None, n_planes=n_planes, n_tables=n_tables,
-                seed=seed, vec_col=vec_col,
-            ),
-            id_col, vec_col, "id", "",
-            F.posexplode("buckets").alias("table_id", "bucket"),
-        )
+        bucketed = add_lsh_buckets(
+            corpus, dim=None, n_planes=n_planes, n_tables=n_tables,
+            seed=seed, vec_col=vec_col,
+        ).select(F.col(id_col).alias("id"), _explode_buckets())
         a = bucketed.alias("a")
         b = bucketed.alias("b")
-        cands = (
+        # deduplicated on the ids alone; the vectors join back below
+        pair_ids = (
             a.join(
                 b,
                 on=[
@@ -242,16 +236,13 @@ def embedding_near_dups(
                     F.col("a.id") < F.col("b.id"),
                 ],
             )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.__v").alias("__qv"),
-                F.col("b.__v").alias("__cv"),
-                F.col("a.__n").alias("__qn"),
-                F.col("b.__n").alias("__cn"),
-            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
         )
+    cands = (
+        pair_ids.join(_side(corpus, id_col, vec_col, "id_a", "q"), "id_a")
+        .join(_side(corpus, id_col, vec_col, "id_b", "c"), "id_b")
+    )
     return (
         cands.withColumn("cosine", F.expr(_COSINE))
         .filter(F.col("cosine") >= threshold)
@@ -286,6 +277,14 @@ def md5_hyperplanes(n_tables: int, n_planes: int, dim: int) -> np.ndarray:
                 h = hashlib.md5(f"{t}:{p}:{d}".encode()).digest()[:4]
                 planes[t, p, d] = int.from_bytes(h, "big") / 2**32 - 0.5
     return planes
+
+
+def _explode_buckets() -> Column:
+    """``(table_id, bucket)`` rows of the ``buckets`` column. ``_outer``
+    because ``posexplode`` gets an inferred ``size(buckets) > 0`` filter
+    pushed below the projection, which evaluates the bucketing UDF twice per
+    row; an outer row's null bucket joins nothing."""
+    return F.posexplode_outer("buckets").alias("table_id", "bucket")
 
 
 def add_lsh_buckets(
@@ -345,22 +344,25 @@ def _lsh_candidates(
     """Every distinct (query, corpus) pair sharing a bucket in at least one
     hash table (``lsh`` goes to ``add_lsh_buckets``), self-pairs excluded:
     ``query_id``, ``neighbor_id`` and both norm-hoisted sides, ready for
-    ``_COSINE``. The query side is broadcast."""
-    table_bucket = F.posexplode("buckets").alias("table_id", "bucket")
-    cb = _side(
-        add_lsh_buckets(corpus, vec_col=vec_col, **lsh),
-        id_col, vec_col, "neighbor_id", "c", table_bucket,
-    )
-    qb = _side(
-        add_lsh_buckets(queries, vec_col=vec_col, **lsh),
-        id_col, vec_col, "query_id", "q", table_bucket,
-    )
-    return (
-        cb.join(F.broadcast(qb), on=["table_id", "bucket"])
+    ``_COSINE``. The pairs are deduplicated on the two ids alone, and the
+    sides (the query side broadcast) join back afterwards; under unique ids
+    that yields one row per pair."""
+
+    def buckets(df: DataFrame, id_as: str) -> DataFrame:
+        return add_lsh_buckets(df, vec_col=vec_col, **lsh).select(
+            F.col(id_col).alias(id_as), _explode_buckets()
+        )
+
+    pair_ids = (
+        buckets(corpus, "neighbor_id")
+        .join(F.broadcast(buckets(queries, "query_id")), on=["table_id", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
+        .select("query_id", "neighbor_id")
         .distinct()
     )
+    return pair_ids.join(
+        F.broadcast(_side(queries, id_col, vec_col, "query_id", "q")), "query_id"
+    ).join(_side(corpus, id_col, vec_col, "neighbor_id", "c"), "neighbor_id")
 
 
 def lsh_topk(

@@ -1,5 +1,7 @@
 """Tests for dedup, similarity and textstats operators."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -18,7 +20,9 @@ from autoscan_spark.operators.dedup import (
 from autoscan_spark.operators.similarity import (
     bruteforce_topk,
     cosine_pairs,
+    embedding_near_dups,
     ivf_topk,
+    lsh_recall,
     lsh_topk,
 )
 from autoscan_spark.operators.textstats import (
@@ -786,8 +790,6 @@ def test_connected_components_raises_on_exhaustion(spark, monkeypatch):
 
 
 def test_embedding_near_dups_lsh_vs_exact(spark, vectors):
-    from autoscan_spark.operators.similarity import embedding_near_dups
-
     exact = embedding_near_dups(vectors, threshold=0.35, exact=True)
     e = {(r["id_a"], r["id_b"]) for r in exact.collect()}
     assert e, "threshold too high for this corpus"
@@ -797,6 +799,24 @@ def test_embedding_near_dups_lsh_vs_exact(spark, vectors):
     a = {(r["id_a"], r["id_b"]) for r in approx.collect()}
     assert a <= e  # LSH candidates are exactly scored: no false positives
     assert len(a) / len(e) >= 0.5, f"recall {len(a)}/{len(e)}"
+
+
+def test_lsh_candidates_deduplicate_on_ids_only(spark, vectors):
+    """A pair can collide in several hash tables, so the LSH candidate joins
+    keep a ``distinct``; it is keyed on the two ids, and the vectors and
+    norms join back afterwards instead of being shipped and hashed as keys:
+    every aggregate in the executed plans is keyed on id columns alone."""
+    queries = vectors.filter(F.col("vec_id") < 10)
+    for df, ids in (
+        (lsh_topk(vectors, queries, dim=64, k=5), {"query_id", "neighbor_id"}),
+        (lsh_recall(vectors, queries), {"query_id", "neighbor_id"}),
+        (embedding_near_dups(vectors, threshold=0.35), {"id_a", "id_b"}),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        keys = re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)
+        assert keys, plan
+        for key in keys:
+            assert {re.sub(r"#\d+L?$", "", k) for k in key.split(", ")} <= ids, key
 
 
 def test_normalize_text_forms(spark):

@@ -35,6 +35,7 @@ from typing import List, Optional, Tuple
 
 from autoscan_spark.kernels.fences import strip_code_fences
 from autoscan_spark.kernels.html_main import extract_html
+from autoscan_spark.kernels.pagejoin import WS_CLASS
 from autoscan_spark.kernels.pdf_stream import PdfStreamError, extract_pdf_stream
 from autoscan_spark.kernels.tool_markup import extract_tool_markup
 
@@ -54,6 +55,18 @@ KIND_PLAIN = "plain"
 
 STATUS_OK = "ok"
 
+TOOL_ROLE = "tool"
+
+# RE2 pattern (for pyarrow.compute) of every text the envelope may change or
+# classify as other than plain: a PDF payload (``classify``), any ``<``
+# (``_HTML_TAG`` needs one), an opening fence (``strip_code_fences``), an
+# opening table row or heading (the only outputs ``apply_context`` changes)
+# and a trailing whitespace character (``rstrip``). A turn whose role is not
+# ``TOOL_ROLE`` and whose text does not match comes back from
+# ``extract_turn`` as its own text (``''`` for null), one plain span over it
+# (none when empty), status ``ok`` and kind ``plain``, whatever its context.
+NEEDS_KERNEL = f"^(?:%PDF-STREAM|```|[|#])|<|{WS_CLASS}\\z"
+
 
 def classify(text: str, role: str) -> str:
     """Classify a payload into a kernel kind. First match wins."""
@@ -61,7 +74,7 @@ def classify(text: str, role: str) -> str:
         return KIND_PDF
     if _HTML_TAG.search(text):
         return KIND_HTML
-    if role == "tool":
+    if role == TOOL_ROLE:
         return KIND_TOOL
     return KIND_PLAIN
 

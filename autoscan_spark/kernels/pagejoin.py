@@ -25,6 +25,16 @@ from typing import List
 
 PAGE_BREAK = "---PAGE BREAK---"
 
+# The code points for which Python's str.isspace() is true, i.e. exactly what
+# str.rstrip() strips; WS_CLASS is their regex character class, in the
+# \x{...} escapes that Java and RE2 both read.
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
+
 
 def clean_page(page: str) -> str:
     """Marker scrub + right-strip, applied to every page before the fold."""

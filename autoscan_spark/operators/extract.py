@@ -58,8 +58,13 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.kernels.dispatch import KIND_PLAIN, STATUS_OK, extract_turn
-from autoscan_spark.operators.fold import WS_CLASS
+from autoscan_spark.kernels.dispatch import (
+    KIND_PLAIN,
+    NEEDS_KERNEL,
+    STATUS_OK,
+    TOOL_ROLE,
+    extract_turn,
+)
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -87,14 +92,6 @@ EXTRACTED_SCHEMA = StructType(
 
 _ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
 
-# RE2 (pyarrow.compute) pattern of the texts ``extract_turn`` may change or
-# classify as other than plain: a PDF payload, an opening fence (the fence
-# strip), an opening table row or heading (the only outputs ``apply_context``
-# changes), any ``<`` (the HTML classifier needs one) and a trailing
-# whitespace character (``rstrip``). Any other non-tool turn comes back as
-# its own text with one plain span.
-_NEEDS_KERNEL = f"^(?:%PDF-STREAM|```|[|#])|<|{WS_CLASS}\\z"
-
 
 def _drop_zip_finders() -> None:
     """Delete every ``zipimporter`` from ``sys.path_importer_cache`` so the
@@ -104,18 +101,23 @@ def _drop_zip_finders() -> None:
             del sys.path_importer_cache[path]
 
 
+def _constant(n: int, value: str) -> pa.Array:
+    return pa.nulls(n, pa.string()).fill_null(value)
+
+
 def _extract_batches(
     batches: Iterator[pa.RecordBatch], serial: bool = False
 ) -> Iterator[pa.RecordBatch]:
     """Vectorized batch kernel. Hot path discipline (this function dominates
     the 100 TB run): each batch is triaged with Arrow compute, and only the
-    rows ``_NEEDS_KERNEL`` selects (markup, fences, tables, headings, trailing
-    whitespace, tool turns) cross into Python for ``extract_turn``. Every
-    other row is a plain pass-through whose output columns are built in
-    Arrow: its text (null as ``''``), one ``plain`` span over it (none when
-    empty), status ``ok``, kind ``plain``. Key columns pass through
-    untouched, the kernel rows' results are scattered back with one ``take``
-    per column, and span offsets come from a numpy ``cumsum``.
+    rows the envelope may change (``TOOL_ROLE`` or a ``NEEDS_KERNEL`` match:
+    markup, fences, tables, headings, trailing whitespace, tool turns) cross
+    into Python for ``extract_turn``. Every other row is a plain
+    pass-through whose output columns are built in Arrow: its text (null as
+    ``''``), one ``plain`` span over it (none when empty), status ``ok``,
+    kind ``plain``. Key columns pass through untouched, the kernel rows'
+    results replace the pass-through values at their positions
+    (``replace_with_mask``), and span offsets come from a numpy ``cumsum``.
 
     ``serial`` (high mode) expects rows sorted by ``(conv_id, turn_idx)``:
     each turn gets the previous turn's output as context when both belong to
@@ -134,7 +136,7 @@ def _extract_batches(
         text, role = batch.column("text"), batch.column("role")
         needs = pc.fill_null(
             pc.or_kleene(
-                pc.equal(role, "tool"), pc.match_substring_regex(text, _NEEDS_KERNEL)
+                pc.equal(role, TOOL_ROLE), pc.match_substring_regex(text, NEEDS_KERNEL)
             ),
             False,
         ).to_numpy(zero_copy_only=False)
@@ -190,17 +192,10 @@ def _extract_batches(
             else:
                 prev_out = text[n - 1].as_py() or ""
 
-        # Scatter: kernel row j takes element j of its kernel-value column,
-        # and a pass-through row the element after the last, the constant.
-        pick = np.full(n, m, np.int32)
-        pick[rows] = np.arange(m, dtype=np.int32)
-        statuses.append(STATUS_OK)
-        kinds.append(KIND_PLAIN)
-        text_pick = np.arange(m, m + n, dtype=np.int32)
-        text_pick[rows] = pick[rows]
-        out_text_arr = pa.concat_arrays(
-            [pa.array(outs, pa.string()), pc.fill_null(text, "")]
-        ).take(text_pick)
+        mask = pa.array(needs)
+        out_text_arr = pc.replace_with_mask(
+            pc.fill_null(text, ""), mask, pa.array(outs, pa.string())
+        )
 
         # a pass-through row holds one plain span over its text unless empty
         lengths = pc.fill_null(pc.utf8_length(text), 0).to_numpy()
@@ -209,24 +204,26 @@ def _extract_batches(
         counts[rows] = n_spans
         offsets = np.zeros(n + 1, np.int32)
         np.cumsum(counts, out=offsets[1:])
-        n_kernel_spans = len(starts)
-        span_pick = np.full(offsets[-1], n_kernel_spans, np.int32)
         span_start = np.zeros(offsets[-1], np.int32)
         span_end = np.empty(offsets[-1], np.int32)
         plain = ~needs & (lengths > 0)
         span_end[offsets[:-1][plain]] = lengths[plain]
         # kernel row j's spans fill offsets[rows[j]] onwards, in order
         at = np.repeat(offsets[rows] - (np.cumsum(n_spans) - n_spans), n_spans)
-        at += np.arange(n_kernel_spans, dtype=np.int32)
-        span_pick[at] = np.arange(n_kernel_spans, dtype=np.int32)
+        at += np.arange(len(starts), dtype=np.int32)
         span_start[at] = starts
         span_end[at] = ends
-        span_kinds.append(KIND_PLAIN)
+        kernel_span = np.zeros(offsets[-1], bool)
+        kernel_span[at] = True
         struct = pa.StructArray.from_arrays(
             [
                 pa.array(span_start),
                 pa.array(span_end),
-                pa.array(span_kinds, pa.string()).take(span_pick),
+                pc.replace_with_mask(
+                    _constant(len(span_start), KIND_PLAIN),
+                    pa.array(kernel_span),
+                    pa.array(span_kinds, pa.string()),
+                ),
             ],
             fields=span_fields,
         )
@@ -236,11 +233,15 @@ def _extract_batches(
                 pc.cast(batch.column("turn_idx"), pa.int32()),
                 out_text_arr,
                 pa.ListArray.from_arrays(pa.array(offsets), struct),
-                pa.array(statuses, pa.string()).take(pick),
-                pa.array(kinds, pa.string()).take(pick),
+                pc.replace_with_mask(
+                    _constant(n, STATUS_OK), mask, pa.array(statuses, pa.string())
+                ),
+                pc.replace_with_mask(
+                    _constant(n, KIND_PLAIN), mask, pa.array(kinds, pa.string())
+                ),
                 pa.array(lengths.astype(np.int64)),
                 pc.cast(pc.utf8_length(out_text_arr), pa.int64()),
-                pa.nulls(n, pa.string()).fill_null(EXTRACTOR_VERSION),
+                _constant(n, EXTRACTOR_VERSION),
             ],
             schema=_ARROW_SCHEMA,
         )

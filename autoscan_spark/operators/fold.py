@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from autoscan_spark.kernels.pagejoin import PAGE_BREAK
+from autoscan_spark.kernels.pagejoin import PAGE_BREAK, PY_WHITESPACE, WS_CLASS
 from autoscan_spark.operators.sqlutil import qident, qlit
 
 DOC_SCHEMA = StructType(
@@ -60,15 +60,7 @@ DOC_SCHEMA = StructType(
     ]
 )
 
-# The code points for which Python's str.isspace() is true, i.e. exactly what
-# str.rstrip() strips (Java's \s is ASCII-only); WS_CLASS is their regex
-# character class, in the \x{...} escapes that Java and RE2 both read.
-PY_WHITESPACE = (
-    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
-    + "".join(map(chr, range(0x2000, 0x200B)))
-    + "\u2028\u2029\u202f\u205f\u3000"
-)
-WS_CLASS = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in PY_WHITESPACE) + "]"
+# WS_CLASS matches what str.rstrip() strips (Java's \s is ASCII-only).
 # \z, not $: Java's $ also matches before a final line terminator. The
 # lookbehind makes only the start of each whitespace run a match candidate,
 # so a long internal run is scanned once instead of once per position.

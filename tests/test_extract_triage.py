@@ -5,11 +5,18 @@ classify as other than plain) reach it, and every output equals a per-row
 import random
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 import autoscan_spark.operators.extract as extract_mod
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.kernels.dispatch import STATUS_OK, extract_turn
+from autoscan_spark.kernels.dispatch import (
+    KIND_PLAIN,
+    NEEDS_KERNEL,
+    STATUS_OK,
+    TOOL_ROLE,
+    extract_turn,
+)
 from autoscan_spark.operators.extract import _ARROW_SCHEMA, _extract_batches
 from autoscan_spark.operators.fold import PY_WHITESPACE
 from autoscan_spark.sources.transcripts import gen_conversation
@@ -179,7 +186,7 @@ PASS_THROUGH = [
     ("toolbox", "a role that is not tool"),
 ]
 
-NEEDS_KERNEL = {
+KERNEL_CLASSES = {
     "lt": ("user", "a < b"),
     "pdf": ("user", BAD_PDF),
     "fence": ("user", "```\nfenced\n```"),
@@ -215,7 +222,7 @@ def test_pass_through_rows_never_call_the_kernel(kernel_calls, serial):
 
 
 @pytest.mark.parametrize("serial", [False, True])
-@pytest.mark.parametrize("turn", list(NEEDS_KERNEL.values()), ids=list(NEEDS_KERNEL))
+@pytest.mark.parametrize("turn", list(KERNEL_CLASSES.values()), ids=list(KERNEL_CLASSES))
 def test_each_excluded_class_calls_the_kernel_once(kernel_calls, serial, turn):
     rows = _conv_rows(PASS_THROUGH + [turn] + PASS_THROUGH)
     if serial and turn[1] == BAD_PDF:
@@ -224,3 +231,21 @@ def test_each_excluded_class_calls_the_kernel_once(kernel_calls, serial, turn):
     else:
         _kernel(rows, 2048, serial=serial)
     assert kernel_calls == [turn[1]]
+
+
+def test_unmatched_texts_come_back_unchanged_under_any_context():
+    """``NEEDS_KERNEL``'s contract with the envelope, checked on its own: a
+    non-tool text RE2 does not match is returned as itself, with one plain
+    span, whatever the previous output; a context that ends in ``|`` or
+    repeats the text's first line is the one that could change it."""
+    rng = random.Random(5)
+    texts = [_random_text(rng) for _ in range(3000)] + [t for _, t in _edge_texts()]
+    matched = pc.match_substring_regex(pa.array(texts, pa.string()), NEEDS_KERNEL)
+    unmatched = [t for t, m in zip(texts, matched.to_pylist()) if not m]
+    assert len(unmatched) > 500
+    for text in unmatched:
+        body = text or ""
+        spans = [(0, len(body), KIND_PLAIN)] if body else []
+        for role in ("user", "assistant", None, TOOL_ROLE + "s"):
+            for context in (None, "", "x |", body, body.split("\n")[0] + "\nmore"):
+                assert extract_turn(text, role, context) == (body, spans, STATUS_OK, KIND_PLAIN)

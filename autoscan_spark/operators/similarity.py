@@ -344,25 +344,29 @@ def _lsh_candidates(
     """Every distinct (query, corpus) pair sharing a bucket in at least one
     hash table (``lsh`` goes to ``add_lsh_buckets``), self-pairs excluded:
     ``query_id``, ``neighbor_id`` and both norm-hoisted sides, ready for
-    ``_COSINE``. The pairs are deduplicated on the two ids alone, and the
-    sides (the query side broadcast) join back afterwards; under unique ids
-    that yields one row per pair."""
+    ``_COSINE``. The query side is broadcast. A pair meets once per table it
+    collides in; it keeps only the row of the first such table, found from
+    the two signature arrays, so under unique ids it yields one row with no
+    aggregate and no exchange."""
 
-    def buckets(df: DataFrame, id_as: str) -> DataFrame:
-        return add_lsh_buckets(df, vec_col=vec_col, **lsh).select(
-            F.col(id_col).alias(id_as), _explode_buckets()
+    def buckets(df: DataFrame, id_as: str, tag: str) -> DataFrame:
+        return _side(
+            add_lsh_buckets(df, vec_col=vec_col, **lsh),
+            id_col, vec_col, id_as, tag,
+            F.col("buckets").alias(f"__{tag}b"), _explode_buckets(),
         )
 
-    pair_ids = (
-        buckets(corpus, "neighbor_id")
-        .join(F.broadcast(buckets(queries, "query_id")), on=["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    return (
+        buckets(corpus, "neighbor_id", "c")
+        .join(F.broadcast(buckets(queries, "query_id", "q")), on=["table_id", "bucket"])
+        .filter(
+            (F.col("query_id") != F.col("neighbor_id"))
+            & F.expr(
+                "table_id = array_position(zip_with(__qb, __cb, (x, y) -> x = y), true) - 1"
+            )
+        )
+        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
     )
-    return pair_ids.join(
-        F.broadcast(_side(queries, id_col, vec_col, "query_id", "q")), "query_id"
-    ).join(_side(corpus, id_col, vec_col, "neighbor_id", "c"), "neighbor_id")
 
 
 def lsh_topk(

@@ -801,20 +801,22 @@ def test_embedding_near_dups_lsh_vs_exact(spark, vectors):
     assert len(a) / len(e) >= 0.5, f"recall {len(a)}/{len(e)}"
 
 
-def test_lsh_candidates_deduplicate_on_ids_only(spark, vectors):
+def test_lsh_candidates_never_key_an_aggregate_on_vectors(spark, vectors):
     """A pair can collide in several hash tables, so the LSH candidate joins
-    keep a ``distinct``; it is keyed on the two ids, and the vectors and
-    norms join back afterwards instead of being shipped and hashed as keys:
-    every aggregate in the executed plans is keyed on id columns alone."""
+    must deduplicate without shipping and hashing the vectors as keys:
+    ``_lsh_candidates`` keeps each pair's first colliding table and needs no
+    aggregate, and the bucket self-join of ``embedding_near_dups`` keeps a
+    ``distinct`` on the two ids, the vectors joining back afterwards. Every
+    aggregate in the executed plans is keyed on id columns alone."""
     queries = vectors.filter(F.col("vec_id") < 10)
-    for df, ids in (
-        (lsh_topk(vectors, queries, dim=64, k=5), {"query_id", "neighbor_id"}),
-        (lsh_recall(vectors, queries), {"query_id", "neighbor_id"}),
-        (embedding_near_dups(vectors, threshold=0.35), {"id_a", "id_b"}),
+    for df, ids, has_aggregate in (
+        (lsh_topk(vectors, queries, dim=64, k=5), {"query_id", "neighbor_id"}, False),
+        (lsh_recall(vectors, queries), {"query_id", "neighbor_id"}, True),
+        (embedding_near_dups(vectors, threshold=0.35), {"id_a", "id_b"}, True),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         keys = re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)
-        assert keys, plan
+        assert bool(keys) == has_aggregate, plan
         for key in keys:
             assert {re.sub(r"#\d+L?$", "", k) for k in key.split(", ")} <= ids, key
 

@@ -9,9 +9,10 @@ same Arrow batch kernel, ``_extract_batches``, through ``mapInArrow``:
   extraction stage adds ZERO shuffles; Catalyst pushes the turn-range filter
   into the parquet/Iceberg scan, and each Arrow batch is processed by a
   vectorized Python kernel. Arrow compute triages the batch first: only the
-  turns the envelope can change (markup, fences, table or heading openings,
-  trailing whitespace, tool turns) run the per-row Python kernel, and the
-  plain turns, most of a mixed corpus, pass through as Arrow arrays.
+  turns the envelope can change (``kernels.dispatch.NEEDS_KERNEL``: markup,
+  fences, table or heading openings, trailing whitespace, tool turns) run
+  the per-row Python kernel, and the other turns, about three quarters of a
+  mixed corpus, pass through as Arrow arrays.
 
 - ``mode='high'`` — per-conversation serial scan with lag-1 *output* context
   (reference: sequential loop, autoscan/autoscan.py:257-271; context

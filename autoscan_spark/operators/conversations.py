@@ -36,6 +36,7 @@ from autoscan_spark.operators.sqlutil import (
     qcol,
     qident,
     reject_reserved,
+    shingle_expr,
     split_words,
     with_words,
 )
@@ -165,8 +166,6 @@ def response_echo(
         text_col=text_col,
         assistant_role=assistant_role,
     )
-    from autoscan_spark.operators.dedup import shingle_expr
-
     # sft_pairs emits a fixed schema, so only a pathological conv/turn
     # column NAME (e.g. conv_col="__rg") can collide with the hoists
     reject_reserved(pairs, ("__rw", "__cw", "__rg", "__cg"), "response_echo")
@@ -520,8 +519,6 @@ def turn_redundancy(
     bigint, ``redund_ppm`` bigint).
     """
     from pyspark.sql.window import Window
-
-    from autoscan_spark.operators.dedup import shingle_expr
 
     reject_reserved(
         df, ("__prev", "__tw", "__pw", "__tg", "__pg"), "turn_redundancy"

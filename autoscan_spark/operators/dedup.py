@@ -23,10 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from autoscan_spark.operators.sqlutil import (
+    bucket_self_join,
     qcol,
     qident,
     reject_reserved,
+    shingle_expr,
     split_words,
+    spread,
     with_words,
 )
 from pyspark.sql.functions import pandas_udf
@@ -72,33 +75,13 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def shingle_expr(words_col: str, n: int) -> str:
-    """SQL expression: distinct word n-grams over an ALREADY-HOISTED word
-    array column; fewer than ``n`` words → one shingle of the whole
-    joined text. The single definition every shingle consumer shares
-    (minhash/jaccard via ``word_shingles``, SFT echo via
-    ``conversations.response_echo``) so their shingle semantics cannot
-    silently diverge, over words from the single splitter
-    (``sqlutil.split_words``). Takes a COLUMN projected by
-    ``sqlutil.with_words``, never an inline split: lambda bodies are
-    re-evaluated per element with no common-subexpression reuse, so an
-    inlined ``slice(split(text), i, n)`` re-runs the regex split once per
-    shingle — O(words²) per document (measured as the dominant cost of
-    the LSH signature stage)."""
-    return (
-        f"array_distinct(CASE WHEN size({words_col}) >= {n} THEN "
-        f"transform(sequence(0, size({words_col}) - {n}), "
-        f"i -> concat_ws(' ', slice({words_col}, i + 1, {n}))) "
-        f"ELSE array(concat_ws(' ', {words_col})) END)"
-    )
-
-
 def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Add a ``shingles`` column: distinct word n-grams (JVM expressions).
 
     The word split is hoisted into its own projection and the shingle
-    lambda references the COLUMN (see ``shingle_expr``); CollapseProject
-    keeps the hoist (non-cheap producer, multiple references)."""
+    lambda references the COLUMN (see ``sqlutil.shingle_expr``);
+    CollapseProject keeps the hoist (non-cheap producer, multiple
+    references)."""
     reject_reserved(df, ("__ws_hoist", "shingles"), "word_shingles")
     return (
         with_words(df, text_col, "__ws_hoist")
@@ -184,17 +167,10 @@ def lsh_candidate_pairs(
     distinct pairs. The join keys are high-cardinality, so the shuffle is
     well-spread; a pathological band (all-identical docs) is an AQE skew case.
 
-    r07: singleton buckets are dropped BEFORE the self-join (the same
-    window-count prune ``simhash_near_pairs`` ships) — on a mostly-unique
-    corpus the vast majority of (band, hash) buckets have one member and
-    can never produce a pair, so pruning them keeps corpus-sized bucket
-    rows out of BOTH join shuffles; recall is unchanged by definition.
-    The pruned frame sits behind a lazy ``localCheckpoint`` so the window
-    count (and the banding explode under it) runs once, not once per join
-    side.
+    The self-join is ``sqlutil.bucket_self_join``: singleton buckets are
+    pruned before it, behind a lazy ``localCheckpoint``, so the banding
+    explode runs once.
     """
-    from pyspark.sql.window import Window
-
     assert bands * rows_per_band <= 256
     buckets = sig_df.select(
         qcol(id_col),
@@ -209,24 +185,8 @@ def lsh_candidate_pairs(
             )
         ).alias("band_id", "band_hash"),
     )
-    bucket_w = Window.partitionBy("band_id", "band_hash")
-    pruned = (
-        buckets.withColumn("__bucket_size", F.count("*").over(bucket_w))
-        .filter(F.col("__bucket_size") > 1)
-        .drop("__bucket_size")
-        .localCheckpoint(eager=False)
-    )
-    a = pruned.alias("a")
-    b = pruned.alias("b")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{qident(id_col)}") < F.col(f"b.{qident(id_col)}"),
-            ],
-        )
+        bucket_self_join(buckets, id_col, "band_id", "band_hash")
         .select(
             F.col(f"a.{qident(id_col)}").alias("id_a"), F.col(f"b.{qident(id_col)}").alias("id_b")
         )
@@ -276,8 +236,8 @@ def minhash_dedup(
     """Full MinHash-LSH near-dup pipeline → verified duplicate pairs.
 
     Plan shape (the part that matters at scale):
-    - The input is repartitioned to ``defaultParallelism`` before the
-      signature projection. A small/compacted scan (one input split) would
+    - The input goes through ``sqlutil.spread`` before the signature
+      projection. A small/compacted scan (one input split) would
       otherwise compute all ``num_hashes`` lambda expressions on one core.
     - The narrow ``(id, signature)`` frame is materialized with a
       ``localCheckpoint`` barrier before banding. Catalyst collapses adjacent
@@ -310,8 +270,7 @@ def minhash_dedup(
       concurrent scans and computed the join twice — measured 42s vs 16s
       cold at sf0.1.)
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(qcol(id_col), qcol(text_col)).repartition(parallelism)
+    narrow = spread(df.select(qcol(id_col), qcol(text_col)))
     shingled = word_shingles(narrow, text_col, n)
     sigs = (
         minhash_signatures(shingled, id_col, num_hashes)
@@ -507,19 +466,6 @@ def dedup_connected(
     return df.join(losers, on=id_col, how="left_anti")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a compacted scan up to defaultParallelism before an
-    expensive projection (the window-hash/shingle lambdas are
-    JVM-interpreted — a one-split input would evaluate them on one core).
-    No-op when the input already has enough splits, so at 100 TB —
-    thousands of splits — nothing is reshuffled; only small/compacted
-    inputs are spread, and only the projected columns move."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
-
-
 def window_hash_expr(words: str, n: int) -> str:
     """SQL expression: array of ``unhex(md5(...))`` hashes of the n-word
     windows of the hoisted word-array column ``words`` (empty array below
@@ -562,7 +508,7 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    base = _spread(df.select(qcol(id_col), qcol(text_col)))
+    base = spread(df.select(qcol(id_col), qcol(text_col)))
     reject_reserved(base, ("__whw",), "duplicate_spans")
     exploded = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
@@ -589,7 +535,7 @@ def duplicate_spans(
 
 
 def _lines_frame(
-    df: DataFrame, text_col: str, id_col: str, line_sep: str, spread: bool
+    df: DataFrame, text_col: str, id_col: str, line_sep: str, spread_input: bool
 ):
     """Shared scaffolding for the line-level operators: returns
     ``(lines, split_col)`` where lines = (id, __pos, __line) exploded on
@@ -601,8 +547,8 @@ def _lines_frame(
     pattern = re.escape(line_sep)
     split_col = F.split(qcol(text_col), pattern, -1)
     src = df.select(qcol(id_col), qcol(text_col))
-    if spread:
-        src = _spread(src)
+    if spread_input:
+        src = spread(src)
     lines = src.select(
         qcol(id_col), F.posexplode(split_col).alias("__pos", "__line")
     )
@@ -684,7 +630,7 @@ def strip_boilerplate_lines(
     """
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    lines, split_col = _lines_frame(df, text_col, id_col, line_sep, spread=True)
+    lines, split_col = _lines_frame(df, text_col, id_col, line_sep, spread_input=True)
     nonblank = lines.filter(F.expr("trim(__line) != ''"))
     flagged = (
         nonblank.groupBy(F.expr("unhex(md5(__line))").alias("__h"))
@@ -762,7 +708,7 @@ def line_dedup(
     earlier elsewhere keep 0 lines and an empty ``dedup_text``; NULL-text
     docs yield (0, 0, NULL).
     """
-    lines, split_col = _lines_frame(df, text_col, id_col, line_sep, spread=False)
+    lines, split_col = _lines_frame(df, text_col, id_col, line_sep, spread_input=False)
     nonblank_first = (
         lines.filter(F.expr("trim(__line) != ''"))
         .groupBy(F.expr("unhex(md5(__line))").alias("__h"))
@@ -828,7 +774,7 @@ def remove_duplicate_spans(
     from pyspark.sql.window import Window
 
     words_expr = split_words(qident(text_col), lower=False)
-    base = _spread(df.select(qcol(id_col), qcol(text_col)))
+    base = spread(df.select(qcol(id_col), qcol(text_col)))
     reject_reserved(base, ("__whw",), "remove_duplicate_spans")
     wins = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
@@ -927,7 +873,7 @@ def benchmark_contamination(
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    base = _spread(df.select(qcol(id_col), qcol(text_col)))
+    base = spread(df.select(qcol(id_col), qcol(text_col)))
     reject_reserved(base, ("__whw",), "benchmark_contamination")
     doc_windows = with_words(base, text_col, "__whw", lower=False).select(
         qcol(id_col),
@@ -1072,23 +1018,13 @@ def simhash_near_pairs(
     practical ceiling; tighter radii at 100 TB should re-band the survivors
     (multi-probe) rather than shrink chunks further.
 
-    Plan shape: singleton buckets are skipped BEFORE the self-join — a
-    window count over (chunk_id, chunk_val) keeps only rows whose bucket has
-    ≥ 2 members, so unpaired rows (the vast majority on a diverse corpus)
-    never enter the join shuffle. Recall is unchanged: a shared bucket has
-    ≥ 2 members by definition, so no candidate pair is ever pruned. The
-    pruned frame is materialized behind a ``localCheckpoint`` barrier so the
-    window count — and the simhash pandas-UDF beneath it — run once, not
-    once per join side (Catalyst re-executes unshared subtrees on both
-    sides of a self-join). Barrier size is bounded by (docs in
-    non-singleton buckets) × n_chunks × ~24 B — small on diverse corpora;
-    for a pathological corpus where most docs share buckets, write the
-    pruned chunks to a table and self-join from that instead (same
-    fallback as minhash signatures past block-manager capacity).
+    Plan shape: the candidates come from ``sqlutil.bucket_self_join`` over
+    (chunk_id, chunk_val), which skips singleton buckets before the join
+    (recall unchanged: a shared bucket has ≥ 2 members by definition) and
+    runs the simhash pandas-UDF beneath it once, behind its checkpoint
+    barrier. Barrier size is bounded by (docs in non-singleton buckets) ×
+    n_chunks × ~24 B — small on diverse corpora.
     """
-    from pyspark.sql.window import Window
-
-
     if 64 % n_chunks != 0:
         raise ValueError(f"n_chunks must divide 64, got {n_chunks}")
     if max_hamming > n_chunks - 1 and not allow_approximate:
@@ -1111,28 +1047,12 @@ def simhash_near_pairs(
             )
         ).alias("chunk_id", "chunk_val"),
     )
-    bucket_w = Window.partitionBy("chunk_id", "chunk_val")
-    pruned = (
-        chunks.withColumn("__bucket_size", F.count("*").over(bucket_w))
-        .filter(F.col("__bucket_size") > 1)
-        .drop("__bucket_size")
-        .localCheckpoint(eager=False)
-    )
-    a = pruned.alias("a")
-    b = pruned.alias("b")
     # verify (bit_count on two longs, codegen-cheap) BEFORE the distinct:
     # a candidate pair appears once per shared chunk (up to n_chunks times),
     # so deduping the narrow post-filter (id_a, id_b, hamming) rows shuffles
     # strictly less than deduping the wider pre-filter candidate set
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.chunk_id") == F.col("b.chunk_id"),
-                F.col("a.chunk_val") == F.col("b.chunk_val"),
-                F.col(f"a.{qident(id_col)}") < F.col(f"b.{qident(id_col)}"),
-            ],
-        )
+        bucket_self_join(chunks, id_col, "chunk_id", "chunk_val")
         .select(
             F.col(f"a.{qident(id_col)}").alias("id_a"),
             F.col(f"b.{qident(id_col)}").alias("id_b"),
@@ -1241,12 +1161,12 @@ def fuzzy_dup_pairs(
     if k <= 0:
         raise ValueError("max_distance must be positive")
     reject_reserved(df, ("__flen", "__fband"), "fuzzy_dup_pairs")
-    # _spread: on a compacted local scan the build side broadcasts and the
+    # spread: on a compacted local scan the build side broadcasts and the
     # probe side inherits the input's splits — ALL Levenshtein evaluation
     # then runs on 1-2 cores (measured 90s -> ~7s at sf0.1). No-op at real
     # scale where the scan already has thousands of splits.
     d = (
-        _spread(df.select(qcol(id_col), qcol(text_col), qcol(block_col)))
+        spread(df.select(qcol(id_col), qcol(text_col), qcol(block_col)))
         .withColumn("__flen", F.length(qcol(text_col)))
         .withColumn("__fband", F.expr(f"__flen DIV {k}"))
     )
@@ -1411,13 +1331,13 @@ def winnow_pairs(
     # whole nested fingerprint expression — the dominant per-row cost would
     # run TWICE (verified via explain). The null guard sits ABOVE the
     # Generate (a generated attribute can't push down) and is a column ref.
-    # _spread first: the fingerprint projection (one md5 per word k-gram
+    # spread first: the fingerprint projection (one md5 per word k-gram
     # plus a window-min per position, all interpreted lambdas) is the
     # operator's dominant cost and a one-split scan would run it on one
     # core (no-op at real scale)
     fps = (
         winnow_fingerprints(
-            _spread(df.select(qcol(id_col), qcol(text_col))),
+            spread(df.select(qcol(id_col), qcol(text_col))),
             k=k, window=window, text_col=text_col, id_col=id_col,
         )
         .select(

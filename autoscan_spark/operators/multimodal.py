@@ -11,8 +11,8 @@ Decode status (honest inventory):
   video containers in ``parse_avi`` (header meta + per-frame chunk
   extraction). MJPG-codec AVI therefore decodes END TO END without PIL:
   container parse + per-frame baseline-JPEG decode, both native. The
-  synthetic corpus stores decodable PPM frames, so frame sampling and
-  video features run on real pixels end to end. These are the formats a
+  synthetic corpus stores decodable PPM frames, so video features run
+  on real pixels end to end. These are the formats a
   100 TB pre-processing pipeline actually materializes between stages
   (decode once at ingest, keep raw planes/PCM thereafter).
 - **GATED**: progressive/arithmetic/12-bit JPEG, WebP (PIL), MP4/MKV
@@ -20,16 +20,15 @@ Decode status (honest inventory):
   EVERY legal depth/color/interlace combination since r6
   (``kernels.png``); ``decode_image`` raises ``NotImplementedError`` for
   the gated formats unless PIL imports, and non-AVI video payloads fall
-  back to a clearly-marked deterministic fake frame payload.
+  back to clearly-marked deterministic features of the raw bytes.
 
 The Spark-side machinery — schema, Arrow batch shape, mapInPandas UDF
-signatures, 1→N fan-out, partitioning — is real and tested end-to-end over
+signatures, partitioning — is real and tested end-to-end over
 real decoded pixels/samples for image/audio rows.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Iterator
 
@@ -582,90 +581,3 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("out_w", IntegerType()),
-        StructField("out_h", IntegerType()),
-        StructField("payload_out", BinaryType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """Nearest-neighbor resize over the REAL decoded pixels; re-encodes the
-    result as PPM so the output column is itself decodable."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for payload in pdf["payload"]:
-                arr = decode_image(bytes(payload))
-                if arr.ndim == 2:
-                    arr = np.stack([arr] * 3, axis=-1)
-                h, w = arr.shape[:2]
-                ys = (np.arange(out_h) * h // out_h)[:, None]
-                xs = (np.arange(out_w) * w // out_w)[None, :]
-                outs.append(encode_ppm(arr[ys, xs]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": out_w,
-                    "out_h": out_h,
-                    "payload_out": outs,
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling for video rows: 1 frame per ``every_ms`` of video time
-    — a 1→N fan-out mapInPandas, the same shape as real ffmpeg frame
-    extraction. AVI payloads are REALLY parsed: emitted frames are the
-    container's own frame chunks at the sampled indices (decodable PPM in
-    the synthetic corpus; JPEG bytes for MJPG). Non-AVI payloads keep the
-    deterministic-fake fallback, clearly marked."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for media_id, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                payload = bytes(payload)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    avi_meta, all_frames = parse_avi(payload)
-                    fps = avi_meta.get("fps") or 1
-                    step = max(1, int(round(every_ms * fps / 1000)))
-                    for out_i, frame_i in enumerate(range(0, len(all_frames), step)):
-                        ids.append(media_id)
-                        idxs.append(out_i)
-                        frames.append(all_frames[frame_i])
-                    continue
-                duration = (meta or {}).get("duration_ms") or 0
-                n_frames = max(1, duration // every_ms)
-                for i in range(int(n_frames)):  # FAKE fallback (non-AVI)
-                    ids.append(media_id)
-                    idxs.append(i)
-                    frames.append(
-                        hashlib.blake2b(
-                            payload[:64] + i.to_bytes(4, "big"), digest_size=16
-                        ).digest()
-                    )
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return media.filter(F.col("kind") == "video").mapInPandas(run, schema=FRAME_SCHEMA)

@@ -16,18 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from autoscan_spark.operators.sqlutil import qcol, qident, qlit
+from autoscan_spark.operators.sqlutil import md5_bucket, qcol, qident, qlit
 
 _BUCKETS = 1_000_000
 
 
 def _hash_bucket(key_col: str, salt: str) -> str:
-    """Uniform bucket in [0, 1e6) from md5(salt || key) — cross-engine SQL."""
-    return (
-        f"pmod(CAST(conv(substring(md5(concat({qlit(salt)}, "
-        f"CAST({qident(key_col)} AS STRING))), "
-        f"1, 8), 16, 10) AS BIGINT), {_BUCKETS})"
-    )
+    """Uniform bucket in [0, 1e6) from md5(salt || key) — cross-engine SQL
+    (``sqlutil.md5_bucket``)."""
+    return md5_bucket(f"concat({qlit(salt)}, CAST({qident(key_col)} AS STRING))", _BUCKETS)
 
 
 def hash_split(

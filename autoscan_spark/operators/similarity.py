@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from autoscan_spark.operators.sqlutil import bucket_self_join, spread
+
 
 def norm_expr(a: str) -> str:
     """SQL expression: L2 norm of an array<float/double> column."""
@@ -203,7 +205,8 @@ def embedding_near_dups(
     """Near-duplicate pairs by embedding cosine ≥ threshold.
 
     ``exact=False`` (the scale path) generates candidates via hyperplane-LSH
-    bucket self-join, then scores exactly — O(candidates), standard recall
+    bucket self-join (``sqlutil.bucket_self_join``, singleton buckets
+    pruned), then scores exactly — O(candidates), standard recall
     trade. ``exact=True`` scores all pairs (O(n²)); only for small corpora /
     oracle checks. Output: (id_a, id_b, cosine) with id_a < id_b.
 
@@ -224,18 +227,9 @@ def embedding_near_dups(
             corpus, dim=None, n_planes=n_planes, n_tables=n_tables,
             seed=seed, vec_col=vec_col,
         ).select(F.col(id_col).alias("id"), _explode_buckets())
-        a = bucketed.alias("a")
-        b = bucketed.alias("b")
         # deduplicated on the ids alone; the vectors join back below
         pair_ids = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.table_id") == F.col("b.table_id"),
-                    F.col("a.bucket") == F.col("b.bucket"),
-                    F.col("a.id") < F.col("b.id"),
-                ],
-            )
+            bucket_self_join(bucketed, "id", "table_id", "bucket")
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
         )
@@ -631,15 +625,13 @@ def _centroids_from_sample(
     # Arrow driver transfer (guide §6): .collect() deserializes nested
     # float arrays through the pickled-row path (~0.3 ms/row — measured
     # 0.6-0.8 s for a 2000-row sample); .toPandas() rides Arrow. The
-    # scan is additionally _spread first: the sort key renders every
+    # scan is additionally spread first: the sort key renders every
     # vector to a string for the content hash (~0.25 ms/row of float
     # formatting), which a one-split input would evaluate on one core.
     # The sampled MATRIX is partitioning-invariant: the key is a pure
     # content hash, so any hash tie is between identical vectors.
-    from autoscan_spark.operators.dedup import _spread
-
     pdf = (
-        _spread(corpus.select(vec_col))
+        spread(corpus.select(vec_col))
         .orderBy(F.xxhash64(F.col(vec_col).cast("array<float>").cast("string"), F.lit(seed)))
         .limit(sample_n)
         .toPandas()

@@ -30,37 +30,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from autoscan_spark.operators.sqlutil import (
+    md5_bucket,
     qcol,
     qident,
     reject_reserved,
+    shingle_expr,
     split_words,
+    spread,
     with_words,
 )
 
 
-def _coords(word: Column, width: int, depth: int) -> Column:
-    """The word's ``depth`` bucket coordinates as an array column.
-
-    Row ``d``'s bucket derives from the first 8 hex digits of
-    ``md5(d || ':' || word)`` — replayable by any engine with md5 (the
-    repo's standard cross-engine hash idiom, cf. sampling._hash_bucket),
-    which is what lets the driver oracle rebuild the identical sketch in
-    DuckDB.
-    """
-    # first 8 md5 hex digits -> BIGINT in [0, 2^32): always positive,
-    # so % and pmod agree and DuckDB can replay it verbatim
-    buckets = [
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{d}:"), word)), 1, 8),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(width),
-        )
-        for d in range(depth)
-    ]
-    return F.array(*buckets)
+def _coords(x: str, m: int, k: int) -> Column:
+    """The ``k`` seeded md5 positions in [0, m) of the string SQL
+    expression ``x`` as an array<bigint> column: position ``i`` is
+    ``sqlutil.md5_bucket`` of ``i || ':' || x`` — replayable by any
+    engine with md5, which is what lets the DuckDB oracles rebuild the
+    identical CMS sketch and Bloom bits."""
+    return F.array(*[F.expr(md5_bucket(f"concat('{i}:', {x})", m)) for i in range(k)])
 
 
 def cms_sketch(
@@ -81,17 +68,15 @@ def cms_sketch(
     if width < 2 or depth < 1:
         raise ValueError(f"need width >= 2, depth >= 1; got {width}/{depth}")
     reject_reserved(df, ("__cms_w",), "cms_sketch")
-    from autoscan_spark.operators.dedup import _spread
-
     # spread a compacted scan before the split/explode/md5 projection —
     # the md5 coordinate chain is the operator's cost and a one-split
-    # input would run it on one core (no-op at real scale; see _spread)
-    words = _spread(df.select(qcol(text_col))).select(
+    # input would run it on one core (no-op at real scale; see spread)
+    words = spread(df.select(qcol(text_col))).select(
         F.explode(F.expr(split_words(qident(text_col)))).alias("__word")
     )
     coords = words.select(
         F.posexplode(
-            _coords(F.col("__word"), width, depth)
+            _coords("__word", width, depth)
         ).alias("d", "bucket")
     )
     return (
@@ -125,7 +110,7 @@ def cms_estimate(
     coords = candidates.select(
         qcol(word_col),
         F.posexplode(
-            _coords(qcol(word_col), width, depth)
+            _coords(qident(word_col), width, depth)
         ).alias("__d", "__b"),
     )
     return (
@@ -162,10 +147,8 @@ def cms_heavy_hitters(
     Output: (``word``, ``est_count`` bigint), est_count >= min_count.
     """
     reject_reserved(df, ("__cms_w",), "cms_heavy_hitters")
-    from autoscan_spark.operators.dedup import _spread
-
     sketch = cms_sketch(df, text_col=text_col, width=width, depth=depth)
-    cands = _spread(df.select(qcol(text_col))).select(
+    cands = spread(df.select(qcol(text_col))).select(
         F.explode(F.expr(split_words(qident(text_col)))).alias("word")
     ).distinct()
     est = cms_estimate(sketch, cands, word_col="word", width=width, depth=depth)
@@ -205,15 +188,13 @@ def hll_registers(
     Output: (``j`` int, ``rho`` int).
     """
     reject_reserved(df, ("__hll_h", "__hll_v"), "hll_registers")
-    from autoscan_spark.operators.dedup import _spread
-
-    spread = _spread(df.select(qcol(text_col)))
+    src = spread(df.select(qcol(text_col)))
     if n <= 1:
-        words = spread.select(
+        words = src.select(
             F.explode(F.expr(split_words(qident(text_col)))).alias("__word")
         )
     else:
-        words = _word_grams(spread, text_col, n, "__word").select("__word")
+        words = _word_grams(src, text_col, n, "__word").select("__word")
     hashed = words.select(F.md5(F.col("__word")).alias("__hll_h")).select(
         F.conv(F.substring("__hll_h", 1, 2), 16, 10)
         .cast("int")
@@ -301,33 +282,15 @@ BLOOM_BITS = 1 << 18
 BLOOM_K = 4
 
 
-def _gram_positions(gram: Column, bits: int, k: int) -> Column:
-    """The gram's ``k`` Bloom bit positions (md5-derived, 0..bits-1) —
-    the same seeded-md5-slice idiom as the CMS md5 path, replayable as
-    ``('0x' || substr(md5(seed || ':' || gram), 1, 8))::BIGINT % bits``
-    by any engine with md5."""
-    return F.array(
-        *[
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}:"), gram)), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(bits),
-            ).cast("int")
-            for i in range(k)
-        ]
-    )
+def _gram_positions(gram: str, bits: int, k: int) -> Column:
+    """The gram's ``k`` Bloom bit positions (0..bits-1) as array<int>:
+    ``_coords``, the CMS coordinates, with the gram for the word."""
+    return _coords(gram, bits, k).cast("array<int>")
 
 
 def _word_grams(df: DataFrame, text_col: str, n: int, out: str) -> DataFrame:
     """Explode each row's space-joined ``n``-word shingles as ``out``
     (hoisted split, rows with < n words emit nothing)."""
-    from autoscan_spark.operators.dedup import shingle_expr
-
     reject_reserved(df, ("__bg_w", out), "_word_grams")
     return (
         with_words(df, text_col, "__bg_w")
@@ -357,7 +320,7 @@ def bloom_bits(
     grams = _word_grams(bench, text_col, n, "__bg")
     return (
         grams.select(
-            F.explode(_gram_positions(F.col("__bg"), bits, k)).alias("pos")
+            F.explode(_gram_positions("__bg", bits, k)).alias("pos")
         )
         .distinct()
     )
@@ -418,14 +381,12 @@ def bloom_contamination(
             bitset[mat].all(axis=1).astype("int32"), dtype="int32"
         )
 
-    from autoscan_spark.operators.dedup import _spread
-
     grams = _word_grams(
-        _spread(df.select(qcol(id_col), qcol(text_col))), text_col, n, "__bg"
+        spread(df.select(qcol(id_col), qcol(text_col))), text_col, n, "__bg"
     )
     flagged = grams.select(
         qcol(id_col),
-        probe(_gram_positions(F.col("__bg"), bits, k)).alias("__flagged"),
+        probe(_gram_positions("__bg", bits, k)).alias("__flagged"),
     )
     return (
         flagged.groupBy(qcol(id_col))

@@ -10,7 +10,12 @@ name — the DataFrame API resolves those without the SQL parser.
 
 What a word is lives here too: ``split_words`` is the one tokenizing
 fragment (whitespace split of the trimmed, optionally lowercased text)
-and ``with_words`` the one hoist that projects it into a column.
+and ``with_words`` the one hoist that projects it into a column. So do
+the other blocks several operator modules build from, each defined once:
+``shingle_expr`` (word n-grams of a hoisted word column), ``md5_bucket``
+(the cross-engine md5 position hash), ``spread`` (parallelize a
+compacted scan) and ``bucket_self_join`` (the candidate-pair join of the
+banded near-dup operators).
 """
 
 from __future__ import annotations
@@ -84,3 +89,82 @@ def with_words(df, text_col: str, out: str, lower: bool = True):
     from pyspark.sql import functions as F
 
     return df.withColumn(out, F.expr(split_words(qident(text_col), lower)))
+
+
+def shingle_expr(words_col: str, n: int) -> str:
+    """SQL expression: distinct word n-grams over an ALREADY-HOISTED word
+    array column; fewer than ``n`` words → one shingle of the whole
+    joined text. The single definition every shingle consumer shares
+    (minhash/jaccard via ``dedup.word_shingles``, SFT echo via
+    ``conversations.response_echo``) so their shingle semantics cannot
+    silently diverge. Takes a COLUMN projected by ``with_words``, never
+    an inline split: lambda bodies are re-evaluated per element with no
+    common-subexpression reuse, so an inlined ``slice(split(text), i, n)``
+    re-runs the regex split once per shingle — O(words²) per document
+    (measured as the dominant cost of the LSH signature stage)."""
+    return (
+        f"array_distinct(CASE WHEN size({words_col}) >= {n} THEN "
+        f"transform(sequence(0, size({words_col}) - {n}), "
+        f"i -> concat_ws(' ', slice({words_col}, i + 1, {n}))) "
+        f"ELSE array(concat_ws(' ', {words_col})) END)"
+    )
+
+
+def md5_bucket(sql: str, m: int) -> str:
+    """SQL fragment: the md5 position hash of the string expression
+    ``sql`` — its first 8 md5 hex digits read as a BIGINT in [0, 2^32),
+    then ``pmod`` ``m``. The value is never negative, so ``%`` and
+    ``pmod`` agree and any engine with md5 replays it verbatim; DuckDB
+    as ``('0x' || substr(md5(x), 1, 8))::BIGINT % m``. Callers put their
+    salt into ``sql`` and cast the BIGINT result as they need."""
+    return f"pmod(CAST(conv(substring(md5({sql}), 1, 8), 16, 10) AS BIGINT), {m})"
+
+
+def spread(df):
+    """Repartition a compacted scan up to defaultParallelism before an
+    expensive projection (the window-hash/shingle lambdas are
+    JVM-interpreted — a one-split input would evaluate them on one core).
+    No-op when the input already has enough splits, so at 100 TB —
+    thousands of splits — nothing is reshuffled; only small/compacted
+    inputs are spread, and only the projected columns move."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < parallelism:
+        return df.repartition(parallelism)
+    return df
+
+
+def bucket_self_join(keyed, id_col: str, *keys: str):
+    """Candidate pairs of a banded near-dup operator: ``keyed`` holds one
+    row per (id, bucket), the bucket spelled by the columns ``keys``, and
+    this returns its self-join on ``keys`` with ``a.id < b.id``, the two
+    sides aliased ``a`` and ``b``. Callers select their pair columns
+    (and any check) from the aliases and take their own ``distinct``: a
+    pair meets once per bucket it shares.
+
+    Singleton buckets are dropped BEFORE the join by a window count over
+    ``keys``: on a mostly-unique corpus most buckets have one member and
+    can never produce a pair, so pruning them keeps corpus-sized bucket
+    rows out of BOTH join shuffles, and recall is unchanged by
+    definition. The pruned frame sits behind a lazy ``localCheckpoint``,
+    so the window count and whatever built ``keyed`` (a banding explode,
+    a hashing UDF) run once, not once per join side — Catalyst
+    re-executes unshared subtrees on both sides of a self-join. The
+    barrier holds the rows of non-singleton buckets only; for a
+    pathological corpus where most rows share buckets, write ``keyed``
+    to a table and self-join from that instead."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    pruned = (
+        keyed.withColumn("__bucket_size", F.count("*").over(Window.partitionBy(*keys)))
+        .filter(F.col("__bucket_size") > 1)
+        .drop("__bucket_size")
+        .localCheckpoint(eager=False)
+    )
+    a = pruned.alias("a")
+    b = pruned.alias("b")
+    return a.join(
+        b,
+        on=[F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{qident(id_col)}") < F.col(f"b.{qident(id_col)}")],
+    )

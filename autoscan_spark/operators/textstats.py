@@ -13,10 +13,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from autoscan_spark.operators.sqlutil import (
+    md5_bucket,
     qcol,
     qident,
     reject_reserved,
+    shingle_expr,
     split_words,
+    spread,
     with_words,
 )
 from pyspark.sql.functions import pandas_udf
@@ -900,9 +903,9 @@ def span_corruption(
     numbered sentinels. Real T5 samples span positions; a distributed
     data-prep pass wants the same examples on every run, engine and
     partitioning, so the span start inside each ``group``-word block is
-    chosen by the corpus-stable md5 hash the sampling module uses
-    (``conv(substring(md5(id#k),1,8),16,10)`` — identical in DuckDB, so
-    the operator is oracle-checkable). One masked span per full block
+    chosen by the corpus-stable md5 position hash the sampling module uses
+    (``sqlutil.md5_bucket`` of ``id#k`` — identical in DuckDB, so the
+    operator is oracle-checkable). One masked span per full block
     (mask rate = span/group = 15% at defaults); the trailing partial
     block stays unmasked (deterministic, documented deviation from T5's
     tail handling).
@@ -926,12 +929,10 @@ def span_corruption(
     # would otherwise be inlined (and re-evaluated, no lambda CSE) four
     # times per block across the two piece expressions — mirrors the
     # DuckDB oracle's `offs` CTE
-    offs_expr = (
-        f"transform(sequence(0, {nfull} - 1), k -> "
-        f"CAST(pmod(conv(substring(md5(concat("
-        f"CAST({qident(id_col)} AS STRING), '#', CAST(k AS STRING))), "
-        f"1, 8), 16, 10), {g - sp + 1}) AS INT))"
+    offset = md5_bucket(
+        f"concat(CAST({qident(id_col)} AS STRING), '#', CAST(k AS STRING))", g - sp + 1
     )
+    offs_expr = f"transform(sequence(0, {nfull} - 1), k -> CAST({offset} AS INT))"
     o = "__offs[k]"  # Spark array indexing is 0-based
     input_expr = (
         f"array_join(flatten(concat("
@@ -1366,10 +1367,8 @@ def ngram_commonness(
     reject_reserved(df, ("__nc_w", "__nc_g"), "ngram_commonness")
     from pyspark.sql.window import Window
 
-    from autoscan_spark.operators.dedup import _spread, shingle_expr
-
     grams = (
-        with_words(_spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__nc_w")
+        with_words(spread(df.select(qcol(id_col), qcol(text_col))), text_col, "__nc_w")
         .withColumn("__nc_g", F.expr(shingle_expr("__nc_w", n)))
         .select(
             qcol(id_col).alias("__id"),

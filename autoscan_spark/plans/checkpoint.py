@@ -66,7 +66,7 @@ from pyspark.sql.types import (
 )
 
 from autoscan_spark import EXTRACTOR_VERSION
-from autoscan_spark.plans.pipeline import bucket_wave, extract_pipeline, with_bucket  # noqa: F401
+from autoscan_spark.plans.pipeline import bucket_wave, extract_pipeline
 
 # bump when LINEAGE_SCHEMA changes shape: the lineage dir is append-only
 # parquet, so appending a new schema next to old files would leave a
@@ -160,7 +160,6 @@ class CheckpointedExtraction:
         }
         existing = self._read_meta(spark)
         if existing is not None:
-            existing.setdefault("polish", False)  # pre-polish checkpoints
             # pre-range checkpoints were written by runs without a range
             existing.setdefault("first_turn", None)
             existing.setdefault("last_turn", None)

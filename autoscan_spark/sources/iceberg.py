@@ -17,7 +17,7 @@ Production mapping (all public Iceberg/Spark config):
       conv_id string, turn_idx int, role string,
       text string, tool string, ts timestamp)
     USING iceberg
-    PARTITIONED BY (bucket(64, conv_id))      -- == checkpoint.with_bucket
+    PARTITIONED BY (bucket(64, conv_id))      -- == pipeline.with_bucket
 
     -- per-wave commit (replaces the dynamic-partition-overwrite parquet
     -- write; idempotent under re-processing exactly like it):

@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 from autoscan_spark.kernels.pagejoin import join_pages
 from autoscan_spark.operators.extract import drop_failed, extract_turns
 from autoscan_spark.operators.fold import fold_documents
-from autoscan_spark.plans.checkpoint import CheckpointedExtraction, with_bucket
+from autoscan_spark.plans.checkpoint import CheckpointedExtraction
+from autoscan_spark.plans.pipeline import with_bucket
 from autoscan_spark.sources.transcripts import synthesize_transcripts
 
 N_CONVS = 40
@@ -281,7 +282,8 @@ def test_fold_on_skewed_conversation(spark):
 def test_resume_refuses_old_lineage_schema(spark, tmp_path_factory):
     """A checkpoint written before the lineage-schema change (v1, no
     lineage_version in meta) must be refused, not silently appended to
-    with a second parquet schema."""
+    with a second parquet schema. A still older meta, written before
+    ``polish`` entered it, lacks both keys and is refused the same way."""
     base = str(tmp_path_factory.mktemp("ck_ver"))
     ck = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
     ck._check_meta(spark)  # writes current meta
@@ -290,6 +292,10 @@ def test_resume_refuses_old_lineage_schema(spark, tmp_path_factory):
     del meta["lineage_version"]  # simulate a pre-versioning checkpoint
     ck._write_meta(spark, meta)
     fresh = CheckpointedExtraction(root=os.path.join(base, "c"), n_buckets=4)
+    with pytest.raises(ValueError, match="lineage"):
+        fresh._check_meta(spark)
+    del meta["polish"]  # simulate a pre-polish checkpoint
+    ck._write_meta(spark, meta)
     with pytest.raises(ValueError, match="lineage"):
         fresh._check_meta(spark)
 

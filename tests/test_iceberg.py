@@ -39,7 +39,7 @@ def test_transcripts_ddl_parses_with_bucket_transform(spark):
     s = plan.toString()
     assert "CreateTable" in s
     # partition spec must stay bucket(64, conv_id) — the same layout
-    # plans.checkpoint.with_bucket produces on parquet
+    # plans.pipeline.with_bucket produces on parquet
     assert "bucket" in s and "64" in s and "conv_id" in s
     assert "iceberg" in s.lower()
 

@@ -13,8 +13,6 @@ from autoscan_spark.operators.multimodal import (
     encode_ppm,
     encode_wav_pcm16,
     extract_features,
-    resize_images,
-    sample_frames,
     synthesize_media,
 )
 
@@ -115,33 +113,6 @@ def test_extract_features_real_decode(spark, media):
     assert got == pytest.approx(want)
 
 
-def test_resize_images_real_pixels(spark, media):
-    out = {r["media_id"]: r for r in resize_images(media, out_w=8, out_h=8).collect()}
-    n_images = media.filter("kind = 'image'").count()
-    assert len(out) == n_images
-    img = media.filter("kind = 'image'").first()
-    resized = decode_image(bytes(out[img["media_id"]]["payload_out"]))
-    assert resized.shape == (8, 8, 3)
-    # nearest-neighbor of the real source pixels
-    src = decode_image(bytes(img["payload"]))
-    h, w = src.shape[:2]
-    ys = (np.arange(8) * h // 8)[:, None]
-    xs = (np.arange(8) * w // 8)[None, :]
-    assert np.array_equal(resized, src[ys, xs])
-
-
-def test_sample_frames_fanout(spark, media):
-    frames = sample_frames(media, every_ms=1000)
-    rows = frames.collect()
-    n_videos = media.filter("kind = 'video'").count()
-    assert len(rows) >= n_videos  # ≥1 frame per video
-    per = {}
-    for r in rows:
-        per.setdefault(r["media_id"], []).append(r["frame_idx"])
-    for idxs in per.values():
-        assert sorted(idxs) == list(range(len(idxs)))  # contiguous frame idx
-
-
 # ---------------- AVI container (real parse, real frames) ----------------
 
 
@@ -186,25 +157,6 @@ def test_avi_deeply_nested_lists_no_recursion_error():
     meta, frames = parse_avi(payload)
     assert frames == [b"data"]
     assert meta == {}
-
-
-def test_sample_frames_are_real_avi_frames(spark, media):
-    """Synthetic video rows are PPM-in-AVI: sampled frames must be the
-    container's own decodable frames, not hashes."""
-    from autoscan_spark.operators.multimodal import parse_avi
-
-    vid = media.filter("kind = 'video'").first()
-    meta, all_frames = parse_avi(bytes(vid["payload"]))
-    assert meta["codec"] == "PPM " and meta["fps"] == 4
-    out = {
-        r["frame_idx"]: bytes(r["frame"])
-        for r in sample_frames(media, every_ms=1000).collect()
-        if r["media_id"] == vid["media_id"]
-    }
-    # every_ms=1000 at 4 fps → every 4th container frame, byte-exact
-    assert out == {i: all_frames[fi] for i, fi in enumerate(range(0, len(all_frames), 4))}
-    arr = decode_image(out[0])
-    assert arr.shape == (meta["height"], meta["width"], 3)
 
 
 def test_video_features_use_real_frame_pixels(spark, media):
